@@ -1,9 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.nio.charset.StandardCharsets
 
-/** Dev utility: dump formatted physical plans of many queries to files.
+/** Dev utility: dump formatted physical plans of queries to files,
+  * planned in Bench's session (`Bench.session`), so the dump is the
+  * plan Bench times.
   * Usage: runMain graft.ExplainDump <outDir> <suffix> <name> [<name>...]
   * (set SPARK_GRAFT_SF_DIR to override the sf0.001 default data dir).
   * Writes <outDir>/<name>_<suffix>.txt for each query; exits nonzero
@@ -11,13 +12,7 @@ import java.nio.charset.StandardCharsets
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Bench.session()
     val outDir = Paths.get(args(0))
     Files.createDirectories(outDir)
     val suffix = args(1)

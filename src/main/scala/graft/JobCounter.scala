@@ -7,8 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkLi
   * a MANY-STAGE query — serial job chains (checkpoints, measured-count
   * actions) and deep exchange trees, not scan or compute. Counting
   * executed jobs and stages per query makes that diagnosis mechanical:
-  * `Bench` publishes the counts in bench_detail.json and `QTime` prints
-  * them, so "fuse the worst multi-action offenders" starts from data.
+  * `Bench` publishes the counts in bench_detail.json, so "fuse the
+  * worst multi-action offenders" starts from data. (For exact per-span
+  * counts of a few queries, run the perfbench harness with
+  * `--trace 1`.)
   *
   * Counters are JVM-global totals; callers snapshot around a query
   * (single-threaded bench loops — the suite never overlaps queries). */

@@ -1,6 +1,14 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
+/** One operator module's share of the driver contract: its queries,
+  * their DuckDB oracle twins, and optional value-sanity hooks. */
+trait QueryModule {
+  def queries: Map[String, (SparkSession, String) => DataFrame]
+  def oracles: Map[String, String]
+  def sanities: Map[String, Seq[Sanity.Hook]] = Map.empty
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * `queries` / `oracleSql` are assembled from the per-domain operator
@@ -15,94 +23,53 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     operators.Relational.q03SegmentRevenue(spark, "/root/testdata/sf0.001")
 
+  /** The one registry list: every operator module, by name. */
+  lazy val modules: Seq[(String, QueryModule)] = Seq(
+    "Relational" -> operators.Relational,
+    "Scalars" -> operators.Scalars,
+    "Windows" -> operators.Windows,
+    "TextAnalysis" -> operators.TextAnalysis,
+    "Dedup" -> operators.Dedup,
+    "Similarity" -> operators.Similarity,
+    "Parity" -> operators.Parity,
+    "Multimodal" -> operators.Multimodal,
+    "Stats" -> operators.Stats,
+    "RangeJoin" -> operators.RangeJoin,
+    "Reshape" -> operators.Reshape,
+    "Corpus" -> operators.Corpus,
+    "Curation" -> operators.Curation,
+    "Graph" -> operators.Graph,
+    "Prep" -> operators.Prep,
+    "Retrieval" -> operators.Retrieval,
+    "Quality" -> operators.Quality,
+    "Behavior" -> operators.Behavior,
+    "Lexicon" -> operators.Lexicon,
+    "Capacity" -> operators.Capacity,
+    "Privacy" -> operators.Privacy,
+    "Eval" -> operators.Eval,
+    "Annotation" -> operators.Annotation,
+  )
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Relational.queries ++
-      operators.Scalars.queries ++
-      operators.Windows.queries ++
-      operators.TextAnalysis.queries ++
-      operators.Dedup.queries ++
-      operators.Similarity.queries ++
-      operators.Parity.queries ++
-      operators.Multimodal.queries ++
-      operators.Stats.queries ++
-      operators.RangeJoin.queries ++
-      operators.Reshape.queries ++
-      operators.Corpus.queries ++
-      operators.Curation.queries ++
-      operators.Graph.queries ++
-      operators.Prep.queries ++
-      operators.Retrieval.queries ++
-      operators.Quality.queries ++
-      operators.Behavior.queries ++
-      operators.Lexicon.queries ++
-      operators.Capacity.queries ++
-      operators.Privacy.queries ++
-      operators.Eval.queries ++
-      operators.Annotation.queries
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    modules.flatMap(_._2.queries).toMap
 
   /** Operator module → its query names, for the bench's per-module
     * JVM warm-up (one untimed query per module primes that module's
     * codegen/classloading so it isn't charged to whichever of its
     * queries the shuffled timing order reaches first). */
-  def queryModules: Map[String, Seq[String]] = Map(
-    "Relational" -> operators.Relational.queries.keys.toSeq,
-    "Scalars" -> operators.Scalars.queries.keys.toSeq,
-    "Windows" -> operators.Windows.queries.keys.toSeq,
-    "TextAnalysis" -> operators.TextAnalysis.queries.keys.toSeq,
-    "Dedup" -> operators.Dedup.queries.keys.toSeq,
-    "Similarity" -> operators.Similarity.queries.keys.toSeq,
-    "Parity" -> operators.Parity.queries.keys.toSeq,
-    "Multimodal" -> operators.Multimodal.queries.keys.toSeq,
-    "Stats" -> operators.Stats.queries.keys.toSeq,
-    "RangeJoin" -> operators.RangeJoin.queries.keys.toSeq,
-    "Reshape" -> operators.Reshape.queries.keys.toSeq,
-    "Corpus" -> operators.Corpus.queries.keys.toSeq,
-    "Curation" -> operators.Curation.queries.keys.toSeq,
-    "Graph" -> operators.Graph.queries.keys.toSeq,
-    "Prep" -> operators.Prep.queries.keys.toSeq,
-    "Retrieval" -> operators.Retrieval.queries.keys.toSeq,
-    "Quality" -> operators.Quality.queries.keys.toSeq,
-    "Behavior" -> operators.Behavior.queries.keys.toSeq,
-    "Lexicon" -> operators.Lexicon.queries.keys.toSeq,
-    "Capacity" -> operators.Capacity.queries.keys.toSeq,
-    "Privacy" -> operators.Privacy.queries.keys.toSeq,
-    "Eval" -> operators.Eval.queries.keys.toSeq,
-    "Annotation" -> operators.Annotation.queries.keys.toSeq,
-  )
+  lazy val queryModules: Map[String, Seq[String]] =
+    modules.map { case (name, m) => name -> m.queries.keys.toSeq }.toMap
 
   /** Optional per-query value-sanity hooks (VERDICT r11 ask #7): range
     * and magnitude invariants `Verify` asserts on the written parquet —
     * the check the hash compare cannot do (shared-algebra bugs match on
-    * garbage). Wired for the annotation + eval families first. */
-  def sanities: Map[String, Seq[Sanity.Hook]] =
-    SanityHooks.hooks ++ operators.Annotation.sanities ++
-      operators.Eval.sanities
+    * garbage). */
+  lazy val sanities: Map[String, Seq[Sanity.Hook]] =
+    SanityHooks.hooks ++ modules.flatMap(_._2.sanities)
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
-  def oracleSql: Map[String, String] =
-    operators.Relational.oracles ++
-      operators.Scalars.oracles ++
-      operators.Windows.oracles ++
-      operators.TextAnalysis.oracles ++
-      operators.Dedup.oracles ++
-      operators.Similarity.oracles ++
-      operators.Parity.oracles ++
-      operators.Multimodal.oracles ++
-      operators.Stats.oracles ++
-      operators.RangeJoin.oracles ++
-      operators.Reshape.oracles ++
-      operators.Corpus.oracles ++
-      operators.Curation.oracles ++
-      operators.Graph.oracles ++
-      operators.Prep.oracles ++
-      operators.Retrieval.oracles ++
-      operators.Quality.oracles ++
-      operators.Behavior.oracles ++
-      operators.Lexicon.oracles ++
-      operators.Capacity.oracles ++
-      operators.Privacy.oracles ++
-      operators.Eval.oracles ++
-      operators.Annotation.oracles
+  lazy val oracleSql: Map[String, String] =
+    modules.flatMap(_._2.oracles).toMap
 }

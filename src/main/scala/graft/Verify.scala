@@ -1,30 +1,14 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, only @ _*) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true") // events table carries TIMESTAMP(NANOS)
-      // every driver correctness run executes the whole suite under the
-      // plan-time scale guard — a cartesian-class regression fails the
-      // query, not just the CI lock
-      .config(graft.plans.ScaleGuard.EnabledKey, "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // bounded-relation global windows fire a per-task WARN that floods
-    // the log (PlanShapeSpec proves them safe); see Bench for rationale
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.window",
-      org.apache.logging.log4j.Level.ERROR)
+    // Bench's session: the plan verified here is the plan Bench times,
+    // under the same plan-time scale guard — a cartesian-class
+    // regression fails the query, not just the CI lock
+    val spark = Bench.session()
     // executed-plan scale audit (VERDICT r9 ask #3): the plan-time
     // guard above refuses cartesian-class joins, but data-sized
     // broadcast HINTS execute fine at test scale — the listener runs
@@ -57,21 +41,11 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // Jackson escapes every control char — a tab or CR in an oracle
+    // must not break the driver's json.load
+    new com.fasterxml.jackson.databind.ObjectMapper().writeValue(
+      new java.io.File(s"$outDir/oracle_sql.json"),
+      SparkEntry.oracleSql.asJava)
     graft.plans.PlanAudit.flush(spark)
     val violations = audit.violations
     // audit-of-the-audit (VERDICT r10 ask #2): a failure INSIDE a shape

@@ -32,10 +32,10 @@ object Tables {
     * derived from `ts` compare at microsecond-or-coarser granularity. */
   def events(s: SparkSession, d: String): DataFrame = {
     // No hidden session mutation here: the nanos-generation legacy conf
-    // is the session builder's job (Bench/Verify/QTime/Explain and the
-    // test sessions all set it). If a builder-less session meets a
-    // nanos-generation file, surface the one-line fix instead of
-    // Spark's opaque "Illegal Parquet type".
+    // is the session factory's job (`Bench.session`, which Verify,
+    // ExplainDump and the test sessions build through). If a session
+    // built elsewhere meets a nanos-generation file, surface the
+    // one-line fix instead of Spark's opaque "Illegal Parquet type".
     val raw =
       try read(s, d, "events")
       catch {
@@ -43,7 +43,7 @@ object Tables {
           throw new IllegalStateException(
             s"$d/events.parquet carries TIMESTAMP(NANOS); set " +
               "spark.sql.legacy.parquet.nanosAsLong=true in the " +
-              "SparkSession builder (as graft.Bench/Verify do)", e)
+              "SparkSession builder (as graft.Bench.session does)", e)
       }
     raw.schema("ts").dataType match {
       // nanos generation: integer division (ns values exceed 2^53,

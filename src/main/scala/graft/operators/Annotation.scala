@@ -30,7 +30,7 @@ import graft.io.Tables
   * needs a sqrt. Products that could pass int64 at corpus scale are
   * DECIMAL(38,0)-wrapped (HUGEINT twins). Determinism: the conformal
   * split uses `Fns.hash60`, never engine-local `hash()`/`random()`. */
-object Annotation {
+object Annotation extends graft.QueryModule {
 
   /** Shared judgment relation for q478–q480: each (order, rater) cell
     * is one categorical judgment, where the 7-rater pool is
@@ -2128,7 +2128,7 @@ object Annotation {
     * (n_post — the ssum=0 sentinel items are excluded, making the
     * bound exact rather than distributional; ADVICE r13), hardcoded
     * for the graft L = 3 label universe. */
-  val sanities: Map[String, Seq[graft.Sanity.Hook]] = {
+  override val sanities: Map[String, Seq[graft.Sanity.Hook]] = {
     import graft.Sanity._
     Map(
       "q478_fleiss_kappa" -> Seq(nonEmpty, range("pbar_milli", 0, 1000),

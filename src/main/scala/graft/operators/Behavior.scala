@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Tables
-import graft.functions.Fns._
 
 /** Behavioral-analytics operators over the events stream: marketing
   * attribution and Markov transition profiling. (North-star extension —
@@ -24,7 +23,7 @@ import graft.functions.Fns._
   *    (25 cells). The probability readout divides in integer ppm so the
   *    matrix is bit-identical cross-engine.
   */
-object Behavior {
+object Behavior extends graft.QueryModule {
 
   /** Last-touch attribution: each purchase is attributed to the same
     * user's most recent click at-or-before it, iff within 1 hour.

@@ -31,7 +31,7 @@ import graft.io.Tables
   *    bounded left-fold expression tree on both engines (the q184
   *    list_reduce precedent) before one floor.
   */
-object Capacity {
+object Capacity extends graft.QueryModule {
 
   /** LRU cache-sizing curve by Mattson stack distance (q439): each
     * user's stream of content items (`props.k`) is a reference trace;

@@ -34,7 +34,7 @@ import graft.functions.Fns._
   *  - q76 vocabulary: two stacked partial-agg groupBys (lang, term) →
   *    (lang); hapax counting rides the second pass for free.
   */
-object Corpus {
+object Corpus extends graft.QueryModule {
 
   /** Ordered conversion funnel over events: view → click-after-view →
     * purchase-after-click, strictly ordered per user by event time.

@@ -36,7 +36,7 @@ import graft.functions.Fns._
   *    assignment is reproducible across engines, runs, and cluster
   *    sizes (which `rand(seed)` cannot give).
   */
-object Curation {
+object Curation extends graft.QueryModule {
 
   /** Duplicated-passage detection (chunk-level dedup, à la C4/RefinedWeb
     * line dedup but over fixed 8-token windows): split every document

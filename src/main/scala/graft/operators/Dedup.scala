@@ -26,7 +26,7 @@ import graft.functions.Fns._
   *    60 rows per token), then 4×15-bit banded self-join: pigeonhole
   *    guarantees hamming≤3 pairs share ≥1 band, so blocking is lossless.
   */
-object Dedup {
+object Dedup extends graft.QueryModule {
 
   /** Exact/near-exact dedup by normalized 5-token-prefix key: groups
     * sharing a key keep min(doc_id) as canonical; emit dup groups. */
@@ -506,8 +506,6 @@ object Dedup {
       .repartition(nParts, $"doc_id")
       .localCheckpoint()
     var converged = false
-    var rounds = 0
-    val tLoop = System.nanoTime()
     // COUNT-GATED broadcast hints on the label side of every loop join
     // (`gate` above): labels/cand/jmp are the tiny, shrinking side, and
     // hinting them removes the per-round shuffle exchanges (each AQE
@@ -523,7 +521,6 @@ object Dedup {
     // stats, making the per-round cost data-bound, which is then
     // correct.
     while (!converged) {
-      rounds += 1
       val cand = edges.join(gate(labels), edges("src") === labels("doc_id"))
         .groupBy($"dst").agg(min($"lbl").as("cand"))
       // carry the previous label through the checkpoint so convergence
@@ -546,8 +543,6 @@ object Dedup {
       converged = next.filter($"lbl" =!= $"old").isEmpty
       labels = next.select($"doc_id", $"lbl")
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] rounds=$rounds loop_sec=${(System.nanoTime()-tLoop)/1e9}")
     labels.select($"doc_id", $"lbl".as("cluster_id"))
   }
 

@@ -28,7 +28,7 @@ import graft.io.Tables
   * wherever a product can pass int64 at corpus scale. Determinism:
   * resampling weights/signs come from the md5-based `Fns.hash60`
   * primitive, not engine-local `hash()`/`random()`. */
-object Eval {
+object Eval extends graft.QueryModule {
 
   // ---------------------------------------------------------------
   // q465 — Bradley–Terry strength from pairwise preferences
@@ -1224,7 +1224,7 @@ object Eval {
   /** Value-sanity hooks (VERDICT r11 ask #7) — see
     * [[Annotation.sanities]]. q489's 1000× acc_micro slip is exactly
     * the class these catch; only provable invariants are asserted. */
-  val sanities: Map[String, Seq[graft.Sanity.Hook]] = {
+  override val sanities: Map[String, Seq[graft.Sanity.Hook]] = {
     import graft.Sanity._
     Map(
       // strengths are positive; a supplier cannot win more than it plays

@@ -10,7 +10,7 @@ import graft.io.Tables
   * strictly tabular); this is north-star scale machinery for the
   * dedup-graph / citation-graph shapes a corpus pipeline produces.
   */
-object Graph {
+object Graph extends graft.QueryModule {
 
   /** One PageRank power-iteration step over the part→supplier supply
     * graph (distinct (l_partkey, l_suppkey) edges — a real bipartite

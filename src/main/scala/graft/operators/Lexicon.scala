@@ -28,7 +28,7 @@ import graft.functions.Fns._
   *    overlap join touches only the ≤2·topK selected documents, pinned
   *    to broadcast joins.
   */
-object Lexicon {
+object Lexicon extends graft.QueryModule {
 
   /** Byte-pair-encoding merge learning, 3 synchronous rounds (Sennrich
     * et al. 2016 — the tokenizer-training core of every LLM data

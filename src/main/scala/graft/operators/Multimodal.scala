@@ -28,7 +28,7 @@ import graft.io.Tables
   * a shuffle of the payload bytes — all derived columns are computed
   * BEFORE any join/agg so only metadata moves.
   */
-object Multimodal {
+object Multimodal extends graft.QueryModule {
 
   case class MediaIn(doc_id: Long, media: Array[Byte])
   case class MediaMeta(doc_id: Long, byte_len: Long, width: Long,

@@ -20,7 +20,7 @@ import graft.pipelines.{Fixtures, RefPipeline, TeamPipeline}
   * — is recomputed by DuckDB and hash-compared. The ScalaTest golden
   * suites (`PipelineSpec`) carry field-level parity assertions too.
   */
-object Parity {
+object Parity extends graft.QueryModule {
 
   def q60TeamPipeline(s: SparkSession, d: String): DataFrame =
     TeamPipeline.run(

@@ -39,7 +39,7 @@ import graft.functions.Fns._
   *    n·Σq² < 9.2e18 up to n ≈ 3e6 vectors per aggregation scope;
   *    beyond that the moments move to decimal(38,0) (q80's pattern).
   */
-object Prep {
+object Prep extends graft.QueryModule {
 
   /** Context-window chunking: overlapping 32-token windows at stride 24
     * (8-token overlap). One output row per chunk with its token count

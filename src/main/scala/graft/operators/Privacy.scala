@@ -22,7 +22,7 @@ import graft.io.Tables
   * then runs closed-form integer readouts on that bounded relation —
   * never a row-level window, never a fact-sized shuffle past the
   * first groupBy. Ratios are integer bp via cross-multiplication. */
-object Privacy {
+object Privacy extends graft.QueryModule {
 
   /** k-anonymity audit (q447): equivalence classes of the
     * quasi-identifier (mktsegment, nationkey, ⌊acctbal/1000⌋); for

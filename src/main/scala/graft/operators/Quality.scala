@@ -39,7 +39,7 @@ import graft.io.Tables
   *    `repartitionByRange($"z") .sortWithinPartitions($"z")`; here we
   *    audit the tile occupancy that layout would produce.
   */
-object Quality {
+object Quality extends graft.QueryModule {
 
   /** Five-rule constraint audit over orders/lineitem/customer:
     * referential integrity (two FKs), key uniqueness, range rule,

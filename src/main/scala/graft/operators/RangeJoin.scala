@@ -24,7 +24,7 @@ import graft.io.Tables
   * anywhere. `.explain` shows SortMergeJoin/ShuffledHashJoin on `_rj_b`
   * with the range predicate as a post-join Filter.
   */
-object RangeJoin {
+object RangeJoin extends graft.QueryModule {
 
   /** Bucketized range join (inner). `pointTs ∈ [start, end)`; `bucketUs`
     * is the bucket width in microseconds. Output: all columns of

@@ -21,7 +21,7 @@ import graft.functions.Fns._
   *  - All money aggregations are decimal-exact → safe under any
   *    partitioning / AQE re-plan (no float reduce-order dependence).
   */
-object Relational {
+object Relational extends graft.QueryModule {
 
   /** TPC-H Q1-shaped pricing summary: full-scan partial+final hash agg.
     * At 100 TB this is the map-side-combine stress test: group count is

@@ -25,7 +25,7 @@ import graft.functions.Fns._
   *    per-group top-k associative and shuffle-light, vs collect_list +
   *    sort which buffers the whole group.
   */
-object Reshape {
+object Reshape extends graft.QueryModule {
 
   /** Full-outer reconciliation: even-keyed customers vs order counts of
     * custkeys divisible by 3 — left-only, right-only, and matched rows

@@ -33,7 +33,7 @@ import graft.functions.Fns._
   *    verification re-join on the raw span text is the exact-mode
   *    extension and shares the same plan shape.
   */
-object Retrieval {
+object Retrieval extends graft.QueryModule {
 
   // query terms with deliberately spread document frequency:
   // "dup" is the rare planted token (high idf), the others are

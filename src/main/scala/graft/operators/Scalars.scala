@@ -14,7 +14,7 @@ import graft.ops.RefOps
   * whole-stage codegen and impose no shuffle; the groupBys that follow
   * exist only to keep oracle outputs small and deterministic.
   */
-object Scalars {
+object Scalars extends graft.QueryModule {
 
   /** P1/P2 token-blacklist filter (isin-not) + aggregation. */
   def q10TokenBlacklist(s: SparkSession, d: String): DataFrame = {

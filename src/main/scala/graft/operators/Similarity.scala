@@ -37,7 +37,7 @@ import graft.functions.Fns._
   *    equi on bucket id — shuffle fan-in bounded by bucket size, the
   *    standard ANN trade (recall vs candidates).
   */
-object Similarity {
+object Similarity extends graft.QueryModule {
 
   private[operators] def quantized(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
@@ -1995,7 +1995,7 @@ object Similarity {
         when($"pnum" > 0, expr("(pnum * pnum * 10000) div (na * nb)"))
           .otherwise(0L).as("sim"))
       .localCheckpoint()
-    var sel = cand
+    val sel = cand
       .withColumn("rn", row_number().over(byQ.orderBy($"rel".desc, $"cid")))
       .filter($"rn" === 1)
       .select($"qid", lit(1L).as("pos"), $"cid", $"rel", ($"rel" * 7).as("mmr"))

@@ -11,7 +11,7 @@ import graft.functions.Fns._
   * skew-salting idiom with a plain-SQL oracle proving it changes the
   * plan, not the answer.
   */
-object Stats {
+object Stats extends graft.QueryModule {
 
   /** CUBE over the snowflake dims: all four grouping sets in one pass
     * (Catalyst Expand), exercised beyond q27's ROLLUP. */

@@ -19,7 +19,7 @@ import graft.functions.Fns._
   *    denominator ≤ ~1000 are ≥ 1/1000 away from the nearest integer
   *    when not exact, so floor(double) cannot misround.
   */
-object TextAnalysis {
+object TextAnalysis extends graft.QueryModule {
 
   /** Token statistics: whitespace tokens, a BPE-ish regex token count
     * (word runs + single non-word marks — the classic pre-tokenizer

@@ -17,7 +17,7 @@ import graft.ops.RefOps
   * distributes across executors; time-window aggregates are plain
   * hash aggregations on (bucket, key) and inherit partial aggregation.
   */
-object Windows {
+object Windows extends graft.QueryModule {
 
   /** EXACT ntile(nTiles) aggregation WITHOUT a global row sort — the
     * shared engine behind q223's gains deciles and q207's WoE bins.
@@ -344,7 +344,7 @@ object Windows {
     * range exchange dedup through ReusedExchange inside the one plan
     * instead of through a per-pass materialization. */
   private def rangeScan(rows: DataFrame, order: Seq[Column], value: Column,
-      outCol: String, freeze: Boolean = true): (DataFrame, DataFrame) = {
+      outCol: String, freeze: Boolean): (DataFrame, DataFrame) = {
     val s = rows.sparkSession
     import s.implicits._
     val np = s.sessionState.conf.numShufflePartitions
@@ -385,8 +385,6 @@ object Windows {
     * Rank-from-a-distributed-scan is exact at any score cardinality. */
   def withExactNtile(rows: DataFrame, order: Seq[Column], nTiles: Int,
       outCol: String, freeze: Boolean = true): DataFrame = {
-    val s = rows.sparkSession
-    import s.implicits._
     // N rides along as the scan's own __total by-product — no second
     // pass over the relation just to count it
     val ranked = rangeScan(rows, order, lit(1L), "__rank", freeze)._1

@@ -238,9 +238,6 @@ object ScaleGuard {
     }
   }
 
-  def idUpperBound(e: Expression): Boolean =
-    idUpperBoundWith(e, unboundedKey)
-
   /** Boundedness over the LOGICAL plan (pre-exchange decoration).
     * LogicalRDD (checkpoint) and cached InMemoryRelation erase
     * provenance ⇒ NOT bounded. */

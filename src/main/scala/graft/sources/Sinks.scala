@@ -59,10 +59,6 @@ object Sinks {
   def registerPostgresJsonbDialect(): Unit =
     GraftPostgresJsonbDialect.register(postgresJsonbDialect)
 
-  /** Parquet sink for the verify harness. */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
-
   /** JDBC append sink (K1/K2): the reference's `to_sql(if_exists=
     * 'append')`, as DDL-FIRST create + append.
     *

@@ -47,7 +47,7 @@ object EventStreams {
           throw new IllegalStateException(
             s"$eventsDir carries TIMESTAMP(NANOS); set " +
               "spark.sql.legacy.parquet.nanosAsLong=true in the " +
-              "SparkSession builder (as graft.Bench/Verify do)", e)
+              "SparkSession builder (as graft.Bench.session does)", e)
       }
     val tsType = probed("ts").dataType
     val schema = StructType(rawSchema.map(f =>
@@ -518,7 +518,6 @@ object EventStreams {
     * ⌊ln(c_a/c_ab)·10⁶⌋ per observed transition. Bounded by
     * |event_types|². */
   def surprisalModel(s: SparkSession, eventsDir: String): Map[(String, String), Long] = {
-    import s.implicits._
     val seq = s.read.schema(rawSchema).parquet(eventsDir)
       .withColumn("ts", col("ts").cast(TimestampType))
       .select(col("user_id"), col("ts").cast("date").cast("string").as("day"),

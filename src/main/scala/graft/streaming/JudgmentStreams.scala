@@ -164,13 +164,6 @@ object JudgmentStreams {
       }
   }
 
-  /** Default streaming entry: timestamped file source → TTL vote
-    * (delegates to [[voteStreamTtl]]). The unbounded-state entry is
-    * the explicit opt-out, [[voteStreamUnbounded]]. */
-  def voteStream(s: SparkSession, judDir: String,
-      ttl: java.time.Duration, watermarkDelay: String): Dataset[VoteUpdate] =
-    voteStreamTtl(s, judDir, ttl, watermarkDelay)
-
   /** EXPLICIT OPT-OUT entry (see [[voteStatefulUnbounded]]): an
     * un-timestamped judgment stream whose per-item state never
     * expires — bounded-universe campaigns and batch-parity checks

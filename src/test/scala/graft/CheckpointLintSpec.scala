@@ -18,7 +18,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * checkpoint from landing, so this spec freezes the per-file site
   * counts: ANY new (or removed) `.localCheckpoint()` fails the build
   * until the author has applied the rule — A/B the site with
-  * `graft.QTime` or classify it against the PLANS.md taxonomy — and
+  * the perfbench harness (`--queries <name> --mode noop --trace 1`) or
+  * classify it against the PLANS.md taxonomy — and
   * updated the table below in the same commit. The lock is on counts,
   * not line numbers, so refactors inside a file stay free; moving a
   * site across files shows up as two deliberate edits. */
@@ -91,6 +92,7 @@ class CheckpointLintSpec extends AnyFunSuite {
         "there adds a serial job. Keep a checkpoint only for fan-out " +
         "behind a window/limit, cross-action (loop) state, a " +
         "partition-id pin, or a measured keep; A/B new sites with " +
-        "graft.QTime and record the verdict in PLANS.md.")
+        "the perfbench harness (--queries <name> --mode noop " +
+        "--trace 1) and record the verdict in PLANS.md.")
   }
 }

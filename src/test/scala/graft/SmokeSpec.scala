@@ -10,6 +10,20 @@ class SmokeSpec extends SparkSpec {
     assert(missing.isEmpty, s"oracles without queries: $missing")
   }
 
+  test("the module registry names every query and oracle exactly once") {
+    val mods = SparkEntry.modules.map(_._2)
+    // a name reused across two modules would be dropped by the merge
+    assert(mods.map(_.queries.size).sum == SparkEntry.queries.size)
+    assert(mods.map(_.oracles.size).sum == SparkEntry.oracleSql.size)
+    assert(mods.map(_.sanities.size).sum + SanityHooks.hooks.size ==
+      SparkEntry.sanities.size)
+    val owners = SparkEntry.queryModules.toSeq
+      .flatMap { case (m, qs) => qs.map(_ -> m) }.groupBy(_._1)
+    assert(owners.keySet == SparkEntry.queries.keySet)
+    val shared = owners.filter(_._2.size != 1)
+    assert(shared.isEmpty, s"queries in more than one module: $shared")
+  }
+
   test("entry() returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

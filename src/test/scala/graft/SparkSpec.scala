@@ -3,19 +3,15 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One lazy local session per suite (spark_guide.md §ScalaTest). */
+/** One lazy local session per suite (spark_guide.md §ScalaTest), built
+  * through the engine's one factory, `Bench.session`, with `local[4]`.
+  * It differs from the engine session in exactly [[SparkSpec.deltas]]. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // same extension set as the Verify/Bench builders: SQL-registered
-    // graft functions (dot_q etc.) must resolve in tests too (q110)
-    .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-    // events testdata carries TIMESTAMP(NANOS); session-wide by design (documented)
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = Bench.session("4")
+    SparkSpec.deltas.foreach { case (k, v) => s.conf.set(k, v) }
+    s
+  }
 
   /** Every physical node in an executed plan, descending through AQE
     * wrappers and materialized query stages (plain `.collect` on a
@@ -98,4 +94,14 @@ trait SparkSpec extends AnyFunSuite {
       s"$name has ${bad.size} unpartitioned row-level WindowExec(s):\n" +
         bad.map(_.treeString).mkString("\n"))
   }
+}
+
+object SparkSpec {
+  /** The test session's only runtime departures from the engine conf:
+    * 4 shuffle partitions for test speed, and the plan-time scale guard
+    * off, because `ScaleGuardSpec` and the shape-lock specs assume it is
+    * off unless they switch it on. */
+  val deltas: Seq[(String, String)] = Seq(
+    "spark.sql.shuffle.partitions" -> "4",
+    graft.plans.ScaleGuard.EnabledKey -> "false")
 }
