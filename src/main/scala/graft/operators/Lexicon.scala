@@ -22,7 +22,8 @@ import graft.functions.Fns._
   *    round count (q237's driver-loop contract).
   *  - q281 Neyman: per-stratum moments are one partial-agg groupBy;
   *    the allocation window runs over the |strata|-row aggregate
-  *    (bounded — the PlanShapeSpec "window above aggregation" shape).
+  *    (bounded — the "window above aggregation" shape that the window
+  *    rule of `ScaleGuard.rules` accepts).
   *  - q282 ROUGE: candidate pairs come from the shared q42 inverted-
   *    index relation (already thresholded + banded); the clipped
   *    overlap join touches only the ≤2·topK selected documents, pinned

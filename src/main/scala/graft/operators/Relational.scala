@@ -482,12 +482,12 @@ object Relational extends graft.QueryModule {
     * The anti leg is deliberately `IS NOT NULL AND NOT EXISTS`, not
     * `NOT IN`: a NOT IN over a nullable fact-sized subquery forces
     * Spark's null-aware anti join — a data-sized broadcast or a
-    * BroadcastNestedLoopJoin, the cartesian-class shape
-    * `NestedLoopShapeSpec` forbids — while NOT EXISTS plans a plain
-    * hash LeftAnti (VERDICT r8 lock #3 finding). The ORACLE keeps the
-    * original NOT IN, so the query also pins that the rewrite
-    * preserves NOT IN semantics on the null-free key (q191 pins the
-    * with-NULLs side of that equivalence). */
+    * BroadcastNestedLoopJoin, the cartesian-class shape the
+    * cartesian rule of `ScaleGuard.rules` forbids — while NOT EXISTS
+    * plans a plain hash LeftAnti (VERDICT r8 lock #3 finding). The
+    * ORACLE keeps the original NOT IN, so the query also pins that the
+    * rewrite preserves NOT IN semantics on the null-free key (q191
+    * pins the with-NULLs side of that equivalence). */
   def q151Subqueries(s: SparkSession, d: String): DataFrame = {
     Tables.orders(s, d).createOrReplaceTempView("orders_v")
     Tables.customer(s, d).createOrReplaceTempView("customer_v")
@@ -842,12 +842,12 @@ object Relational extends graft.QueryModule {
     * native null-aware anti join: Spark can only execute a nullable
     * NOT IN as single-column NAAJ under a BroadcastHashJoin (a
     * data-sized broadcast of the probe — executor OOM at 100 TB) or a
-    * BroadcastNestedLoopJoin (O(N·M)) — the cartesian-class shape
-    * `NestedLoopShapeSpec` forbids (VERDICT r8 lock #3 finding). The
-    * production rewrite every distributed engine ships instead: ONE
-    * hash LeftAnti join on the null-filtered probe + a 1-row has-null
-    * gate that collapses the with-nulls variant to 0 — three-valued
-    * logic preserved, all joins equi. A naive "NOT IN → anti join"
+    * BroadcastNestedLoopJoin (O(N·M)) — the cartesian-class shape the
+    * cartesian rule of `ScaleGuard.rules` forbids (VERDICT r8 lock #3
+    * finding). The production rewrite every distributed engine ships
+    * instead: ONE hash LeftAnti join on the null-filtered probe + a
+    * 1-row has-null gate that collapses the with-nulls variant to 0 —
+    * three-valued logic preserved, all joins equi. A naive "NOT IN → anti join"
     * rewrite WITHOUT the gate silently returns the wrong, non-empty
     * answer; the pinned 0 vs DuckDB's true NOT IN is the regression
     * trap for exactly that bug. q154 covers the null-safe-equality

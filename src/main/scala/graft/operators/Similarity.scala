@@ -70,7 +70,8 @@ object Similarity extends graft.QueryModule {
     * `orderBy(vec_id).limit(sideCap)` relation under the
     * [[MaxExactPairSide]] `require`, so the N² tier is provably
     * bounded in the plan itself (GlobalLimit — the same boundedness
-    * predicate `NestedLoopShapeSpec` audits mechanically), exactly the
+    * predicate the cartesian rule of `ScaleGuard.rules` audits
+    * mechanically), exactly the
     * q383 `sampleMod`/cap treatment. Non-binding at test SF (≤ 2 000
     * vectors), binding at corpus scale; the deterministic vec_id
     * prefix is mirrorable in any SQL engine (`ORDER BY vec_id LIMIT
@@ -2369,7 +2370,8 @@ object Similarity extends graft.QueryModule {
     * estimator, mirrorable in any SQL engine) under a HARD query cap
     * enforced as `orderBy(qid).limit(queryCap)` in the plan itself, so
     * the broadcast side is provably bounded (GlobalLimit — the same
-    * boundedness predicate `BroadcastShapeSpec` audits mechanically).
+    * boundedness predicate the broadcast-hint rule of
+    * `ScaleGuard.rules` audits mechanically).
     * The candidate side streams once through the broadcast nested
     * loop — O(N·|S|) with |S| ≤ queryCap ≤ [[MaxHubnessQueries]], not
     * O(N²). Everything after the k-NN pass is |points|-bounded.

@@ -185,7 +185,7 @@ object Windows extends graft.QueryModule {
       weight: Column = lit(1L), bins: Int = 0): TileBounds = {
     val s = rows.sparkSession
     import s.implicits._
-    require(pops.nonEmpty && bins >= 0 && (bins == 0 || bins >= 2))
+    require(pops.nonEmpty, "valuesAtRanks: no populations")
     val base = rows.select((v.cast("long").as("__v") +:
       weight.cast("long").as("__w") +:
       pops.zipWithIndex.map { case ((_, f), i) =>
@@ -260,6 +260,10 @@ object Windows extends graft.QueryModule {
       ranksOf: Long => Seq[Long], bins: Int): TileBounds = {
     val s = base.sparkSession
     import s.implicits._
+    // one bin per level never narrows an interval: the walk would spin
+    // to the level cap instead of failing on the argument
+    require(bins == 0 || bins >= 2,
+      s"valuesAtRanks: bins=$bins — must be 0 (adaptive) or >= 2")
     // int64 headroom for the width arithmetic below AND for caller-side
     // cutpoint multipliers up to 16 (ADVICE r14 tightened /4 → /32;
     // domain discipline: every caller's values are cents/counts)

@@ -9,18 +9,19 @@ import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Executed-plan scale audit (VERDICT r9 ask #3): a
-  * [[QueryExecutionListener]] that runs the ScaleGuard shape checks —
-  * data-sized broadcast HINTS and cartesian-class joins with both
-  * sides data-sized — on EVERY plan the session executes, not just the
-  * plan a query function returns.
+  * [[QueryExecutionListener]] that runs the three ScaleGuard shape
+  * rules ([[ScaleGuard.rules]]: unpartitioned windows over data-sized
+  * relations, data-sized broadcast HINTS, and cartesian-class joins
+  * with both sides data-sized) on EVERY plan the session executes,
+  * not just the plan a query function returns.
   *
-  * Why it exists: the three repo audit-locks walk the RETURNED plan,
-  * but iterative query bodies (the CC label loop, BFS, PageRank/HITS)
-  * execute their own internal plans through eager actions —
-  * `localCheckpoint()`, `count()`, `isEmpty` — that the locks
-  * structurally never see; VERDICT r9 finding #1's loop-internal
-  * broadcast hints were invisible to all three. Dataset actions route
-  * through `withAction`, which notifies the session's
+  * Why it exists: the test suite's every-query sweep walks the
+  * RETURNED plan, but iterative query bodies (the CC label loop, BFS,
+  * PageRank/HITS) execute their own internal plans through eager
+  * actions — `localCheckpoint()`, `count()`, `isEmpty` — that the
+  * sweep structurally never sees; VERDICT r9 finding #1's
+  * loop-internal broadcast hints were invisible to it. Dataset actions
+  * route through `withAction`, which notifies the session's
   * `ExecutionListenerManager`, so every such internal plan lands here.
   *
   * The listener ACCUMULATES violations instead of throwing: listener
@@ -91,19 +92,14 @@ class PlanAudit(
 }
 
 object PlanAudit {
-  /** The production shape checks, delegating to ScaleGuard so the
-    * listener can never drift from the plan-time guard and the
-    * returned-plan locks. */
-  val defaultChecks: Seq[(String, QueryExecution => Seq[String])] = Seq(
-    "broadcast-hint" -> { qe =>
-      ScaleGuard.broadcastHintViolations(qe.optimizedPlan).map(h =>
-        s"data-sized BROADCAST hint on:\n${h.treeString}")
-    },
-    "cartesian" -> { qe =>
-      ScaleGuard.cartesianViolations(qe.optimizedPlan).map(j =>
-        s"cartesian-class join, both sides data-sized:\n${j.treeString}")
-    },
-  )
+  /** The production shape checks: [[ScaleGuard.rules]] over each
+    * executed plan's optimized logical plan, so the listener can never
+    * drift from the plan-time guard or the returned-plan sweep. */
+  val defaultChecks: Seq[(String, QueryExecution => Seq[String])] =
+    ScaleGuard.rules.map { case (kind, rule) =>
+      kind -> ((qe: QueryExecution) => rule(qe.optimizedPlan).map(p =>
+        s"$kind rule violated by:\n${p.treeString}"))
+    }
 
   def install(spark: SparkSession): PlanAudit = {
     val l = new PlanAudit

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Invariants for the round-9 engine advisors (q442, q443, q449,
   * q450): planted shapes plus an independent Scala replay of the
   * consistent-hashing ring. */

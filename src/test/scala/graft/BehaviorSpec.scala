@@ -240,8 +240,6 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("q190: growth recomputes from direct window counts; ordered; capped") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = operators.Behavior.q190Trending(spark, d).collect()
     assert(got.nonEmpty && got.length <= 20)
@@ -256,8 +254,6 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("q195: closed window form equals the sequential CUSUM recursion") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = operators.Windows.q195Cusum(spark, d).collect()
     assert(got.nonEmpty)
@@ -342,7 +338,6 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("q182: triples canonical, above minsup, and equal to brute-force counts") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = operators.Behavior.q182AprioriTriples(spark, d).collect()
@@ -525,8 +520,6 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("q215: containment catches an embedded fragment that Jaccard misses") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = operators.Dedup.q215Containment(spark, d).collect()
     got.foreach { r =>
@@ -631,7 +624,6 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("q203: Fisher sits between Laspeyres and Paasche; basket is matched") {
-    import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = operators.Relational.q203PriceIndex(spark, d).collect()
     assert(got.nonEmpty)
@@ -648,7 +640,6 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("q201: entry/exit matrix reconciles with q23 sessions; bounces have entry = exit") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = operators.Behavior.q201EntryExit(spark, d).collect()
@@ -670,7 +661,6 @@ class BehaviorSpec extends SparkSpec {
   }
 
   test("q196: rule scores match brute-force basket counts; lift is symmetric") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = operators.Behavior.q196AssocRules(spark, d).collect()

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Planted-corpus invariants for the capacity-planner family
   * (q439–q441, q444–q446, q451) — each test hand-derives the planner's
   * numbers from a trace small enough to replay on paper. */

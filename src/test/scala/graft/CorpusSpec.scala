@@ -205,7 +205,6 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("q130: BPE pair counts weight char pairs by word frequency") {
-    import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("bpe").toString
     // "aaab" ×2 contributes aa:4 ab:2; "xy" ×1 contributes xy:1
     Seq((1L, "aaab xy aaab", "en", "s", 12L))

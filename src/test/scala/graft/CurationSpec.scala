@@ -268,7 +268,6 @@ class CurationSpec extends SparkSpec {
   }
 
   test("q193: nucleus cut keeps the best-quality prefix to ~80% mass per source") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = operators.Curation.q193NucleusBudget(spark, d).collect()

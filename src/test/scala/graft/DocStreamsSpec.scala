@@ -324,7 +324,6 @@ class DocStreamsSpec extends SparkSpec {
   }
 
   test("foreachBatch gold-table sink is idempotent under duplicate delivery") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val docs = graft.io.Tables.documents(spark, d)

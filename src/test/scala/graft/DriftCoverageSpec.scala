@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Planted invariants for the wave-3 operators: greedy max-cover
   * source selection (q457), int8 calibration (q458), DP sensitivity
   * (q459), and the monthly schema-drift monitor (q460). */

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.sources.Formats
 
 /** Round-trips the same rows through CSV / JSON / ORC with explicit

@@ -127,7 +127,6 @@ class GraphSpec extends SparkSpec {
   }
 
   test("q132: axis-separated labels score sep_permille = 1000") {
-    import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("emb").toString
     // two orthogonal clusters with tiny within-label jitter
     val rows = (0 until 20).map { i =>
@@ -184,7 +183,6 @@ class GraphSpec extends SparkSpec {
   }
 
   test("q157: top-3 partner lists are ranked, bounded, and weight-symmetric") {
-    import org.apache.spark.sql.functions._
     val rows = operators.Graph.q157CoPurchase(spark, "/root/testdata/sf0.001")
       .as[(Long, Long, Long, Long)].collect() // part, rk, partner, n_co
     assert(rows.nonEmpty)

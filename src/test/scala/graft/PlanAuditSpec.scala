@@ -2,19 +2,20 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Executed-plan scale audit (VERDICT r9 ask #3): the three audit-locks
-  * walk only the RETURNED plan, but iterative query bodies execute
+/** Executed-plan scale audit (VERDICT r9 ask #3): `SmokeSpec`'s sweep
+  * walks only the RETURNED plan, but iterative query bodies execute
   * their own internal plans through eager actions (`localCheckpoint`,
-  * `count`, `isEmpty`) that the locks structurally never see — r9's
-  * loop-internal broadcast hints were invisible to all three.
+  * `count`, `isEmpty`) that the sweep structurally never sees — r9's
+  * loop-internal broadcast hints were invisible to it.
   * [[graft.plans.PlanAudit]] closes that horizon: a
-  * QueryExecutionListener runs the ScaleGuard shape checks on EVERY
+  * QueryExecutionListener runs the three ScaleGuard rules on EVERY
   * plan the session executes. Verify and Bench install one per session
   * and fail the run post-sweep; this spec proves (a) the listener
-  * catches a hinted data-sized broadcast executed inside a function
-  * body, and (b) the formerly-weak iterative queries (CC labels, BFS
-  * frontiers, PageRank/HITS rank vectors) now execute END-TO-END with
-  * zero internal violations. */
+  * catches a hinted data-sized broadcast, a cartesian-class join and a
+  * global window executed inside a function body, and (b) the
+  * formerly-weak iterative queries (CC labels, BFS frontiers,
+  * PageRank/HITS rank vectors) now execute END-TO-END with zero
+  * internal violations. */
 class PlanAuditSpec extends SparkSpec {
   private val d = "/root/testdata/sf0.001"
 
@@ -23,7 +24,7 @@ class PlanAuditSpec extends SparkSpec {
     val audit = graft.plans.PlanAudit.install(spark)
     try {
       // exactly the r9 hole: the bad plan is EXECUTED via an eager
-      // internal action and never returned, so the returned-plan locks
+      // internal action and never returned, so the returned-plan sweep
       // cannot see it
       def sneakyLoopBody(): Long = {
         val e = io.Tables.embeddings(spark, d)
@@ -36,7 +37,7 @@ class PlanAuditSpec extends SparkSpec {
       assert(sneakyLoopBody() > 0)
       graft.plans.PlanAudit.flush(spark)
       val v = audit.drain()
-      assert(v.exists(_.contains("BROADCAST")),
+      assert(v.exists(_.contains("broadcast-hint rule")),
         s"listener missed the loop-internal data-sized broadcast hint; saw: $v")
     } finally spark.listenerManager.unregister(audit)
   }
@@ -48,11 +49,40 @@ class PlanAuditSpec extends SparkSpec {
       val e = io.Tables.embeddings(spark, d)
       val theta = e.select($"vec_id".as("a"))
         .join(e.select($"vec_id".as("b")), $"a" < $"b")
-      // executed internally (count), never returned to a lock
+      // executed internally (count), never returned to the sweep
       assert(theta.count() > 0)
       graft.plans.PlanAudit.flush(spark)
-      assert(audit.drain().exists(_.contains("cartesian-class")),
+      assert(audit.drain().exists(_.contains("cartesian rule")),
         "listener missed the internally-executed theta join")
+    } finally spark.listenerManager.unregister(audit)
+  }
+
+  test("red: a global window executed inside a query body is caught") {
+    import org.apache.spark.sql.expressions.Window
+    import spark.implicits._
+    val audit = graft.plans.PlanAudit.install(spark)
+    try {
+      val li = io.Tables.lineitem(spark, d)
+      // executed internally (count), never returned to the sweep; the
+      // aggregate is grouped on a bare RENAME of l_partkey, so its
+      // domain is the fact key's and the window sorts it in one task
+      // (the filter keeps the window column live through the count)
+      def windowedCount(keyed: org.apache.spark.sql.DataFrame): Long =
+        keyed.groupBy($"k").agg(count(lit(1)).as("n"))
+          .withColumn("cum", sum($"n").over(Window.orderBy($"n".desc, $"k")))
+          .filter($"cum" > 0)
+          .count()
+      assert(windowedCount(li.select($"l_partkey".as("k"))) > 0)
+      graft.plans.PlanAudit.flush(spark)
+      val v = audit.drain()
+      assert(v.exists(_.contains("window rule")),
+        s"listener missed the internally-executed global window; saw: $v")
+      // the same window over a DERIVED hash-bucket aggregate is bounded
+      assert(windowedCount(li.select(pmod(hash($"l_partkey"), lit(64)).as("k"))) > 0)
+      graft.plans.PlanAudit.flush(spark)
+      val clean = audit.drain()
+      assert(clean.isEmpty, s"hash-bucket window wrongly flagged:\n${clean.mkString("\n")}")
+      assert(audit.drainErrors().isEmpty)
     } finally spark.listenerManager.unregister(audit)
   }
 

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
 /** Planted mini-schemas for the privacy/compliance family (q447, q448,
   * q452) — class sizes, diversity, and deletion fan-outs small enough
   * to audit on paper. */

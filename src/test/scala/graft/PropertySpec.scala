@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalacheck.{Gen, Arbitrary}
+import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import graft.ops.TokenParse
 

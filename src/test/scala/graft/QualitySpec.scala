@@ -11,8 +11,9 @@ class QualitySpec extends SparkSpec {
 
   test("q223: plan has no unpartitioned row-level WindowExec") {
     val df = operators.Quality.q223GainsCurve(spark, d)
-    df.collect() // settle the AQE final plan before auditing it
-    assertNoRowLevelGlobalWindow(df, "q223")
+    val bad = graft.plans.ScaleGuard.globalWindowViolations(
+      df.queryExecution.optimizedPlan)
+    assert(bad.isEmpty, bad.map(_.treeString).mkString("\n"))
   }
 
   test("q112: five rules, violations bounded by checked, FKs clean on testdata") {

@@ -255,7 +255,6 @@ class RetrievalSpec extends SparkSpec {
   }
 
   test("q165: PQ/ADC ranks 5 per query; ADC is exact on codebook seeds; recall floor holds") {
-    import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val rows = graft.operators.Similarity.q165PqAdc(spark, d)
       .as[(Long, Long, Long, Long, Long)].collect() // qid, rn, cid, adc, exact

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
 /** Targeted tests for the round-6 embedding-curation additions:
@@ -314,7 +313,7 @@ class SimilaritySeedSpec extends SparkSpec {
     assert(sampled._4 == 3L)         // hub occ capped by the 3 sampled queries
     assert(sampled._5 == 30L)        // and it is still the hub
     // the hard cap rides the plan as a global limit on the broadcast
-    // (query) side — the boundedness BroadcastShapeSpec verifies
+    // (query) side — the boundedness the broadcast-hint rule verifies
     val capped = Similarity.hubnessAudit(spark, d, 1, 3)
     val planStr = capped.queryExecution.sparkPlan.toString
     assert(planStr.contains("TakeOrderedAndProject") || planStr.contains("GlobalLimit"))

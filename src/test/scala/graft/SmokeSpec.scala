@@ -1,9 +1,23 @@
 package graft
 
-/** Contract guards: every oracle key has a query, every query runs at
-  * sf0.001 and returns rows (a 0-row result would "pass" the driver's
-  * hash compare vacuously — caught once in review, guarded forever). */
+/** Contract guards: every oracle key has a query, and every query runs
+  * at sf0.001, returns rows (a 0-row result would "pass" the oracle
+  * hash compare vacuously — caught once in review, guarded forever) and
+  * breaks none of the scale rules. The every-query test is the suite's
+  * one sweep over `SparkEntry.queries`: it builds each query once and
+  * runs all three [[graft.plans.ScaleGuard.rules]] over its returned
+  * plan before counting it. Loop-internal plans, which a returned plan
+  * never shows, are audited by `PlanAudit` in Verify and Bench. */
 class SmokeSpec extends SparkSpec {
+
+  /** (rule, query) -> reason. Empty today: every unpartitioned window
+    * sits above a bounded relation (histogram idiom, q93/q223), every
+    * broadcast hint ships a limit-capped, bounded-aggregate, id-prefix
+    * or dim-scan side (q383's hubnessAudit pattern), and every non-equi
+    * join has such a side (q45's exactAllPairsCosine pattern). Add an
+    * entry ONLY with a scaladoc'd boundedness argument; an entry that
+    * stops matching an offender fails the sweep too. */
+  private val scaleWhitelist: Map[(String, String), String] = Map()
 
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
@@ -30,11 +44,31 @@ class SmokeSpec extends SparkSpec {
 
   test("every query returns >0 rows at sf0.001") {
     val d = "/root/testdata/sf0.001"
-    val empty = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
-      case (name, fn) =>
-        val n = fn(spark, d).count()
-        if (n == 0) Some(name) else None
+    val empty = scala.collection.mutable.ArrayBuffer.empty[String]
+    val offenders = scala.collection.mutable.Map.empty[(String, String), Seq[String]]
+    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+      val df =
+        try fn(spark, d)
+        catch {
+          case e: Throwable => fail(s"$name failed to plan at sf0.001: $e", e)
+        }
+      val plan = df.queryExecution.optimizedPlan
+      graft.plans.ScaleGuard.rules.foreach { case (rule, check) =>
+        val bad = check(plan)
+        if (bad.nonEmpty) offenders((rule, name)) = bad.map(_.treeString)
+      }
+      if (df.count() == 0) empty += name
     }
+    val unexpected = offenders.keySet -- scaleWhitelist.keySet
+    val stale = scaleWhitelist.keySet -- offenders.keySet
+    assert(unexpected.isEmpty,
+      s"scale rule violations (rule, query): ${unexpected.toSeq.sorted.mkString(", ")} " +
+        "— bound the offending side (limit cap / bounded-domain aggregate / " +
+        "literal id-prefix sample / dim scan), bucket a cartesian-class join " +
+        "on an equi key, or whitelist with a boundedness argument:\n" +
+        unexpected.toSeq.sorted.flatMap(offenders).mkString("\n"))
+    assert(stale.isEmpty,
+      s"stale whitelist entries (no longer offenders): ${stale.toSeq.sorted.mkString(", ")}")
     assert(empty.isEmpty, s"queries with empty results: $empty")
   }
 
@@ -206,7 +240,6 @@ class SmokeSpec extends SparkSpec {
 
   test("q405: delta promotes an outsider; untouched sub-threshold customer never enters") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val dir = java.nio.file.Files.createTempDirectory("topkivm").toString
     def ts(s: String) = java.sql.Timestamp.valueOf(s + " 00:00:00")
     // base: cust i spent (13-i)*100 dollars -> old top-10 = ids 1..10,
@@ -226,7 +259,6 @@ class SmokeSpec extends SparkSpec {
   }
 
   test("q298: retraction maintenance == full recompute; untouched buckets keep snapshot extremes") {
-    import spark.implicits._
     import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val got = graft.operators.Relational.q298RetractionIvm(spark, d).collect()
@@ -253,7 +285,6 @@ class SmokeSpec extends SparkSpec {
 
   test("q304/q305: deletion debt reconciles; merkle diff localizes erasures") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val debt = graft.operators.Relational.q304DeletionDebt(spark, d).collect()
     val tot = debt.filter(_.getString(0) == "_TOTAL").head

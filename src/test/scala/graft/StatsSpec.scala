@@ -151,7 +151,6 @@ class StatsSpec extends SparkSpec {
 
   test("q162: nested medians are bracketed and customer-weighted") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val rows = Stats.q162MedianOfMedians(spark, d)
       .as[(String, Long, Double, Double, Double, Double)].collect()
@@ -245,7 +244,6 @@ class StatsSpec extends SparkSpec {
   }
 
   test("q200: trimmed/winsorized means match brute force on sorted values") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = Stats.q200TrimmedMean(spark, d).collect()
@@ -528,7 +526,6 @@ class StatsSpec extends SparkSpec {
   }
 
   test("q207: WOE decile counts partition the table; IV contributions have WOE's sign") {
-    import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = Stats.q207WoeIv(spark, d).collect()
     assert(got.map(_.getAs[Long]("decile")).toSeq == (1L to 10L))
@@ -670,7 +667,6 @@ class StatsSpec extends SparkSpec {
   }
 
   test("q234: MI of an independent assignment is tiny; NMI bounded; entropies sane") {
-    import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val r = Stats.q234MutualInfo(spark, d).collect().head
     val n = r.getAs[Long]("n")
@@ -689,8 +685,6 @@ class StatsSpec extends SparkSpec {
   }
 
   test("q244: the three effects sum exactly to the revenue delta") {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val got = Stats.q244MixDecomposition(spark, d).collect()
     assert(got.nonEmpty)
@@ -1491,7 +1485,6 @@ class StatsSpec extends SparkSpec {
 
   test("q342: UCB1 scores match a direct replay; rank consistent") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     val d = "/root/testdata/sf0.001"
     val got = graft.operators.Stats.q342Ucb1(spark, d)
       .as[(String, Long, Long, Long, Long, Long, Long)].collect().sortBy(_._7)

@@ -199,7 +199,6 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream interval join == batch interval join") {
-    import spark.implicits._
     val d = "/root/testdata/sf0.001"
     val batch = EventStreams.purchaseClickJoin(
         graft.io.Tables.events(spark, d), lookbackSec = 6 * 3600)

@@ -103,6 +103,16 @@ class WindowsEngineSpec extends SparkSpec {
     assert(e.getMessage.contains("null"))
   }
 
+  test("valuesAtRanksByKey: bins = 1 fails on the argument, not on convergence (ADVICE r15 #3)") {
+    val df = Seq(("A", 1L), ("A", 2L), ("B", 3L)).toDF("k", "v")
+    Seq(1, -1).foreach { bins =>
+      val e = intercept[IllegalArgumentException] {
+        Windows.valuesAtRanksByKey(df, $"v", $"k", n => Seq(1L), bins = bins)
+      }
+      assert(e.getMessage.contains(s"bins=$bins"), e.getMessage)
+    }
+  }
+
   test("out-of-range rank fails loudly") {
     val df = Seq(1L, 2L).toDF("v")
     val e = intercept[IllegalArgumentException] {
