@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.BooleanType
   * logical plan) and three shape rules built on it ([[rules]]: global
   * windows, broadcast hints, cartesian-class joins). The same rules
   * run in three places — the test suite's every-query sweep
-  * (`SmokeSpec`) over each returned plan, the [[PlanAudit]] listener
+  * (`QuerySweep`) over each returned plan, the [[PlanAudit]] listener
   * over every executed plan, and, for the cartesian rule, the
   * plan-time guard below, so a violating plan fails AT PLANNING TIME
   * in any guarded session, not just under the test suite.

@@ -1,109 +1,19 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** Repo-wide scale audit-lock #2 (VERDICT r7 #2): every registered
-  * query's physical plan is walked, and every `BroadcastExchangeExec`
-  * must broadcast a provably BOUNDED relation — a global limit / top-k
-  * cut, an aggregation over a bounded domain, an explicit literal
-  * id-prefix sample, or a fixed-cardinality dim table — never a
-  * data-sized relation, because a broadcast that scales with the data
-  * is an executor-OOM (and an O(N²) nested loop when it feeds a
-  * non-equi join) at 100 TB. This is the mechanical form of the rule
-  * that would have caught q383's pre-fix all-pairs shape: the hubness
-  * audit broadcast the ENTIRE embeddings relation with its production
-  * mitigation living only in a scaladoc. Same whitelist discipline as
-  * [[PlanShapeSpec]]: entries require a scaladoc'd boundedness
-  * argument, and a stale entry fails the audit too.
-  */
+/** Repo-wide scale audit-lock: every explicit broadcast hint in a
+  * registered query's optimized plan must ship a provably BOUNDED
+  * relation — a global limit / top-k cut, a bounded-domain aggregate,
+  * a literal id-prefix sample or a dim-table scan — never a data-sized
+  * one, which is an executor OOM (and an O(N²) nested loop when it
+  * feeds a non-equi join) at 100 TB. Checked by the broadcast-hint
+  * rule of [[graft.plans.ScaleGuard.rules]] over [[QuerySweep]]'s one
+  * build of each query, with the same whitelist discipline as
+  * [[PlanShapeSpec]]. The rule's red/green cases (q383's pre-fix shape,
+  * the rename loophole, `broadcastIfSmall`) live in `ScaleGuardSpec`. */
 class BroadcastShapeSpec extends SparkSpec {
-  private val d = "/root/testdata/sf0.001"
-
-  /** name -> reason. Empty today: every broadcast in the engine sits
-    * above a limit, a bounded-domain aggregate, a literal id-prefix
-    * filter, or a dim-table scan. */
-  private val whitelist: Map[String, String] = Map()
-
-  test("the rule catches a data-sized broadcast (q383's pre-fix shape)") {
-    import spark.implicits._
-    // a self nested-loop join broadcasting the FULL embeddings scan —
-    // exactly the shape VERDICT r7 flagged; the detector must go red
-    val e = io.Tables.embeddings(spark, d)
-    val bad = e.select($"vec_id".as("cid"))
-      .join(broadcast(e.select($"vec_id".as("qid"))), $"qid" =!= $"cid")
-    assert(badBroadcasts(bad.queryExecution).nonEmpty,
-      "detector failed to flag a broadcast of a raw data scan")
-    // and the fixed shape — sample + plan-enforced cap — is green
-    val good = e.select($"vec_id".as("cid"))
-      .join(broadcast(e.select($"vec_id".as("qid"))
-        .filter(pmod($"qid", lit(4L)) === 0).orderBy($"qid").limit(1000)),
-        $"qid" =!= $"cid")
-    assert(badBroadcasts(good.queryExecution).isEmpty,
-      "detector flagged a limit-capped broadcast")
-  }
-
-  test("lineage: a RENAMED fact key cannot dodge the boundedness predicate (VERDICT r9 #1)") {
-    import spark.implicits._
-    val li = io.Tables.lineitem(spark, d)
-    // the synthetic from the verdict: select(l_partkey as p).groupBy(p)
-    // is an unbounded-domain aggregate — p IS l_partkey
-    val renamed = li.select($"l_partkey".as("p")).groupBy($"p")
-      .agg(count(lit(1)).as("n"))
-    val badRenamed = li.join(broadcast(renamed),
-      li("l_partkey") === renamed("p"))
-    assert(badBroadcasts(badRenamed.queryExecution).nonEmpty,
-      "rename loophole: broadcast of a groupBy over a renamed fact key passed")
-    // q237's FORMER shape: the per-part degree relation (grouped on a
-    // renamed l_partkey) broadcast-hinted into the fact-sized edge list
-    val edges = li.select($"l_partkey".as("p"), $"l_suppkey".as("sp")).distinct()
-    val pdeg = edges.groupBy($"p").agg(count(lit(1)).as("pdeg"))
-    val badDeg = edges.join(broadcast(pdeg), "p")
-    assert(badBroadcasts(badDeg.queryExecution).nonEmpty,
-      "q237's pre-fix shape (broadcast-hinted per-part degree) passed")
-    // while a genuinely DERIVED grouping key (hash bucket) still passes:
-    // its output domain is the expression's 64 buckets, not the key's
-    val bucketed = li.select(pmod(hash($"l_partkey"), lit(64)).as("b"))
-      .groupBy($"b").agg(count(lit(1)).as("n"))
-    val good = li.join(broadcast(bucketed),
-      pmod(hash(li("l_partkey")), lit(64)) === bucketed("b"))
-    assert(badBroadcasts(good.queryExecution).isEmpty,
-      "derived-key (hash-bucket) aggregate wrongly flagged")
-    // and the count-gated loop idiom (ScaleGuard.broadcastIfSmall) is
-    // green exactly because the gate stamps a structural limit proof
-    val labels = li.select($"l_partkey".as("doc_id"), $"l_orderkey".as("lbl"))
-    val gated = li.join(
-      graft.plans.ScaleGuard.broadcastIfSmall(labels, measuredRows = 1000L),
-      li("l_partkey") === labels("doc_id"))
-    assert(badBroadcasts(gated.queryExecution).isEmpty,
-      "count-gated broadcast (limit-stamped) wrongly flagged")
-    // above the gate no hint is emitted at all
-    val ungated = li.join(
-      graft.plans.ScaleGuard.broadcastIfSmall(
-        labels, measuredRows = graft.plans.ScaleGuard.MaxHintRows + 1),
-      li("l_partkey") === labels("doc_id"))
-    assert(badBroadcasts(ungated.queryExecution).isEmpty,
-      "broadcastIfSmall above the gate must not hint")
-  }
-
   test("no query broadcasts a data-sized relation") {
-    val offenders = scala.collection.mutable.Map[String, Int]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df =
-        try fn(spark, d)
-        catch {
-          case e: Throwable =>
-            fail(s"$name failed to plan at sf0.001: ${e.getMessage}")
-        }
-      val bad = badBroadcasts(df.queryExecution)
-      if (bad.nonEmpty) offenders(name) = bad.size
-    }
-    val unexpected = offenders.keySet -- whitelist.keySet
-    val stale = whitelist.keySet -- offenders.keySet
-    assert(unexpected.isEmpty,
-      s"data-sized BroadcastExchange in: ${unexpected.toSeq.sorted.mkString(", ")} " +
-        "— bound the broadcast side (limit cap / bounded agg / id-prefix sample, " +
-        "q383's hubnessAudit pattern) or whitelist with a boundedness argument")
-    assert(stale.isEmpty,
-      s"stale whitelist entries (no longer offenders): ${stale.toSeq.sorted.mkString(", ")}")
+    QuerySweep.assertRuleHolds(spark, "broadcast-hint",
+      "bound the broadcast side (limit cap / bounded agg / id-prefix " +
+        "sample, q383's hubnessAudit pattern)")
   }
 }

@@ -1,83 +1,19 @@
 package graft
 
-import org.apache.spark.sql.functions._
-
-/** Repo-wide scale audit-lock #3 (VERDICT r8 #1): every registered
-  * query's OPTIMIZED LOGICAL plan is walked, and every Join that has
-  * no equi-join key — a theta/range join or a bare cross join, which
-  * can only execute as CartesianProduct / nested loop, O(|L|·|R|)
-  * predicate evaluations — must have at least one provably BOUNDED
-  * side (the same [[SparkSpec.boundedLogical]] predicate the window
-  * and broadcast audits use: a global limit / top-k cut, a bounded-
-  * domain aggregate, a literal id-prefix sample, or a dim-table scan).
-  *
-  * This closes the structural hole the first two locks cannot see:
-  * [[SparkSpec.badBroadcasts]] audits only EXPLICIT broadcast hints
-  * (planner-chosen joins are exempt by design, because AQE re-plans
-  * stats-driven broadcasts), so a planner-chosen
-  * BroadcastNestedLoopJoin / CartesianProduct over two data-sized
-  * relations — q45's pre-fix exact all-pairs cosine — was invisible
-  * to every existing audit. Same whitelist discipline as
-  * [[PlanShapeSpec]] / [[BroadcastShapeSpec]]: entries require a
-  * scaladoc'd boundedness argument, and a stale entry fails too.
-  */
+/** Repo-wide scale audit-lock: every join with no equi-join key in a
+  * registered query's optimized plan — a theta/range or bare cross
+  * join, which can only run as CartesianProduct / nested loop,
+  * O(|L|·|R|) — must have at least one provably BOUNDED side. This
+  * covers planner-chosen nested loops, which the broadcast-hint rule
+  * exempts by design. Checked by the cartesian rule of
+  * [[graft.plans.ScaleGuard.rules]] over [[QuerySweep]]'s one build of
+  * each query, with the same whitelist discipline as [[PlanShapeSpec]].
+  * The rule's red/green cases (q45's pre-fix shape) live in
+  * `ScaleGuardSpec`. */
 class NestedLoopShapeSpec extends SparkSpec {
-  private val d = "/root/testdata/sf0.001"
-
-  /** name -> reason. Empty today: every non-equi join in the engine
-    * has a limit-capped, bounded-agg, id-prefix-sampled, or dim-scan
-    * side. */
-  private val whitelist: Map[String, String] = Map()
-
-  test("the rule catches an unbounded theta self-join (q45's pre-fix shape)") {
-    import spark.implicits._
-    val e = io.Tables.embeddings(spark, d)
-    // both sides raw data scans, condition has no equi conjunct —
-    // exactly the cartesian-class shape VERDICT r8 flagged
-    val bad = e.select($"vec_id".as("id1"))
-      .join(e.select($"vec_id".as("id2")), $"id1" < $"id2")
-    assert(badNestedLoops(bad.queryExecution).nonEmpty,
-      "detector failed to flag an unbounded theta self-join")
-    // a bare cross join of two data-sized relations is just as red
-    val cross = e.select($"vec_id".as("id1"))
-      .crossJoin(e.select($"vec_id".as("id2")))
-    assert(badNestedLoops(cross.queryExecution).nonEmpty,
-      "detector failed to flag an unbounded cross join")
-    // ONE bounded side makes the loop linear in the big side — green
-    // (the q383 capped-query-set shape)
-    val good = e.select($"vec_id".as("id1"))
-      .join(e.select($"vec_id".as("id2")).orderBy($"id2").limit(100),
-        $"id1" < $"id2")
-    assert(badNestedLoops(good.queryExecution).isEmpty,
-      "detector flagged a theta join with a limit-capped side")
-    // an equi key anywhere in the conjunction means a hash join — green
-    // even with both sides unbounded and a residual range predicate
-    val equi = e.select($"vec_id".as("id1"), ($"vec_id" % 7).as("b1"))
-      .join(e.select($"vec_id".as("id2"), ($"vec_id" % 7).as("b2")),
-        $"b1" === $"b2" && $"id1" < $"id2")
-    assert(badNestedLoops(equi.queryExecution).isEmpty,
-      "detector flagged a bucketed (equi + residual) range join")
-  }
-
   test("no query plans an unbounded cartesian-class join") {
-    val offenders = scala.collection.mutable.Map[String, Int]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df =
-        try fn(spark, d)
-        catch {
-          case e: Throwable =>
-            fail(s"$name failed to plan at sf0.001: ${e.getMessage}")
-        }
-      val bad = badNestedLoops(df.queryExecution)
-      if (bad.nonEmpty) offenders(name) = bad.size
-    }
-    val unexpected = offenders.keySet -- whitelist.keySet
-    val stale = whitelist.keySet -- offenders.keySet
-    assert(unexpected.isEmpty,
-      s"unbounded cartesian-class join in: ${unexpected.toSeq.sorted.mkString(", ")} " +
-        "— bound one side (limit cap / bounded agg / id-prefix sample, " +
-        "q45's exactAllPairsCosine pattern) or bucket the join on an equi key")
-    assert(stale.isEmpty,
-      s"stale whitelist entries (no longer offenders): ${stale.toSeq.sorted.mkString(", ")}")
+    QuerySweep.assertRuleHolds(spark, "cartesian",
+      "bound one side (limit cap / bounded agg / id-prefix sample, q45's " +
+        "exactAllPairsCosine pattern) or bucket the join on an equi key")
   }
 }

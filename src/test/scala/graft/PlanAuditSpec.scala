@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Executed-plan scale audit (VERDICT r9 ask #3): `SmokeSpec`'s sweep
+/** Executed-plan scale audit (VERDICT r9 ask #3): the tier-1 sweep
   * walks only the RETURNED plan, but iterative query bodies execute
   * their own internal plans through eager actions (`localCheckpoint`,
   * `count`, `isEmpty`) that the sweep structurally never sees — r9's

@@ -1,69 +1,17 @@
 package graft
 
-/** Repo-wide scale audit-lock (VERDICT r5 #7): every registered query's
-  * physical plan is walked, and every WindowExec with an EMPTY
-  * partitionSpec must sit above an aggregation — i.e. it may window
-  * over a bounded derived relation (value histogram, band histogram,
-  * day spine, decile table), never over a row-level relation, because
-  * an unpartitioned row-level window is a single-partition global sort
-  * at 100 TB. Queries that legitimately violate the mechanical rule
-  * must be whitelisted HERE with a reason; a whitelist entry that
-  * stops being needed fails the audit too, so the inventory cannot go
-  * stale in either direction. The audit uses the pre-AQE sparkPlan
-  * (window placement is static), so nothing is executed.
-  */
+/** Repo-wide scale audit-lock: no registered query's optimized plan
+  * holds a Window with an empty (or constant) partitionSpec over a
+  * relation that [[graft.plans.ScaleGuard.boundedLogical]] does not
+  * prove bounded, because an unpartitioned row-level window is a
+  * single-partition global sort at 100 TB. Checked by the window rule
+  * of [[graft.plans.ScaleGuard.rules]] over [[QuerySweep]]'s one build
+  * of each query; offenders must be whitelisted there with a reason,
+  * and a stale entry fails this lock too. The rule's red/green cases
+  * live in `ScaleGuardSpec`. */
 class PlanShapeSpec extends SparkSpec {
-  private val d = "/root/testdata/sf0.001"
-
-  /** name -> reason. Empty today: every unpartitioned window in the
-    * engine sits above an aggregate. Add entries ONLY with a scaladoc'd
-    * boundedness argument. */
-  private val whitelist: Map[String, String] = Map()
-
-  test("physical lineage: a global window over a renamed-fact-key aggregate is flagged (r10)") {
-    // the window audit walks the PHYSICAL plan, so it depends on
-    // ScaleGuard's physical-side lineage (unboundedKeyP through
-    // ProjectExec/aggregate resultExpressions): an aggregate grouped on
-    // a bare RENAME of l_partkey is fact-key-domain — a global window
-    // over it is a single-partition sort of a data-sized relation
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val li = io.Tables.lineitem(spark, d)
-    val perKey = li.select($"l_partkey".as("p"))
-      .groupBy($"p").agg(count(lit(1)).as("n"))
-    val bad = perKey.withColumn("rk",
-      row_number().over(Window.orderBy($"n".desc, $"p")))
-    assert(badGlobalWindows(bad.queryExecution.sparkPlan).nonEmpty,
-      "rename loophole (physical): global window over a per-partkey " +
-        "aggregate passed the audit")
-    // while the same window over a DERIVED bucket aggregate stays green
-    val perBucket = li.select(pmod(hash($"l_partkey"), lit(64)).as("b"))
-      .groupBy($"b").agg(count(lit(1)).as("n"))
-    val good = perBucket.withColumn("rk",
-      row_number().over(Window.orderBy($"n".desc, $"b")))
-    assert(badGlobalWindows(good.queryExecution.sparkPlan).isEmpty,
-      "derived-bucket aggregate wrongly flagged")
-  }
-
   test("no query windows an unpartitioned row-level relation") {
-    val offenders = scala.collection.mutable.Map[String, Int]()
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df =
-        try fn(spark, d)
-        catch {
-          case e: Throwable =>
-            fail(s"$name failed to plan at sf0.001: ${e.getMessage}")
-        }
-      val bad = badGlobalWindows(df.queryExecution.sparkPlan)
-      if (bad.nonEmpty) offenders(name) = bad.size
-    }
-    val unexpected = offenders.keySet -- whitelist.keySet
-    val stale = whitelist.keySet -- offenders.keySet
-    assert(unexpected.isEmpty,
-      s"unpartitioned row-level WindowExec in: ${unexpected.toSeq.sorted.mkString(", ")} " +
-        "— fix the plan (histogram idiom, q93/q223) or whitelist with a boundedness argument")
-    assert(stale.isEmpty,
-      s"stale whitelist entries (no longer offenders): ${stale.toSeq.sorted.mkString(", ")}")
+    QuerySweep.assertRuleHolds(spark, "window",
+      "fix the plan (histogram idiom, q93/q223)")
   }
 }

@@ -13,8 +13,8 @@ import graft.plans.ScaleGuard
   * and Bench sessions set it — a cartesian-class physical join with
   * BOTH sides data-sized refuses to execute, while the engine's
   * bounded shapes (q45's capped all-pairs, q383's capped-broadcast
-  * hubness scan) run normally. `SmokeSpec`'s sweep holds the same
-  * rules over every registered query. */
+  * hubness scan) run normally. The lock specs hold the same rules
+  * over every registered query through [[QuerySweep]]. */
 class ScaleGuardSpec extends SparkSpec {
   import spark.implicits._
   private val d = "/root/testdata/sf0.001"

@@ -1,23 +1,11 @@
 package graft
 
 /** Contract guards: every oracle key has a query, and every query runs
-  * at sf0.001, returns rows (a 0-row result would "pass" the oracle
-  * hash compare vacuously — caught once in review, guarded forever) and
-  * breaks none of the scale rules. The every-query test is the suite's
-  * one sweep over `SparkEntry.queries`: it builds each query once and
-  * runs all three [[graft.plans.ScaleGuard.rules]] over its returned
-  * plan before counting it. Loop-internal plans, which a returned plan
-  * never shows, are audited by `PlanAudit` in Verify and Bench. */
+  * at sf0.001 and returns rows (a 0-row result would "pass" the oracle
+  * hash compare vacuously — caught once in review, guarded forever).
+  * The every-query test reads [[QuerySweep]], the suite's one sweep
+  * over `SparkEntry.queries`; the shape locks read the same sweep. */
 class SmokeSpec extends SparkSpec {
-
-  /** (rule, query) -> reason. Empty today: every unpartitioned window
-    * sits above a bounded relation (histogram idiom, q93/q223), every
-    * broadcast hint ships a limit-capped, bounded-aggregate, id-prefix
-    * or dim-scan side (q383's hubnessAudit pattern), and every non-equi
-    * join has such a side (q45's exactAllPairsCosine pattern). Add an
-    * entry ONLY with a scaladoc'd boundedness argument; an entry that
-    * stops matching an offender fails the sweep too. */
-  private val scaleWhitelist: Map[(String, String), String] = Map()
 
   test("every oracle key has a matching query") {
     val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
@@ -43,33 +31,13 @@ class SmokeSpec extends SparkSpec {
   }
 
   test("every query returns >0 rows at sf0.001") {
-    val d = "/root/testdata/sf0.001"
-    val empty = scala.collection.mutable.ArrayBuffer.empty[String]
-    val offenders = scala.collection.mutable.Map.empty[(String, String), Seq[String]]
-    SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
-      val df =
-        try fn(spark, d)
-        catch {
-          case e: Throwable => fail(s"$name failed to plan at sf0.001: $e", e)
-        }
-      val plan = df.queryExecution.optimizedPlan
-      graft.plans.ScaleGuard.rules.foreach { case (rule, check) =>
-        val bad = check(plan)
-        if (bad.nonEmpty) offenders((rule, name)) = bad.map(_.treeString)
-      }
-      if (df.count() == 0) empty += name
-    }
-    val unexpected = offenders.keySet -- scaleWhitelist.keySet
-    val stale = scaleWhitelist.keySet -- offenders.keySet
-    assert(unexpected.isEmpty,
-      s"scale rule violations (rule, query): ${unexpected.toSeq.sorted.mkString(", ")} " +
-        "— bound the offending side (limit cap / bounded-domain aggregate / " +
-        "literal id-prefix sample / dim scan), bucket a cartesian-class join " +
-        "on an equi key, or whitelist with a boundedness argument:\n" +
-        unexpected.toSeq.sorted.flatMap(offenders).mkString("\n"))
-    assert(stale.isEmpty,
-      s"stale whitelist entries (no longer offenders): ${stale.toSeq.sorted.mkString(", ")}")
-    assert(empty.isEmpty, s"queries with empty results: $empty")
+    val r = QuerySweep(spark)
+    QuerySweep.assertAllRan(r)
+    assert(r.empty.isEmpty, s"queries with empty results: ${r.empty}")
+    // every whitelist entry names a rule that one of the locks checks
+    val rules = graft.plans.ScaleGuard.rules.map(_._1).toSet
+    assert(QuerySweep.whitelist.keySet.forall(k => rules(k._1)),
+      s"whitelist names an unknown rule: ${QuerySweep.whitelist.keySet}")
   }
 
   test("q158: hinted star plan equals the unhinted formulation; semi-join present") {

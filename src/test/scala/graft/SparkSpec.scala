@@ -35,7 +35,7 @@ object SparkSpec {
     * 4 shuffle partitions for test speed, and the plan-time scale guard
     * off, because `ScaleGuardSpec` assumes it is off unless it switches
     * it on; the shape rules still hold over every query through
-    * `SmokeSpec`'s sweep. */
+    * the [[QuerySweep]] locks. */
   val deltas: Seq[(String, String)] = Seq(
     "spark.sql.shuffle.partitions" -> "4",
     graft.plans.ScaleGuard.EnabledKey -> "false")
