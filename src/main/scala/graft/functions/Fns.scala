@@ -41,6 +41,33 @@ object Fns {
   def tokens(text: Column): Column =
     filter(split(text, "\\s+"), t => t =!= "")
 
+  /** The six-word stoplist of the q31 document-quality model (also
+    * q424's function-word profile). DuckDB twin:
+    * `['the','a','of','and','in','to']`. */
+  val stopWords: Seq[String] = Seq("the", "a", "of", "and", "in", "to")
+
+  /** Number of stoplist hits in a token array. */
+  def stopCount(tk: Column): Column =
+    size(filter(tk, t => t.isin(stopWords.map(lit): _*)))
+
+  /** floor(x·1000 / n) as bigint — the quality model's permille rates
+    * (one double division, identical floor on both engines). */
+  def permille(x: Column, n: Column): Column =
+    floor(x * lit(1000) / n).cast("long")
+
+  /** The q31 document-quality score from a doc's token count, stoplist
+    * hits and distinct-token count:
+    * `least(nTok,100)·10 + (1000 − stop‰) + uniq‰`. */
+  def qualityScore(nTok: Column, nStop: Column, nUniq: Column): Column =
+    least(nTok, lit(100)) * 10 + (lit(1000) - permille(nStop, nTok)) +
+      permille(nUniq, nTok)
+
+  /** The q77 unigram-LM surprisal of one term in micro-nats,
+    * `floor(ln(t / cnt)·10⁶)` for corpus token total `t` and the term's
+    * corpus count `cnt`. */
+  def surprisal(t: Column, cnt: Column): Column =
+    floor(log((t * lit(1.0)) / cnt) * lit(1000000.0)).cast("long")
+
   /** Word 3-gram shingles over a token array (guarded: <3 tokens → []).
     * DuckDB twin: list_transform(generate_series(1, len(tk)-2), i ->
     * tk[i]||' '||tk[i+1]||' '||tk[i+2]). */

@@ -700,8 +700,7 @@ object Corpus extends graft.QueryModule {
     val tot = tc.agg(sum($"cnt").as("t"))
     tf.join(tc, "term")
       .crossJoin(broadcast(tot))
-      .withColumn("s_micro",
-        floor(log(($"t" * lit(1.0)) / $"cnt") * lit(1000000.0)).cast("long"))
+      .withColumn("s_micro", surprisal($"t", $"cnt"))
       .groupBy($"doc_id")
       .agg(sum($"tf").as("n_tokens"),
         sum($"tf" * $"s_micro").as("s_sum"))

@@ -399,19 +399,14 @@ object Curation extends graft.QueryModule {
     * composition hash-matches the oracle's CTE chain. */
   def q90CurationPipeline(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
     val norm = lower(regexp_replace(trim($"text"), "\\s+", " "))
-    val tkRaw = graft.functions.Fns.tokens($"text")
-    val nTok = size(tkRaw)
-    val nStop = size(filter(tkRaw, t => t.isin(stop.map(lit): _*)))
-    val stopPm = floor(nStop * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct(tkRaw)) * lit(1000) / nTok).cast("long")
+    val tkRaw = tokens($"text")
     val h = ($"doc_id" % lit(2147483648L)) * lit(2654435761L) % lit(4294967296L)
     Tables.documents(s, d)
       .select($"doc_id", $"source", $"n_chars",
         md5(concat_ws(" ",
-          slice(graft.functions.Fns.tokens(norm), 1, 5))).as("dup_key"),
-        (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm)
+          slice(tokens(norm), 1, 5))).as("dup_key"),
+        qualityScore(size(tkRaw), stopCount(tkRaw), size(array_distinct(tkRaw)))
           .as("quality_score"))
       .withColumn("dup_rn", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -479,15 +474,10 @@ object Curation extends graft.QueryModule {
     * domain. */
   def q123Skyline(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
-    val tk = graft.functions.Fns.tokens($"text")
-    val nTok = size(tk)
-    val stopPm = floor(size(filter(tk, t => t.isin(stop.map(lit): _*)))
-      * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct(tk)) * lit(1000) / nTok).cast("long")
+    val tk = tokens($"text")
     val docs = Tables.documents(s, d)
       .select($"doc_id", $"n_chars",
-        (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm)
+        qualityScore(size(tk), stopCount(tk), size(array_distinct(tk)))
           .as("quality_score"))
     val hq = docs.groupBy($"n_chars").agg(max($"quality_score").as("mq"))
     val w = Window.orderBy($"n_chars")
@@ -692,16 +682,11 @@ object Curation extends graft.QueryModule {
     * relation, then a per-source partial-agg rollup; nothing global. */
   def q193NucleusBudget(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
     val tk = tokens($"text")
-    val nTok = size(tk)
-    val stopPm = floor(size(filter(tk, t => t.isin(stop.map(lit): _*)))
-      * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct(tk)) * lit(1000) / nTok).cast("long")
     val scored = Tables.documents(s, d)
       .filter(size(tokens($"text")) > 0)
       .select($"doc_id", $"source", $"n_chars".cast("long").as("mass"),
-        (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm).as("q"))
+        qualityScore(size(tk), stopCount(tk), size(array_distinct(tk))).as("q"))
     val ord = Window.partitionBy($"source").orderBy($"q".desc, $"doc_id")
     val cumW = ord.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     scored
@@ -1919,16 +1904,12 @@ object Curation extends graft.QueryModule {
     * bounded source relation; allocations are integer divisions. */
   def q357AnnealSchedule(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
     val tk = tokens($"text")
     val nTok = size(tk)
-    val stopPm = floor(size(filter(tk, t => t.isin(stop.map(lit): _*))) * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct(tk)) * lit(1000) / nTok).cast("long")
     val q = Tables.documents(s, d)
       .filter(size(tokens($"text")) > 0)
       .select($"source", nTok.cast("long").as("l"),
-        (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm)
-          .as("score"))
+        qualityScore(nTok, stopCount(tk), size(array_distinct(tk))).as("score"))
       .groupBy($"source")
       .agg(sum($"l").as("tok"),
         expr("CAST(sum(score) AS BIGINT) div count(1)").as("avg_q"))
@@ -2189,14 +2170,10 @@ object Curation extends graft.QueryModule {
     * construction — a mixture sampler can consume it directly. */
   def q411MixtureRebalance(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
     val tk = tokens($"text")
-    val nTok = size(tk).cast("long")
-    val stopPm = floor(size(filter(tk, t => t.isin(stop.map(lit): _*)))
-      * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct(tk)) * lit(1000) / nTok).cast("long")
     val qs = Tables.documents(s, d).select($"source",
-      (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm).as("q"))
+      qualityScore(size(tk).cast("long"), stopCount(tk), size(array_distinct(tk)))
+        .as("q"))
     val per = qs.groupBy($"source")
       .agg(count(lit(1)).as("n_docs"), sum($"q").as("qsum"))
       .select($"source", $"n_docs",

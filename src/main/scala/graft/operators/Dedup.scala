@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.io.Tables
@@ -54,77 +54,104 @@ object Dedup extends graft.QueryModule {
          array_to_string(list_sort(list(doc_id)), ',') AS members
        FROM k GROUP BY dup_key HAVING count(*) > 1 ORDER BY dup_key"""
 
-  /** MinHash signature + LSH banding: 24 hashes, 8 bands × 3 rows
-    * (catches Jaccard ≳ 0.3 with high probability). Output: candidate
-    * pairs with their signature agreement count.
-    *
-    * One content hash per shingle (28-bit md5 prefix), then the 24
-    * "hash functions" are affine permutations (2i+1)·h + i mod p —
-    * integer-only, so the signature costs 1 md5 + 24 multiplies per
-    * shingle instead of 24 md5s (a 25× hot-path reduction measured at
-    * sf0.1: 382 s → seconds). */
-  /** (doc_id, sig, b, band_key) for every doc × band — the shared
-    * MinHash-LSH front half of q41 (batch self-dedup) and q52
-    * (incremental batch-vs-corpus dedup).
-    *
-    * Native ShingleHashes expression (one compiled pass per doc), then
-    * all 24 signature minima as parallel aggregate columns in a single
-    * codegen'd groupBy — no 24× row fan-out, no interpreted
-    * higher-order lambdas. (Measured at sf0.1: nested-HOF formulation
-    * ~400 s, 24×-explode ~22 s, this shape ~3 s.) */
   /** (doc_id, sig[24]) — the signature half of [[minhashBands]], also
-    * the shared input of q248's band-configuration sweep. */
+    * the shared input of q248's band-configuration sweep and of the
+    * q289/q39 estimator audits. */
   private[graft] def minhashSigs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val nSig = 24
-    val p = 2147483647L
-    val exploded = Tables.documents(s, d)
+    minhashSigsOf(Tables.documents(s, d)
       .select($"doc_id",
         explode(graft.functions.TextExprs.shingle_hashes($"text", 3, 7))
-          .as("h"))
-    val minCols = (0 until nSig).map(i =>
-      min((lit(2L * i + 1) * $"h" + lit(i.toLong)) % p).as(s"m$i"))
-    exploded
-      .groupBy($"doc_id")
-      .agg(minCols.head, minCols.tail: _*)
-      .select($"doc_id", array((0 until nSig).map(i => col(s"m$i")): _*).as("sig"))
+          .as("h")))
   }
 
-  private[graft] def minhashBands(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
+  /** (doc_id, sig[24]) over a (doc_id, h) relation of 28-bit shingle
+    * hashes (one md5 prefix per shingle: the native ShingleHashes pass
+    * in [[minhashSigs]], or q95's derived top bits).
+    *
+    * The 24 "hash functions" are affine permutations (2i+1)·h + i mod p
+    * — integer-only, so the signature costs 1 md5 + 24 multiplies per
+    * shingle instead of 24 md5s (a 25× hot-path reduction measured at
+    * sf0.1: 382 s → seconds) — and all 24 minima are parallel
+    * aggregate columns in a single codegen'd groupBy: no 24× row
+    * fan-out, no interpreted higher-order lambdas. (Measured at sf0.1:
+    * nested-HOF formulation ~400 s, 24×-explode ~22 s, this shape
+    * ~3 s.) */
+  private def minhashSigsOf(hashes: DataFrame): DataFrame = {
+    val nSig = 24
+    val p = 2147483647L
+    val minCols = (0 until nSig).map(i =>
+      min((lit(2L * i + 1) * col("h") + lit(i.toLong)) % p).as(s"m$i"))
+    hashes
+      .groupBy(col("doc_id"))
+      .agg(minCols.head, minCols.tail: _*)
+      .select(col("doc_id"), array((0 until nSig).map(i => col(s"m$i")): _*).as("sig"))
+  }
+
+  /** (doc_id, sig, b, band_key) for every doc × band — the shared
+    * MinHash-LSH front half of q41 (batch self-dedup) and q52
+    * (incremental batch-vs-corpus dedup). */
+  private[graft] def minhashBands(s: SparkSession, d: String): DataFrame =
+    minhashBandsOf(minhashSigs(s, d))
+
+  /** (doc_id, sig, b, band_key) for every doc × band of a signature
+    * relation: 8 bands × 3 rows. */
+  private def minhashBandsOf(sigs: DataFrame): DataFrame = {
     val bandRows = 3
     val nBands = 24 / bandRows
-    minhashSigs(s, d)
-      .select($"doc_id", $"sig",
+    sigs
+      .select(col("doc_id"), col("sig"),
         explode(sequence(lit(0), lit(nBands - 1))).as("b"))
-      .select($"doc_id", $"sig", $"b",
-        md5(concat_ws(",",
-          transform(slice($"sig", $"b" * bandRows + 1, lit(bandRows)),
-            _.cast("string")))).as("band_key"))
+      .select(col("doc_id"), col("sig"), col("b"),
+        bandKey(col("sig"), col("b"), lit(bandRows)).as("band_key"))
   }
 
+  /** LSH band key: md5 of band `b`'s `rows` signature values joined by
+    * commas. DuckDB twin: `md5(array_to_string(list_transform(
+    * sig[b*r+1 : b*r+r], v -> v::VARCHAR), ','))`. */
+  private def bandKey(sig: Column, b: Column, rows: Column): Column =
+    md5(concat_ws(",", transform(slice(sig, b * rows + 1, rows), _.cast("string"))))
+
+  /** Number of positions at which two signature arrays agree. */
+  private def sigAgreement(a: Column, b: Column): Column =
+    size(filter(zip_with(a, b, (x, y) => x === y), e => e))
+
+  /** Bucket → member pairs: group `rows` by `bucket`, collect each
+    * bucket's `member` structs (doc_id first) sorted, and explode every
+    * member pair (m1, m2) with m1.doc_id < m2.doc_id; `keep` columns of
+    * the bucket ride along.
+    *
+    * Bucket-local pair generation instead of a band self-join: the
+    * self-join re-computed the whole signature pipeline on both sides
+    * (no ReusedExchange across a BroadcastExchange boundary); grouping
+    * to buckets and exploding member pairs is one pass, and at scale
+    * it's the standard LSH shape anyway (bounded bucket fan-out,
+    * bucket-size caps slot in naturally). */
+  private def bucketPairs(rows: DataFrame, bucket: Seq[Column], member: Column,
+      keep: Seq[Column] = Nil): DataFrame =
+    rows
+      .groupBy(bucket: _*)
+      .agg(array_sort(collect_list(member)).as("members"))
+      .filter(size(col("members")) > 1)
+      .select(keep ++ Seq(explode(col("members")).as("m1"), col("members")): _*)
+      .select(keep ++ Seq(col("m1"), explode(col("members")).as("m2")): _*)
+      .filter(col("m1.doc_id") < col("m2.doc_id"))
+
+  /** Distinct LSH candidate pairs (doc1 < doc2) of a banded signature
+    * relation, with their signature agreement count — q41's output and
+    * q95's minhash branch. */
+  private def minhashPairs(bands: DataFrame): DataFrame =
+    bucketPairs(bands, Seq(col("b"), col("band_key")), struct(col("doc_id"), col("sig")))
+      .select(col("m1.doc_id").as("doc1"), col("m2.doc_id").as("doc2"),
+        sigAgreement(col("m1.sig"), col("m2.sig")).as("n_sig_equal"))
+      .distinct()
+
+  /** MinHash signature + LSH banding: 24 hashes, 8 bands × 3 rows
+    * (catches Jaccard ≳ 0.3 with high probability). Output: candidate
+    * pairs with their signature agreement count. */
   def q41MinhashLsh(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val bands = minhashBands(s, d)
-    // Bucket-local pair generation instead of a band self-join: the
-    // self-join re-computed the whole signature pipeline on both sides
-    // (no ReusedExchange across a BroadcastExchange boundary); grouping
-    // to buckets and exploding member pairs is one pass, and at scale
-    // it's the standard LSH shape anyway (bounded bucket fan-out,
-    // bucket-size caps slot in naturally).
-    val buckets = bands
-      .groupBy($"b", $"band_key")
-      .agg(array_sort(collect_list(struct($"doc_id", $"sig"))).as("members"))
-      .filter(size($"members") > 1)
-    buckets
-      .select(explode($"members").as("m1"), $"members")
-      .select($"m1", explode($"members").as("m2"))
-      .filter($"m1.doc_id" < $"m2.doc_id")
-      .select($"m1.doc_id".as("doc1"), $"m2.doc_id".as("doc2"),
-        size(filter(zip_with($"m1.sig", $"m2.sig", (x, y) => x === y), b => b))
-          .as("n_sig_equal"))
-      .distinct()
-      .orderBy($"doc1", $"doc2")
+    minhashPairs(minhashBands(s, d)).orderBy($"doc1", $"doc2")
   }
 
   val q41Oracle: String =
@@ -238,6 +265,19 @@ object Dedup extends graft.QueryModule {
     * q42 and q258's threshold-persistence sweep. */
   private[graft] def jaccardPairs(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
+    shingleInter(s, d)
+      .withColumn("jaccard_bp",
+        floor($"inter" * lit(10000) / ($"n1" + $"n2" - $"inter")).cast("long"))
+      .filter($"jaccard_bp" >= 500)
+      .select($"doc1", $"doc2", $"inter", $"n1", $"n2", $"jaccard_bp")
+  }
+
+  /** (doc1, doc2, inter, n1, n2) for every doc pair sharing a distinct
+    * 3-gram shingle: the shared-shingle count and both shingle-set
+    * sizes — q42's pair relation before its ≥500 bp cut, and q227's
+    * full-range input. */
+  private def shingleInter(s: SparkSession, d: String): DataFrame = {
+    import s.implicits._
     // Invert on the 60-bit shingle hash, not the shingle string (the
     // self-join shuffles fixed-width longs instead of ~30-byte strings)
     // and materialize the hashed base behind a repartition barrier:
@@ -250,26 +290,34 @@ object Dedup extends graft.QueryModule {
       .repartition($"doc_id")
     val sizes = hashed.select($"doc_id", size($"shs").as("n_sh"))
     val inv = hashed.select($"doc_id", explode($"shs").as("sh"))
-    // Self-join kept deliberately: the q41/q44 bucket pattern (groupBy
-    // sh + collect_list + pair explode) was measured 20% SLOWER here —
-    // this corpus shares shingles densely, so buckets are large and the
-    // collect_list arrays serialize through one task each, while the
-    // hash join streams its probe side through codegen. On a sparse
-    // real-world corpus (mostly singleton shingles) the bucket shape
-    // wins by killing singletons pre-join; both quadratic blowups need
-    // a bucket-size cap at 100 TB either way.
-    val inter = inv.as("a").join(inv.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .agg(count(lit(1)).as("inter"))
-    inter
+    shingleOverlap(inv, count(lit(1)).as("inter"))
       .join(sizes.select($"doc_id".as("doc1"), $"n_sh".as("n1")), "doc1")
       .join(sizes.select($"doc_id".as("doc2"), $"n_sh".as("n2")), "doc2")
-      .withColumn("jaccard_bp",
-        floor($"inter" * lit(10000) / ($"n1" + $"n2" - $"inter")).cast("long"))
-      .filter($"jaccard_bp" >= 500)
-      .select($"doc1", $"doc2", $"inter", $"n1", $"n2", $"jaccard_bp")
   }
+
+  /** The inverted-index self-join over (doc_id, sh) postings `inv`:
+    * rows `a`, `b` sharing a shingle with a.doc_id < b.doc_id, and
+    * `also` as further join conditions.
+    *
+    * Self-join kept deliberately: the q41/q44 bucket pattern (groupBy
+    * sh + collect_list + pair explode) was measured 20% SLOWER here —
+    * this corpus shares shingles densely, so buckets are large and the
+    * collect_list arrays serialize through one task each, while the
+    * hash join streams its probe side through codegen. On a sparse
+    * real-world corpus (mostly singleton shingles) the bucket shape
+    * wins by killing singletons pre-join; both quadratic blowups need
+    * a bucket-size cap at 100 TB either way. */
+  private def sharedShingles(inv: DataFrame, also: Column*): DataFrame =
+    inv.as("a").join(inv.as("b"),
+      (Seq(col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id")) ++ also)
+        .reduce(_ && _))
+
+  /** Shingle pair overlap: [[sharedShingles]] grouped per (doc1, doc2)
+    * pair with the aggregate `overlap` over its shared postings. */
+  private def shingleOverlap(inv: DataFrame, overlap: Column): DataFrame =
+    sharedShingles(inv)
+      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
+      .agg(overlap)
 
   val q42Oracle: String =
     """WITH tk AS (
@@ -348,14 +396,7 @@ object Dedup extends graft.QueryModule {
     val banded = sims.crossJoin(broadcast(chunks))
       .select($"doc_id", $"simhash", $"c",
         expr("(simhash div pc) % 32768").as("chunk_val"))
-    // bucket-local pairs (see q41): one pass over the fingerprints
-    banded
-      .groupBy($"c", $"chunk_val")
-      .agg(array_sort(collect_list(struct($"doc_id", $"simhash"))).as("members"))
-      .filter(size($"members") > 1)
-      .select(explode($"members").as("m1"), $"members")
-      .select($"m1", explode($"members").as("m2"))
-      .filter($"m1.doc_id" < $"m2.doc_id")
+    bucketPairs(banded, Seq($"c", $"chunk_val"), struct($"doc_id", $"simhash"))
       .select($"m1.doc_id".as("doc1"), $"m2.doc_id".as("doc2"),
         bit_count($"m1.simhash".bitwiseXOR($"m2.simhash")).as("hamming"))
       .distinct()
@@ -718,37 +759,11 @@ object Dedup extends graft.QueryModule {
       .repartition($"doc_id")
       .localCheckpoint()
 
-    // minhash branch — q41's math on the derived 28-bit hashes
-    val nSig = 24
-    val bandRows = 3
-    val nBands = nSig / bandRows
-    val p = 2147483647L
+    // minhash branch — q41's pipeline on the derived 28-bit hashes
     val exploded = hashed
       .select($"doc_id", explode($"shs").as("h60"))
       .select($"doc_id", expr("h60 div 4294967296").as("h"))
-    val minCols = (0 until nSig).map(i =>
-      min((lit(2L * i + 1) * $"h" + lit(i.toLong)) % p).as(s"m$i"))
-    val sigs = exploded.groupBy($"doc_id")
-      .agg(minCols.head, minCols.tail: _*)
-      .select($"doc_id", array((0 until nSig).map(i => col(s"m$i")): _*).as("sig"))
-    val bands = sigs
-      .select($"doc_id", $"sig",
-        explode(sequence(lit(0), lit(nBands - 1))).as("b"))
-      .select($"doc_id", $"sig", $"b",
-        md5(concat_ws(",",
-          transform(slice($"sig", $"b" * bandRows + 1, lit(bandRows)),
-            _.cast("string")))).as("band_key"))
-    val mh = bands
-      .groupBy($"b", $"band_key")
-      .agg(array_sort(collect_list(struct($"doc_id", $"sig"))).as("members"))
-      .filter(size($"members") > 1)
-      .select(explode($"members").as("m1"), $"members")
-      .select($"m1", explode($"members").as("m2"))
-      .filter($"m1.doc_id" < $"m2.doc_id")
-      .select($"m1.doc_id".as("doc1"), $"m2.doc_id".as("doc2"),
-        size(filter(zip_with($"m1.sig", $"m2.sig", (x, y) => x === y), b => b))
-          .as("n_sig_equal"))
-      .distinct()
+    val mh = minhashPairs(minhashBandsOf(minhashSigsOf(exploded)))
       .filter($"n_sig_equal" >= 8)
       .select($"doc1", $"doc2", lit(1L).as("bit"))
       .localCheckpoint() // feeds the vote union AND the jc candidate
@@ -934,14 +949,10 @@ object Dedup extends graft.QueryModule {
     * digits), so the window never sees a heavy partition. */
   def q102QualityCanonical(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
-    val tk = graft.functions.Fns.tokens($"text")
-    val nTok = size(tk)
-    val stopPm = floor(size(filter(tk, t => t.isin(stop.map(lit): _*))) * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct(tk)) * lit(1000) / nTok).cast("long")
+    val tk = tokens($"text")
     val quality = Tables.documents(s, d)
       .select($"doc_id",
-        (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm)
+        qualityScore(size(tk), stopCount(tk), size(array_distinct(tk)))
           .as("quality_score"))
     val clusters = minLabelComponents(simhashPairs(s, d).select($"doc1", $"doc2"))
     clusters.join(quality, "doc_id")
@@ -1031,10 +1042,9 @@ object Dedup extends graft.QueryModule {
         expr("transform(slice(ord, 1, size(ord) - ((4*size(ord)+4) div 5) + 1), x -> x.sh)")
           .as("prefix"))
     val pinv = pref.select($"doc_id", $"n", explode($"prefix").as("sh"))
-    val cand = pinv.as("a").join(pinv.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id") &&
-          // J ≥ 0.8 ⟹ sizes within 4:5 of each other (exact integers)
-          col("a.n") * 5 >= col("b.n") * 4 && col("b.n") * 5 >= col("a.n") * 4)
+    // J ≥ 0.8 ⟹ sizes within 4:5 of each other (exact integers)
+    val cand = sharedShingles(pinv,
+        col("a.n") * 5 >= col("b.n") * 4, col("b.n") * 5 >= col("a.n") * 4)
       .select(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
       .distinct()
     cand
@@ -1257,10 +1267,7 @@ object Dedup extends graft.QueryModule {
     // MaxPairDf cap bounds every posting list the pair join explodes
     val wd = weighted.filter($"df" >= 2 && $"df" <= MaxPairDf)
       .select($"doc_id", $"sh", $"w")
-    wd.as("a").join(wd.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .agg(sum(col("a.w")).as("inter_w"))
+    shingleOverlap(wd, sum(col("a.w")).as("inter_w"))
       .join(docW.select($"doc_id".as("doc1"), $"tw".as("w1")), "doc1")
       .join(docW.select($"doc_id".as("doc2"), $"tw".as("w2")), "doc2")
       .withColumn("wj_bp",
@@ -1338,10 +1345,7 @@ object Dedup extends graft.QueryModule {
     val sizes = inv.groupBy($"doc_id").agg(count(lit(1)).as("sz"))
     val dup = inv.groupBy($"sh").agg(count(lit(1)).as("df")).filter($"df" >= 2)
     val wd = inv.join(dup.select($"sh"), "sh")
-    wd.as("a").join(wd.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .agg(count(lit(1)).as("inter"))
+    shingleOverlap(wd, count(lit(1)).as("inter"))
       .join(sizes.select($"doc_id".as("doc1"), $"sz".as("sz1")), "doc1")
       .join(sizes.select($"doc_id".as("doc2"), $"sz".as("sz2")), "doc2")
       .withColumn("cont1_bp", expr("inter * 10000 div sz1"))
@@ -1456,19 +1460,7 @@ object Dedup extends graft.QueryModule {
     * cumulative window runs over those 20 rows. */
   def q227SimHistogram(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val hashed = Tables.documents(s, d)
-      .select($"doc_id",
-        graft.functions.TextExprs.shingle_hashes($"text", 3, 15).as("shs"))
-      .filter(size($"shs") > 0)
-      .repartition($"doc_id")
-    val sizes = hashed.select($"doc_id", size($"shs").as("n_sh"))
-    val inv = hashed.select($"doc_id", explode($"shs").as("sh"))
-    val bands = inv.as("a").join(inv.as("b"),
-        col("a.sh") === col("b.sh") && col("a.doc_id") < col("b.doc_id"))
-      .groupBy(col("a.doc_id").as("doc1"), col("b.doc_id").as("doc2"))
-      .agg(count(lit(1)).as("inter"))
-      .join(sizes.select($"doc_id".as("doc1"), $"n_sh".as("n1")), "doc1")
-      .join(sizes.select($"doc_id".as("doc2"), $"n_sh".as("n2")), "doc2")
+    val bands = shingleInter(s, d)
       .select(least(
         expr("cast(floor(inter * 10000 / (n1 + n2 - inter)) as bigint) div 500"),
         lit(19L)).cast("long").as("band"))
@@ -1626,20 +1618,11 @@ object Dedup extends graft.QueryModule {
       .select($"doc_id", $"sig",
         $"cfg._1".as("bands"), $"cfg._2".as("rows"))
       .withColumn("b", explode(sequence(lit(0), $"bands" - 1)))
-      .withColumn("band_key", md5(concat_ws(",",
-        transform(slice($"sig", $"b" * $"rows" + 1, $"rows"),
-          _.cast("string")))))
-    val buckets = banded
-      .groupBy($"bands", $"rows", $"b", $"band_key")
-      .agg(array_sort(collect_list(struct($"doc_id", $"sig"))).as("members"))
-      .filter(size($"members") > 1)
-    val pairs = buckets
-      .select($"bands", $"rows", explode($"members").as("m1"), $"members")
-      .select($"bands", $"rows", $"m1", explode($"members").as("m2"))
-      .filter($"m1.doc_id" < $"m2.doc_id")
+      .withColumn("band_key", bandKey($"sig", $"b", $"rows"))
+    val pairs = bucketPairs(banded, Seq($"bands", $"rows", $"b", $"band_key"),
+        struct($"doc_id", $"sig"), keep = Seq($"bands", $"rows"))
       .select($"bands", $"rows", $"m1.doc_id".as("d1"), $"m2.doc_id".as("d2"),
-        size(filter(zip_with($"m1.sig", $"m2.sig", (x, y) => x === y), v => v))
-          .as("n_eq"))
+        sigAgreement($"m1.sig", $"m2.sig").as("n_eq"))
       .distinct()
     pairs.groupBy($"bands", $"rows")
       .agg(count(lit(1)).as("n_pairs"),
@@ -1966,9 +1949,7 @@ object Dedup extends graft.QueryModule {
     val base = exact
       .join(sigs.select($"doc_id".as("doc1"), $"sig".as("sig1")), "doc1")
       .join(sigs.select($"doc_id".as("doc2"), $"sig".as("sig2")), "doc2")
-      .withColumn("n_eq",
-        size(filter(zip_with($"sig1", $"sig2", (x, y) => x === y), b => b))
-          .cast("long"))
+      .withColumn("n_eq", sigAgreement($"sig1", $"sig2").cast("long"))
       .select($"doc1", $"doc2", $"jaccard_bp", $"n_eq")
       .withColumn("est_bp", expr("(n_eq * 10000) div 24"))
       .withColumn("err_bp", $"est_bp" - $"jaccard_bp")
@@ -2262,11 +2243,9 @@ object Dedup extends graft.QueryModule {
       .join(sigs.select($"doc_id".as("doc2"), $"sig".as("sig2")), "doc2")
       .select($"jaccard_bp", $"sig1", $"sig2",
         explode(typedLit(Seq(8L, 16L, 24L))).as("k"))
-      .withColumn("n_eq",
-        size(filter(zip_with(
+      .withColumn("n_eq", sigAgreement(
           slice($"sig1", lit(1), $"k".cast("int")),
-          slice($"sig2", lit(1), $"k".cast("int")),
-          (x, y) => x === y), b => b)).cast("long"))
+          slice($"sig2", lit(1), $"k".cast("int"))).cast("long"))
       .withColumn("err_bp", expr("(n_eq * 10000) div k - jaccard_bp"))
       .groupBy($"k")
       .agg(count(lit(1)).as("n_pairs"),

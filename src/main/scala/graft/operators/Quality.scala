@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.io.Tables
+import graft.functions.Fns._
 
 /** Data-engineering QA operators: constraint auditing, key-skew
   * diagnostics, and multi-dimensional (Z-order) layout clustering.
@@ -193,6 +194,35 @@ object Quality extends graft.QueryModule {
        FROM z GROUP BY 1 ORDER BY 1"""
   }
 
+  /** The tf front end of the two-gate quality queries (q139, q176,
+    * q223, q252): ONE tokenization into a checkpointed (doc_id, term,
+    * tf) relation feeds both gates. Returns (doc_id, `score(q)`), where
+    * q is the q31 quality score rebuilt from tf aggregates (n_tokens =
+    * Σtf, distinct terms = row count, stopword hits = Σtf over the
+    * stoplist), and (doc_id, `label`), the 0/1 q77 surprisal gate
+    * Σtf·s / Σtf ≤ 3401500 (a double division, unlike q77's `div`). */
+  private def scoreAndLabel(s: SparkSession, d: String,
+      score: Column => Column, label: String): (DataFrame, DataFrame) = {
+    import s.implicits._
+    val tf = Tables.documents(s, d)
+      .select($"doc_id", explode(tokens($"text")).as("term"))
+      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
+      .localCheckpoint()
+    val scored = tf.groupBy($"doc_id")
+      .agg(sum($"tf").as("n_tok"), count(lit(1)).as("uniq"),
+        sum(when($"term".isin(stopWords.map(lit): _*), $"tf").otherwise(lit(0L)))
+          .as("nstop"))
+      .select($"doc_id", score(qualityScore($"n_tok", $"nstop", $"uniq")))
+    val tc = tf.groupBy($"term").agg(sum($"tf").as("cnt"))
+    val tot = tc.agg(sum($"cnt").as("t"))
+    val labeled = tf.join(tc, "term").crossJoin(broadcast(tot))
+      .withColumn("s_micro", surprisal($"t", $"cnt"))
+      .groupBy($"doc_id")
+      .agg((sum($"tf" * $"s_micro") / sum($"tf") <= lit(3401500))
+        .cast("long").as(label))
+    (scored, labeled)
+  }
+
   /** Inter-rater agreement (Cohen's κ) between two independent quality
     * gates — the calibration check a curation pipeline runs before
     * trusting any single filter: gate A is the q31 heuristic score
@@ -220,28 +250,8 @@ object Quality extends graft.QueryModule {
     * a second time just to rebuild gate A from the raw token array. */
   def q139RaterAgreement(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
-    val tf = Tables.documents(s, d)
-      .select($"doc_id", explode(graft.functions.Fns.tokens($"text")).as("term"))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val gateA = tf.groupBy($"doc_id")
-      .agg(sum($"tf").as("n_tok"), count(lit(1)).as("uniq"),
-        sum(when($"term".isin(stop.map(lit): _*), $"tf").otherwise(lit(0L)))
-          .as("nstop"))
-      .select($"doc_id",
-        (least($"n_tok", lit(100)) * 10
-          + (lit(1000) - floor($"nstop" * lit(1000) / $"n_tok").cast("long"))
-          + floor($"uniq" * lit(1000) / $"n_tok").cast("long") >= 1980)
-          .cast("long").as("a"))
-    val tc = tf.groupBy($"term").agg(sum($"tf").as("cnt"))
-    val tot = tc.agg(sum($"cnt").as("t"))
-    val gateB = tf.join(tc, "term").crossJoin(broadcast(tot))
-      .withColumn("s_micro",
-        floor(log(($"t" * lit(1.0)) / $"cnt") * lit(1000000.0)).cast("long"))
-      .groupBy($"doc_id")
-      .agg((sum($"tf" * $"s_micro") / sum($"tf") <= lit(3401500))
-        .cast("long").as("b"))
+    val (gateA, gateB) =
+      scoreAndLabel(s, d, q => (q >= 1980).cast("long").as("a"), "b")
     gateA.join(gateB, "doc_id")
       .agg(count(lit(1)).as("n"),
         sum($"a" * $"b").as("n11"), sum($"a" * (lit(1) - $"b")).as("n10"),
@@ -369,27 +379,7 @@ object Quality extends graft.QueryModule {
     * ECE rides a broadcast of the 10-row bin relation. */
   def q176Calibration(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
-    val tf = Tables.documents(s, d)
-      .select($"doc_id", explode(graft.functions.Fns.tokens($"text")).as("term"))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val score = tf.groupBy($"doc_id")
-      .agg(sum($"tf").as("n_tok"), count(lit(1)).as("uniq"),
-        sum(when($"term".isin(stop.map(lit): _*), $"tf").otherwise(lit(0L)))
-          .as("nstop"))
-      .select($"doc_id",
-        (least($"n_tok", lit(100)) * 10
-          + (lit(1000) - floor($"nstop" * lit(1000) / $"n_tok").cast("long"))
-          + floor($"uniq" * lit(1000) / $"n_tok").cast("long")).as("score"))
-    val tc = tf.groupBy($"term").agg(sum($"tf").as("cnt"))
-    val tot = tc.agg(sum($"cnt").as("t"))
-    val label = tf.join(tc, "term").crossJoin(broadcast(tot))
-      .withColumn("s_micro",
-        floor(log(($"t" * lit(1.0)) / $"cnt") * lit(1000000.0)).cast("long"))
-      .groupBy($"doc_id")
-      .agg((sum($"tf" * $"s_micro") / sum($"tf") <= lit(3401500))
-        .cast("long").as("y"))
+    val (score, label) = scoreAndLabel(s, d, _.as("score"), "y")
     val bins = score.join(label, "doc_id")
       .groupBy(expr("score div 300").as("bin"))
       .agg(count(lit(1)).as("n_b"), sum($"y").as("n_pos"),
@@ -440,27 +430,7 @@ object Quality extends graft.QueryModule {
     * WindowExec anywhere (asserted in QualitySpec). */
   def q223GainsCurve(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
-    val tf = Tables.documents(s, d)
-      .select($"doc_id", explode(graft.functions.Fns.tokens($"text")).as("term"))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val score = tf.groupBy($"doc_id")
-      .agg(sum($"tf").as("n_tok"), count(lit(1)).as("uniq"),
-        sum(when($"term".isin(stop.map(lit): _*), $"tf").otherwise(lit(0L)))
-          .as("nstop"))
-      .select($"doc_id",
-        (least($"n_tok", lit(100)) * 10
-          + (lit(1000) - floor($"nstop" * lit(1000) / $"n_tok").cast("long"))
-          + floor($"uniq" * lit(1000) / $"n_tok").cast("long")).as("score"))
-    val tc = tf.groupBy($"term").agg(sum($"tf").as("cnt"))
-    val tot = tc.agg(sum($"cnt").as("t"))
-    val label = tf.join(tc, "term").crossJoin(broadcast(tot))
-      .withColumn("s_micro",
-        floor(log(($"t" * lit(1.0)) / $"cnt") * lit(1000000.0)).cast("long"))
-      .groupBy($"doc_id")
-      .agg((sum($"tf" * $"s_micro") / sum($"tf") <= lit(3401500))
-        .cast("long").as("y"))
+    val (score, label) = scoreAndLabel(s, d, _.as("score"), "y")
     // one materialization feeds both exactNtileAgg branches (histogram
     // build + boundary-group ranking) — the local stand-in for the
     // reused shuffle a cluster plan would keep (q149's pattern)
@@ -707,27 +677,7 @@ object Quality extends graft.QueryModule {
     * documents, only score values. */
   def q252Auc(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
-    val tf = Tables.documents(s, d)
-      .select($"doc_id", explode(graft.functions.Fns.tokens($"text")).as("term"))
-      .groupBy($"doc_id", $"term").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
-    val score = tf.groupBy($"doc_id")
-      .agg(sum($"tf").as("n_tok"), count(lit(1)).as("uniq"),
-        sum(when($"term".isin(stop.map(lit): _*), $"tf").otherwise(lit(0L)))
-          .as("nstop"))
-      .select($"doc_id",
-        (least($"n_tok", lit(100)) * 10
-          + (lit(1000) - floor($"nstop" * lit(1000) / $"n_tok").cast("long"))
-          + floor($"uniq" * lit(1000) / $"n_tok").cast("long")).as("score"))
-    val tc = tf.groupBy($"term").agg(sum($"tf").as("cnt"))
-    val tot = tc.agg(sum($"cnt").as("t"))
-    val label = tf.join(tc, "term").crossJoin(broadcast(tot))
-      .withColumn("s_micro",
-        floor(log(($"t" * lit(1.0)) / $"cnt") * lit(1000000.0)).cast("long"))
-      .groupBy($"doc_id")
-      .agg((sum($"tf" * $"s_micro") / sum($"tf") <= lit(3401500))
-        .cast("long").as("y"))
+    val (score, label) = scoreAndLabel(s, d, _.as("score"), "y")
     val byScore = score.join(label, "doc_id")
       .groupBy($"score")
       .agg(count(lit(1)).as("n"), sum($"y").as("npos"))
@@ -2189,16 +2139,12 @@ object Quality extends graft.QueryModule {
     * banded pair relation; one exact-ntile pass + 5-row rollup. */
   def q328QualityDupLift(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
-    val tk = graft.functions.Fns.tokens($"text")
+    val tk = tokens($"text")
     val nTok = size(tk)
-    val stopPm = floor(size(filter(tk, t => t.isin(stop.map(lit): _*))) * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct(tk)) * lit(1000) / nTok).cast("long")
     val q = Tables.documents(s, d)
-      .filter(size(graft.functions.Fns.tokens($"text")) > 0)
+      .filter(size(tokens($"text")) > 0)
       .select($"doc_id",
-        (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm)
-          .as("score"))
+        qualityScore(nTok, stopCount(tk), size(array_distinct(tk))).as("score"))
     val dup = Dedup.jaccardPairs(s, d)
       .select(explode(array($"doc1", $"doc2")).as("doc_id"))
       .distinct().withColumn("is_dup", lit(1L))
@@ -2288,11 +2234,9 @@ object Quality extends graft.QueryModule {
       .select($"doc_id", $"text",
         graft.functions.TextExprs.repetition_stats($"text").as("rs"))
     val nTok = $"rs.n_tokens"
-    val stopPm = floor(size(filter(graft.functions.Fns.tokens($"text"),
-      t => t.isin(Seq("the", "a", "of", "and", "in", "to").map(lit): _*)))
-      * lit(1000) / nTok).cast("long")
-    val uniqPm = floor($"rs.n_distinct" * lit(1000) / nTok).cast("long")
-    val top1Pm = floor($"rs.top_c" * lit(1000) / nTok).cast("long")
+    val stopPm = permille(stopCount(tokens($"text")), nTok)
+    val uniqPm = permille($"rs.n_distinct", nTok)
+    val top1Pm = permille($"rs.top_c", nTok)
     val flags = base.select(
       (nTok < 20).cast("long").as("f1"),
       (top1Pm > 120).cast("long").as("f2"),
@@ -2491,12 +2435,11 @@ object Quality extends graft.QueryModule {
       .select($"doc_id", $"text",
         graft.functions.TextExprs.repetition_stats($"text").as("rs"))
     val nTok = $"rs.n_tokens"
-    val stopPm = floor(size(filter(graft.functions.Fns.tokens($"text"),
-      t => t.isin(Seq("the", "a", "of", "and", "in", "to").map(lit): _*)))
-      * lit(1000) / nTok).cast("long")
-    val uniqPm = floor($"rs.n_distinct" * lit(1000) / nTok).cast("long")
-    val top1Pm = floor($"rs.top_c" * lit(1000) / nTok).cast("long")
-    val q = least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm
+    val nStop = stopCount(tokens($"text"))
+    val stopPm = permille(nStop, nTok)
+    val uniqPm = permille($"rs.n_distinct", nTok)
+    val top1Pm = permille($"rs.top_c", nTok)
+    val q = qualityScore(nTok, nStop, $"rs.n_distinct")
     val cont = base.select(
         ((nTok < 20).cast("long") * 8 + (top1Pm > 120).cast("long") * 4 +
           (stopPm < 20).cast("long") * 2 + (uniqPm < 400).cast("long")).as("cb"),

@@ -526,16 +526,12 @@ object Retrieval extends graft.QueryModule {
     * bounded by the cutoff, not the data. */
   def q421RankBiasedOverlap(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
     val base = Tables.documents(s, d)
       .select($"doc_id", $"n_chars", tokens($"text").as("tk"))
       .repartition($"doc_id")
-    val nTok = size($"tk").cast("long")
-    val stopPm = floor(size(filter($"tk", t => t.isin(stop.map(lit): _*)))
-      * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct($"tk")) * lit(1000) / nTok).cast("long")
     val scored = base.select($"doc_id", $"n_chars",
-      (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm).as("q"))
+      qualityScore(size($"tk").cast("long"), stopCount($"tk"),
+        size(array_distinct($"tk"))).as("q"))
     val topA = scored.orderBy($"q".desc, $"doc_id").limit(10)
       .withColumn("ra", row_number().over(Window.orderBy($"q".desc, $"doc_id")))
     val topB = scored.orderBy($"n_chars".desc, $"doc_id").limit(10)

@@ -51,18 +51,16 @@ object TextAnalysis extends graft.QueryModule {
     * permille arithmetic (the classic pre-training heuristic filter). */
   def q31QualityScore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val stop = Seq("the", "a", "of", "and", "in", "to")
     val tk = tokens($"text")
     val nTok = size(tk)
-    val nStop = size(filter(tk, t => t.isin(stop.map(lit): _*)))
-    val stopPm = floor(nStop * lit(1000) / nTok).cast("long")
-    val uniqPm = floor(size(array_distinct(tk)) * lit(1000) / nTok).cast("long")
+    val nStop = stopCount(tk)
+    val nUniq = size(array_distinct(tk))
     Tables.documents(s, d)
       .select($"doc_id",
         nTok.as("n_tokens"), nStop.as("n_stop"),
-        stopPm.as("stop_permille"), uniqPm.as("uniq_permille"),
-        (least(nTok, lit(100)) * 10 + (lit(1000) - stopPm) + uniqPm)
-          .as("quality_score"))
+        permille(nStop, nTok).as("stop_permille"),
+        permille(nUniq, nTok).as("uniq_permille"),
+        qualityScore(nTok, nStop, nUniq).as("quality_score"))
       .orderBy($"doc_id")
   }
 
@@ -881,18 +879,17 @@ object TextAnalysis extends graft.QueryModule {
     * |sources|·6 ≤ bounded relations. */
   def q424BurrowsDelta(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val words = Seq("the", "a", "of", "and", "in", "to")
     val tk = tokens($"text")
     val perDoc = Tables.documents(s, d).select(
       Seq($"source", size(tk).cast("long").as("nt")) ++
-        words.zipWithIndex.map { case (w, i) =>
+        stopWords.zipWithIndex.map { case (w, i) =>
           size(filter(tk, t => t === w)).cast("long").as(s"c$i")
         }: _*)
     val per = perDoc.groupBy($"source").agg(
       sum($"nt").as("nt"),
-      words.indices.map(i => sum(col(s"c$i")).as(s"c$i")): _*)
+      stopWords.indices.map(i => sum(col(s"c$i")).as(s"c$i")): _*)
     val rates = per.select($"source", explode(array(
-        words.zipWithIndex.map { case (w, i) =>
+        stopWords.zipWithIndex.map { case (w, i) =>
           struct(lit(w).as("w"), expr(s"c$i * 1000000 div nt").as("rate"))
         }: _*)).as("x"))
       .select($"source", $"x.w".as("w"), $"x.rate".as("rate"))

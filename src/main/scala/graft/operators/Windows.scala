@@ -195,7 +195,8 @@ object Windows extends graft.QueryModule {
     // corrupting the narrowing walk — fail loudly instead. Per-pop
     // conditional min/max start each target at its own tight interval.
     val statAggs = Seq(min($"__v").as("lo"), max($"__v").as("hi"),
-      sum(when($"__v".isNull || $"__w".isNull, 1L).otherwise(0L)).as("nulls")) ++
+      sum(when($"__v".isNull || $"__w".isNull, 1L).otherwise(0L)).as("nulls"),
+      sum(when($"__w" < 0L, 1L).otherwise(0L)).as("negs")) ++
       pops.indices.flatMap(i => Seq(
         sum(col(s"__f$i") * $"__w").as(s"n$i"),
         min(when(col(s"__f$i") === 1L, $"__v")).as(s"lo$i"),
@@ -204,11 +205,13 @@ object Windows extends graft.QueryModule {
     require(!st.isNullAt(0), "valuesAtRanks: empty input")
     require(st.getLong(2) == 0L,
       s"valuesAtRanks: ${st.getLong(2)} null value/weight row(s) — must be non-null")
+    require(st.getLong(3) == 0L,
+      s"valuesAtRanks: ${st.getLong(3)} negative weight row(s) — weights must be non-negative")
     val popStats = pops.indices.map { i =>
-      require(!st.isNullAt(3 + 3 * i) && st.getLong(3 + 3 * i) > 0L,
+      require(!st.isNullAt(4 + 3 * i) && st.getLong(4 + 3 * i) > 0L,
         s"valuesAtRanks: population '${pops(i)._1}' is empty")
-      (pops(i)._1, st.getLong(4 + 3 * i), st.getLong(5 + 3 * i),
-        st.getLong(3 + 3 * i))
+      (pops(i)._1, st.getLong(5 + 3 * i), st.getLong(6 + 3 * i),
+        st.getLong(4 + 3 * i))
     }
     narrowToRanks(base, st.getLong(0), st.getLong(1), popStats, ranksOf, bins)
   }
@@ -217,9 +220,10 @@ object Windows extends graft.QueryModule {
     * key (r15): the stats pass is one groupBy(key) — map-side combined
     * to |key-domain| rows per task — so the key domain is DISCOVERED,
     * never assumed, with no separate distinct pass. `key` must be a
-    * bounded-domain column (an enum/dimension attribute); the collect
-    * is |domain|-sized by that contract. Population names in the
-    * result are the keys' string forms. */
+    * bounded-domain column (an enum/dimension attribute) of at most
+    * [[MaxKeyDomain]] values; the collect reads at most one row more
+    * and fails past that bound. Population names in the result are
+    * the keys' string forms. */
   def valuesAtRanksByKey(rows: DataFrame, v: Column, key: Column,
       ranksOf: Long => Seq[Long], weight: Column = lit(1L),
       bins: Int = 0): TileBounds = {
@@ -230,13 +234,20 @@ object Windows extends graft.QueryModule {
     val st = keyed.groupBy($"__k")
       .agg(min($"__v").as("lo"), max($"__v").as("hi"),
         sum($"__w").as("n"),
-        sum(when($"__v".isNull || $"__w".isNull, 1L).otherwise(0L)).as("nulls"))
-      .collect() // |key-domain|-sized by the caller contract
+        sum(when($"__v".isNull || $"__w".isNull, 1L).otherwise(0L)).as("nulls"),
+        sum(when($"__w" < 0L, 1L).otherwise(0L)).as("negs"))
+      .limit(MaxKeyDomain + 1)
+      .collect()
+    require(st.length <= MaxKeyDomain,
+      s"valuesAtRanksByKey: key domain exceeds MaxKeyDomain = $MaxKeyDomain keys")
     require(st.nonEmpty, "valuesAtRanksByKey: empty input")
     require(!st.exists(_.isNullAt(0)), "valuesAtRanksByKey: null key")
     val nullRows = st.map(_.getLong(4)).sum
     require(nullRows == 0L,
       s"valuesAtRanksByKey: $nullRows null value/weight row(s) — must be non-null")
+    val negRows = st.map(_.getLong(5)).sum
+    require(negRows == 0L,
+      s"valuesAtRanksByKey: $negRows negative weight row(s) — weights must be non-negative")
     val popStats = st.map(r =>
       (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1).toSeq
@@ -248,6 +259,28 @@ object Windows extends graft.QueryModule {
     narrowToRanks(base, popStats.map(_._2).min, popStats.map(_._3).max,
       popStats, ranksOf, bins)
   }
+
+  /** Largest key domain [[valuesAtRanksByKey]] collects stats for —
+    * each key becomes one population flag column of the level scans. */
+  val MaxKeyDomain = 256
+
+  /** Histogram cells one narrowing level may collect (adaptive bins). */
+  private val CellBudget = 131072L
+
+  /** Bins per interval for one narrowing level, given the `bins`
+    * argument, `nIvs` live intervals of widest width `maxWidth` and
+    * `nLive` unresolved targets. Cells ≤ nIvs × bins per collect: when
+    * every interval fits the budget at width-sized bins, finish exactly
+    * this level; otherwise balance this level's cells against the
+    * next's (√(width·targets/ivs), the two-level optimum). The budget
+    * test divides instead of multiplying: nIvs × maxWidth overflows
+    * int64 for 17+ intervals near the admitted ±Long.MaxValue/32 range. */
+  private[graft] def levelBins(bins: Int, nIvs: Int, nLive: Int,
+      maxWidth: Long): Long =
+    if (bins > 0) bins.toLong
+    else if (maxWidth <= CellBudget / nIvs) maxWidth
+    else math.min(maxWidth, math.max(1024L, math.min(16384L,
+      math.ceil(math.sqrt(maxWidth.toDouble * nLive / nIvs)).toLong)))
 
   /** Shared narrowing loop: `base` carries __v/__w/__f0..; each
     * population starts at its own (lo, hi) interval with total weight
@@ -281,11 +314,6 @@ object Windows extends graft.QueryModule {
         Tgt(i, t, lo, hi, r, done = lo == hi)
       }
     }
-    // per-level bin budget: cells ≤ live-intervals × binsL per collect;
-    // when every residual interval fits the budget at width-sized bins,
-    // finish exactly this level; otherwise balance this level's cells
-    // against the next's (√(width·targets/ivs), the two-level optimum)
-    val CellBudget = 131072L
     var level = 0
     while (targets.exists(!_.done)) {
       level += 1
@@ -293,11 +321,7 @@ object Windows extends graft.QueryModule {
       val live = targets.filter(!_.done)
       val ivs = live.map(t => (t.pop, t.lo, t.hi)).distinct.zipWithIndex
       val maxWidth = ivs.map { case ((_, l, h), _) => h - l + 1 }.max
-      val binsL =
-        if (bins > 0) bins.toLong
-        else if (ivs.size * maxWidth <= CellBudget) maxWidth
-        else math.min(maxWidth, math.max(1024L, math.min(16384L,
-          math.ceil(math.sqrt(maxWidth.toDouble * live.size / ivs.size)).toLong)))
+      val binsL = levelBins(bins, ivs.size, live.size, maxWidth)
       val cands = ivs.map { case ((p, l, h), id) =>
         val bw = ((h - l + 1) + binsL - 1) / binsL
         expr(s"""CASE WHEN __f$p = 1 AND __v >= $l AND __v <= $h THEN

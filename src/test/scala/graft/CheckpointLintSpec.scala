@@ -44,7 +44,9 @@ class CheckpointLintSpec extends AnyFunSuite {
     "operators/Lexicon.scala" -> 8,
     "operators/Prep.scala" -> 4,
     "operators/Privacy.scala" -> 2,
-    "operators/Quality.scala" -> 13,
+    // q139/q176/q223/q252's four tf checkpoints are one site in the
+    // shared Quality.scoreAndLabel front end
+    "operators/Quality.scala" -> 10,
     "operators/RangeJoin.scala" -> 1,
     "operators/Relational.scala" -> 2,
     "operators/Retrieval.scala" -> 6,

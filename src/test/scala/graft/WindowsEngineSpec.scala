@@ -7,8 +7,9 @@ import graft.operators.Windows
   * ([[Windows.valuesAtRanks]] / [[Windows.valuesAtRanksByKey]] /
   * [[Windows.tileBoundaries]]): the weighted-rank generalization, the
   * per-population start intervals, the adaptive per-level bin sizing,
-  * and the ADVICE-r14 hardening (null guard, snapshot narrowing) —
-  * all against brute-force order statistics on crafted data. */
+  * the ADVICE-r14 hardening (null guard, snapshot narrowing) — all
+  * against brute-force order statistics on crafted data — and the
+  * engine preconditions (bin overflow, negative weights, key bound). */
 class WindowsEngineSpec extends SparkSpec {
   import spark.implicits._
 
@@ -111,6 +112,38 @@ class WindowsEngineSpec extends SparkSpec {
       }
       assert(e.getMessage.contains(s"bins=$bins"), e.getMessage)
     }
+  }
+
+  test("levelBins: 17 intervals near the int64 headroom edge keep the cell budget (ADVICE r15 #1)") {
+    // widest interval the range require admits is ~2·Long.MaxValue/32;
+    // 17 × that overflows a product test into a negative "fits"
+    val w = Long.MaxValue / 16
+    Seq(17, 64).foreach { nIvs =>
+      val b = Windows.levelBins(0, nIvs, nIvs, w)
+      assert(b != w && b >= 1024L && b <= 16384L, s"nIvs=$nIvs bins=$b")
+    }
+    assert(Windows.levelBins(0, 2, 2, 1000L) == 1000L) // fits: width-sized
+    assert(Windows.levelBins(7, 17, 17, w) == 7L)      // explicit bins win
+  }
+
+  test("negative weights fail loudly in both rank engines (ADVICE r15 #2)") {
+    val df = Seq(("A", 1L, 2L), ("A", 2L, -1L), ("B", 3L, 1L)).toDF("k", "v", "w")
+    val e1 = intercept[IllegalArgumentException] {
+      Windows.valuesAtRanks(df, $"v", Seq(("all", lit(1L))), n => Seq(1L), weight = $"w")
+    }
+    assert(e1.getMessage.contains("negative weight"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException] {
+      Windows.valuesAtRanksByKey(df, $"v", $"k", n => Seq(1L), weight = $"w")
+    }
+    assert(e2.getMessage.contains("negative weight"), e2.getMessage)
+  }
+
+  test("valuesAtRanksByKey: one key past MaxKeyDomain fails on the bound (VERDICT r15 #3)") {
+    val df = (0 to Windows.MaxKeyDomain).map(k => (k.toString, k.toLong)).toDF("k", "v")
+    val e = intercept[IllegalArgumentException] {
+      Windows.valuesAtRanksByKey(df, $"v", $"k", n => Seq(1L))
+    }
+    assert(e.getMessage.contains(s"MaxKeyDomain = ${Windows.MaxKeyDomain}"), e.getMessage)
   }
 
   test("out-of-range rank fails loudly") {
