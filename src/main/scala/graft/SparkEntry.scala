@@ -1,20 +1,24 @@
 package graft
 import org.apache.spark.sql.{SparkSession, DataFrame}
 
-/** One operator module's share of the driver contract: its queries,
-  * their DuckDB oracle twins, and optional value-sanity hooks. */
+/** One query of the driver contract: its Spark plan, its DuckDB oracle
+  * twin (IDENTICAL output column names — the driver sorts columns by
+  * name and hash-compares values) and its value-sanity contract. */
+final case class Query(
+    name: String,
+    run: (SparkSession, String) => DataFrame,
+    oracle: String,
+    sanity: Sanity.Contract)
+
+/** One operator module's share of the driver contract. */
 trait QueryModule {
-  def queries: Map[String, (SparkSession, String) => DataFrame]
-  def oracles: Map[String, String]
-  def sanities: Map[String, Seq[Sanity.Hook]] = Map.empty
+  def queries: Seq[Query]
 }
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
-  * `queries` / `oracleSql` are assembled from the per-domain operator
-  * modules; every SQL-expressible operator has an oracle twin with
-  * IDENTICAL output column names (the driver sorts columns by name and
-  * hash-compares values).
+  * Every map below is derived from the per-domain operator modules'
+  * [[Query]] records.
   */
 object SparkEntry {
 
@@ -50,26 +54,29 @@ object SparkEntry {
     "Annotation" -> operators.Annotation,
   )
 
+  private lazy val records: Seq[Query] = modules.flatMap(_._2.queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.flatMap(_._2.queries).toMap
+    records.map(q => q.name -> q.run).toMap
 
   /** Operator module → its query names, for the bench's per-module
     * JVM warm-up (one untimed query per module primes that module's
     * codegen/classloading so it isn't charged to whichever of its
     * queries the shuffled timing order reaches first). */
   lazy val queryModules: Map[String, Seq[String]] =
-    modules.map { case (name, m) => name -> m.queries.keys.toSeq }.toMap
+    modules.map { case (name, m) => name -> m.queries.map(_.name) }.toMap
 
-  /** Optional per-query value-sanity hooks (VERDICT r11 ask #7): range
-    * and magnitude invariants `Verify` asserts on the written parquet —
-    * the check the hash compare cannot do (shared-algebra bugs match on
-    * garbage). */
+  /** Per-query value-sanity hooks (VERDICT r11 ask #7): range and
+    * magnitude invariants `Verify` asserts on the written parquet — the
+    * check the hash compare cannot do (shared-algebra bugs match on
+    * garbage). Queries whose contract is [[Sanity.NoBound]] have no
+    * entry. */
   lazy val sanities: Map[String, Seq[Sanity.Hook]] =
-    SanityHooks.hooks ++ modules.flatMap(_._2.sanities)
+    records.collect { case Query(n, _, _, Sanity.Hooks(hs @ _*)) => n -> hs }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops. */
+    * the same parquet tables. */
   lazy val oracleSql: Map[String, String] =
-    modules.flatMap(_._2.oracles).toMap
+    records.map(q => q.name -> q.oracle).toMap
 }

@@ -68,6 +68,15 @@ object Fns {
   def surprisal(t: Column, cnt: Column): Column =
     floor(log((t * lit(1.0)) / cnt) * lit(1000000.0)).cast("long")
 
+  /** Knuth's multiplicative hash of an integer key, before the
+    * caller's modulus: `(x mod 2³¹) · K` with K the prime near 2³²/φ.
+    * Reducing mod 2³¹ BEFORE the multiply keeps the product below 2⁶³
+    * for any 64-bit key, so ANSI mode never overflows; keys differing
+    * by exactly 2³¹ share a hash. Callers take `% lit(4294967296L)`
+    * (a uniform 32-bit value) or a small modulus. DuckDB twin:
+    * `((x % 2147483648) * K) % m`, K written out. */
+  def knuthHash(x: Column): Column = (x % lit(2147483648L)) * lit(2654435761L)
+
   /** Word 3-gram shingles over a token array (guarded: <3 tokens → []).
     * DuckDB twin: list_transform(generate_series(1, len(tk)-2), i ->
     * tk[i]||' '||tk[i+1]||' '||tk[i+2]). */

@@ -30,21 +30,28 @@ object Tables {
     * the UTC-pinned Verify/Bench sessions) sees identical micros either
     * way. Oracle parity: DuckDB reads the same file natively; outputs
     * derived from `ts` compare at microsecond-or-coarser granularity. */
-  def events(s: SparkSession, d: String): DataFrame = {
-    // No hidden session mutation here: the nanos-generation legacy conf
-    // is the session factory's job (`Bench.session`, which Verify,
-    // ExplainDump and the test sessions build through). If a session
-    // built elsewhere meets a nanos-generation file, surface the
-    // one-line fix instead of Spark's opaque "Illegal Parquet type".
-    val raw =
-      try read(s, d, "events")
-      catch {
-        case e: Exception if String.valueOf(e.getMessage).contains("NANOS") =>
-          throw new IllegalStateException(
-            s"$d/events.parquet carries TIMESTAMP(NANOS); set " +
-              "spark.sql.legacy.parquet.nanosAsLong=true in the " +
-              "SparkSession builder (as graft.Bench.session does)", e)
-      }
+  def events(s: SparkSession, d: String): DataFrame =
+    eventsTs(nanosChecked(s"$d/events.parquet")(read(s, d, "events")))
+
+  /** Runs `read` of the events parquet at `path`. No hidden session
+    * mutation here: the nanos-generation legacy conf is the session
+    * factory's job (`Bench.session`, which Verify, ExplainDump and the
+    * test sessions build through). If a session built elsewhere meets a
+    * nanos-generation file, surface the one-line fix instead of Spark's
+    * opaque "Illegal Parquet type". */
+  private[graft] def nanosChecked[T](path: String)(read: => T): T =
+    try read
+    catch {
+      case e: Exception if String.valueOf(e.getMessage).contains("NANOS") =>
+        throw new IllegalStateException(
+          s"$path carries TIMESTAMP(NANOS); set " +
+            "spark.sql.legacy.parquet.nanosAsLong=true in the " +
+            "SparkSession builder (as graft.Bench.session does)", e)
+    }
+
+  /** Normalizes a raw events relation's `ts` (batch or streaming) to a
+    * session-zone TimestampType column, by the type it was read as. */
+  private[graft] def eventsTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       // nanos generation: integer division (ns values exceed 2^53,
       // double `/` mis-truncates), then micros → timestamp
@@ -55,7 +62,7 @@ object Tables {
       case _ =>
         raw.withColumn("ts", col("ts").cast(org.apache.spark.sql.types.TimestampType))
     }
-  }
+
   def documents(s: SparkSession, d: String): DataFrame = read(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = read(s, d, "embeddings")
 }

@@ -2091,29 +2091,8 @@ object Annotation extends graft.QueryModule {
        FROM agree a JOIN diag d ON d.rater = a.rater
        ORDER BY a.rater"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q478_fleiss_kappa" -> q478FleissKappa,
-    "q479_krippendorff_alpha" -> q479KrippendorffAlpha,
-    "q480_dawid_skene" -> q480DawidSkene,
-    "q481_kendall_tau" -> q481KendallTau,
-    "q482_item_analysis" -> q482ItemAnalysis,
-    "q483_conformal_coverage" -> q483ConformalCoverage,
-    "q484_kr20_reliability" -> q484Kr20,
-    "q485_panel_planner" -> q485PanelPlanner,
-    "q486_test_retest" -> q486TestRetest,
-    "q487_judge_pair_kappa" -> q487JudgePairKappa,
-    "q488_qualification_designer" -> q488QualificationDesigner,
-    "q489_panel_router" -> q489PanelRouter,
-    "q490_rasch_prox" -> q490RaschProx,
-    "q491_rasch_outfit" -> q491RaschOutfit,
-    "q492_relabel_router" -> q492RelabelRouter,
-    "q493_agreement_drift" -> q493AgreementDrift,
-    "q494_ds_soft_confusion" -> q494DawidSkeneSoftConfusion,
-    "q495_ds_soft_flips" -> q495DawidSkeneSoftFlips,
-    "q496_ds_rater_report" -> q496DsRaterReport,
-  )
-
-  /** Value-sanity hooks (VERDICT r11 ask #7): magnitude/range
+  /** The module's queries with their oracle twins and value-sanity
+    * contracts. The hooks (VERDICT r11 ask #7) are magnitude/range
     * invariants the oracle hash-compare is blind to (a shared-algebra
     * bug passes the hash — q489's 1000× slip did). Run by `Verify` on
     * the written parquet.
@@ -2128,30 +2107,60 @@ object Annotation extends graft.QueryModule {
     * (n_post — the ssum=0 sentinel items are excluded, making the
     * bound exact rather than distributional; ADVICE r13), hardcoded
     * for the graft L = 3 label universe. */
-  override val sanities: Map[String, Seq[graft.Sanity.Hook]] = {
-    import graft.Sanity._
-    Map(
-      "q478_fleiss_kappa" -> Seq(nonEmpty, range("pbar_milli", 0, 1000),
-        range("pe_milli", 0, 1000), range("kappa_bp", -10000, 10000)),
-      "q479_krippendorff_alpha" -> Seq(nonEmpty,
-        range("do_ppm", 0, 1000000), range("de_ppm", 0, 1000000),
-        // distributional floor (see scaladoc): α < −3 needs pathological
-        // label imbalance, not reachable on the graft corpus
-        range("alpha_bp", -30000, 10000)),
-      "q480_dawid_skene" -> Seq(nonEmpty,
-        range("acc_mv_milli", 0, 1000), range("acc_em_milli", 0, 1000)),
-      "q482_item_analysis" -> Seq(nonEmpty,
-        range("difficulty_milli", 0, 1000), range("disc_bp", -20000, 10000)),
-      "q483_conformal_coverage" -> Seq(nonEmpty,
-        range("coverage_milli", 0, 1000)),
-      "q493_agreement_drift" -> Seq(nonEmpty,
-        range("kappa_bp", -10000, 10000)),
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q478_fleiss_kappa", q478FleissKappa, q478Oracle,
+        Hooks(nonEmpty, range("pbar_milli", 0, 1000),
+          range("pe_milli", 0, 1000), range("kappa_bp", -10000, 10000))),
+      Query("q479_krippendorff_alpha", q479KrippendorffAlpha, q479Oracle,
+        Hooks(nonEmpty,
+          range("do_ppm", 0, 1000000), range("de_ppm", 0, 1000000),
+          // distributional floor (see scaladoc): α < −3 needs pathological
+          // label imbalance, not reachable on the graft corpus
+          range("alpha_bp", -30000, 10000))),
+      Query("q480_dawid_skene", q480DawidSkene, q480Oracle,
+        Hooks(nonEmpty,
+          range("acc_mv_milli", 0, 1000), range("acc_em_milli", 0, 1000))),
+      Query("q481_kendall_tau", q481KendallTau, q481Oracle,
+        Hooks(nonEmpty, range("tau_b_bp", -10000, 10000))),
+      Query("q482_item_analysis", q482ItemAnalysis, q482Oracle,
+        Hooks(nonEmpty,
+          range("difficulty_milli", 0, 1000), range("disc_bp", -20000, 10000))),
+      Query("q483_conformal_coverage", q483ConformalCoverage, q483Oracle,
+        Hooks(nonEmpty,
+          range("coverage_milli", 0, 1000))),
+      // KR-20 <= 1 definitionally (unbounded below)
+      Query("q484_kr20_reliability", q484Kr20, q484Oracle,
+        Hooks(nonEmpty, atLeast("10000 - kr20_bp", 0))),
+      Query("q485_panel_planner", q485PanelPlanner, q485Oracle,
+        Hooks(nonEmpty, range("p_majority_micro", 0, 1000000), range("lift_micro", -1000000, 1000000))),
+      Query("q486_test_retest", q486TestRetest, q486Oracle,
+        Hooks(nonEmpty, range("self_consistent_milli", 0, 1000))),
+      Query("q487_judge_pair_kappa", q487JudgePairKappa, q487Oracle,
+        Hooks(nonEmpty, range("agree_milli", 0, 1000), range("kappa_bp", -10000, 10000))),
+      Query("q488_qualification_designer", q488QualificationDesigner, q488Oracle,
+        Hooks(nonEmpty, range("spammer_pass_micro", 0, 1000000), range("honest_pass_micro", 0, 1000000))),
+      Query("q489_panel_router", q489PanelRouter, q489Oracle,
+        Hooks(nonEmpty, range("acc_micro", 0, 1000000),
+          range("n_judges", 1, 7), range("cost", 0, Long.MaxValue / 2))),
+      Query("q490_rasch_prox", q490RaschProx, q490Oracle,
+        NoBound("PROX difficulty logits unbounded both sides")),
+      // outfit is a mean of squared standardized residuals
+      Query("q491_rasch_outfit", q491RaschOutfit, q491Oracle,
+        Hooks(nonEmpty, atLeast("outfit_milli", 0))),
+      Query("q492_relabel_router", q492RelabelRouter, q492Oracle,
+        Hooks(nonEmpty, range("share_milli", 0, 1000))),
+      Query("q493_agreement_drift", q493AgreementDrift, q493Oracle,
+        Hooks(nonEmpty,
+          range("kappa_bp", -10000, 10000))),
       // θ rows are conditional probabilities: each in [0,1000] milli and
       // each (rater, true-class) row of the matrix sums to 1000 minus
       // ≤ L−1 of div truncation
-      "q494_ds_soft_confusion" -> Seq(nonEmpty,
-        range("theta2_milli", 0, 1000),
-        groupSum(Seq("rater", "true_label"), "theta2_milli", 997, 1000)),
+      Query("q494_ds_soft_confusion", q494DawidSkeneSoftConfusion, q494Oracle,
+        Hooks(nonEmpty,
+          range("theta2_milli", 0, 1000),
+          groupSum(Seq("rater", "true_label"), "theta2_milli", 997, 1000))),
       // the winning posterior is ≥ 1/L and ≤ 1, in micro; the 300000
       // floor hardcodes the graft L = 3 label universe (re-derive as
       // 10⁶ div L elsewhere). The mean divides by n_post — items the
@@ -2159,36 +2168,16 @@ object Annotation extends graft.QueryModule {
       // by n_items would undershoot the floor on CORRECT output
       // (ADVICE r13); with n_post the bound is exact, not
       // distributional. n_post = 0 ⇒ sum is NULL ⇒ range skips
-      "q495_ds_soft_flips" -> Seq(nonEmpty,
-        range("n_items", 1, 1000000000000L),
-        range("n_items - n_post", 0, 1000000000000L),
-        range("CASE WHEN n_post = 0 THEN NULL ELSE sum_post_micro div n_post END",
-          300000, 1000000)),
-      "q496_ds_rater_report" -> Seq(nonEmpty,
-        range("n_judgments", 1, 1000000000000L),
-        range("agree_micro", 0, 1000000), range("diag_milli", 0, 1000)),
+      Query("q495_ds_soft_flips", q495DawidSkeneSoftFlips, q495Oracle,
+        Hooks(nonEmpty,
+          range("n_items", 1, 1000000000000L),
+          range("n_items - n_post", 0, 1000000000000L),
+          range("CASE WHEN n_post = 0 THEN NULL ELSE sum_post_micro div n_post END",
+            300000, 1000000))),
+      Query("q496_ds_rater_report", q496DsRaterReport, q496Oracle,
+        Hooks(nonEmpty,
+          range("n_judgments", 1, 1000000000000L),
+          range("agree_micro", 0, 1000000), range("diag_milli", 0, 1000))),
     )
   }
-
-  val oracles: Map[String, String] = Map(
-    "q478_fleiss_kappa" -> q478Oracle,
-    "q479_krippendorff_alpha" -> q479Oracle,
-    "q480_dawid_skene" -> q480Oracle,
-    "q481_kendall_tau" -> q481Oracle,
-    "q482_item_analysis" -> q482Oracle,
-    "q483_conformal_coverage" -> q483Oracle,
-    "q484_kr20_reliability" -> q484Oracle,
-    "q485_panel_planner" -> q485Oracle,
-    "q486_test_retest" -> q486Oracle,
-    "q487_judge_pair_kappa" -> q487Oracle,
-    "q488_qualification_designer" -> q488Oracle,
-    "q489_panel_router" -> q489Oracle,
-    "q490_rasch_prox" -> q490Oracle,
-    "q491_rasch_outfit" -> q491Oracle,
-    "q492_relabel_router" -> q492Oracle,
-    "q493_agreement_drift" -> q493Oracle,
-    "q494_ds_soft_confusion" -> q494Oracle,
-    "q495_ds_soft_flips" -> q495Oracle,
-    "q496_ds_rater_report" -> q496Oracle,
-  )
 }

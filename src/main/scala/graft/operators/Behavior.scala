@@ -2556,81 +2556,69 @@ object Behavior extends graft.QueryModule {
        SELECT delay_h, n_hours, mean_keys, peak_keys, peak_keys * 64 AS peak_bytes
        FROM agg ORDER BY delay_h"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q438_state_planner" -> q438StatePlanner,
-    "q433_tiering_planner" -> q433TieringPlanner,
-    "q434_burn_alert_eval" -> q434BurnAlertEval,
-    "q423_ips_offpolicy" -> q423IpsOffpolicy,
-    "q419_ckpt_planner" -> q419CkptPlanner,
-    "q408_sax_motifs" -> q408SaxMotifs,
-    "q412_pref_cycles" -> q412PrefCycles,
-    "q343_session_surprisal" -> q343SessionSurprisal,
-    "q361_greenwood" -> q361Greenwood,
-    "q362_ttl_planner" -> q362TtlPlanner,
-    "q364_seq_patterns" -> q364SeqPatterns,
-    "q365_ccf" -> q365Ccf,
-    "q264_cohort_ltv" -> q264CohortLtv,
-    "q265_tier_migration" -> q265TierMigration,
-    "q263_state_occupancy" -> q263StateOccupancy,
-    "q259_rolling_retention" -> q259RollingRetention,
-    "q254_new_vs_returning" -> q254NewVsReturning,
-    "q247_exclusive_reach" -> q247ExclusiveReach,
-    "q233_cumulative_distinct" -> q233CumulativeDistinct,
-    "q235_revenue_streaks" -> q235RevenueStreaks,
-    "q230_position_attribution" -> q230PositionAttribution,
-    "q228_bot_vote" -> q228BotVote,
-    "q226_rfm_segments" -> q226RfmSegments,
-    "q224_session_paths" -> q224SessionPaths,
-    "q219_burstiness" -> q219Burstiness,
-    "q210_kaplan_meier" -> q210KaplanMeier,
-    "q296_logrank" -> q296Logrank,
-    "q201_entry_exit" -> q201EntryExit,
-    "q196_assoc_rules" -> q196AssocRules,
-    "q189_funnel_latency" -> q189FunnelLatency,
-    "q190_trending" -> q190Trending,
-    "q182_apriori_triples" -> q182AprioriTriples,
-    "q128_psi_drift" -> q128PsiDrift,
-    "q113_attribution" -> q113Attribution,
-    "q114_transitions" -> q114Transitions,
-    "q125_next_event_baseline" -> q125NextEventBaseline,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q438_state_planner" -> q438Oracle,
-    "q433_tiering_planner" -> q433Oracle,
-    "q434_burn_alert_eval" -> q434Oracle,
-    "q423_ips_offpolicy" -> q423Oracle,
-    "q419_ckpt_planner" -> q419Oracle,
-    "q408_sax_motifs" -> q408Oracle,
-    "q412_pref_cycles" -> q412Oracle,
-    "q343_session_surprisal" -> q343Oracle,
-    "q361_greenwood" -> q361Oracle,
-    "q362_ttl_planner" -> q362Oracle,
-    "q364_seq_patterns" -> q364Oracle,
-    "q365_ccf" -> q365Oracle,
-    "q264_cohort_ltv" -> q264Oracle,
-    "q265_tier_migration" -> q265Oracle,
-    "q263_state_occupancy" -> q263Oracle,
-    "q259_rolling_retention" -> q259Oracle,
-    "q254_new_vs_returning" -> q254Oracle,
-    "q247_exclusive_reach" -> q247Oracle,
-    "q233_cumulative_distinct" -> q233Oracle,
-    "q235_revenue_streaks" -> q235Oracle,
-    "q230_position_attribution" -> q230Oracle,
-    "q228_bot_vote" -> q228Oracle,
-    "q226_rfm_segments" -> q226Oracle,
-    "q224_session_paths" -> q224Oracle,
-    "q219_burstiness" -> q219Oracle,
-    "q210_kaplan_meier" -> q210Oracle,
-    "q296_logrank" -> q296Oracle,
-    "q201_entry_exit" -> q201Oracle,
-    "q196_assoc_rules" -> q196Oracle,
-    "q189_funnel_latency" -> q189Oracle,
-    "q190_trending" -> q190Oracle,
-    "q182_apriori_triples" -> q182Oracle,
-    "q128_psi_drift" -> q128Oracle,
-    "q113_attribution" -> q113Oracle,
-    "q114_transitions" -> q114Oracle,
-    "q125_next_event_baseline" -> q125Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q438_state_planner", q438StatePlanner, q438Oracle, NoBound(Structural)),
+      Query("q433_tiering_planner", q433TieringPlanner, q433Oracle, NoBound(Structural)),
+      Query("q434_burn_alert_eval", q434BurnAlertEval, q434Oracle,
+        Hooks(nonEmpty, range("precision_bp", 0, 10000), range("recall_bp", 0, 10000))),
+      Query("q423_ips_offpolicy", q423IpsOffpolicy, q423Oracle, NoBound(Structural)),
+      Query("q419_ckpt_planner", q419CkptPlanner, q419Oracle,
+        NoBound("overhead ratio unbounded above")),
+      Query("q408_sax_motifs", q408SaxMotifs, q408Oracle,
+        Hooks(nonEmpty, range("share_bp", 0, 10000))),
+      Query("q412_pref_cycles", q412PrefCycles, q412Oracle,
+        Hooks(nonEmpty, range("transitivity_bp", 0, 10000))),
+      Query("q343_session_surprisal", q343SessionSurprisal, q343Oracle,
+        NoBound("surprisal unbounded")),
+      Query("q361_greenwood", q361Greenwood, q361Oracle,
+        Hooks(nonEmpty, range("surv_micro", 0, 1000000), range("se_micro", 0, 1000000), range("lo_micro", 0, 1000000), range("hi_micro", 0, 1000000))),
+      Query("q362_ttl_planner", q362TtlPlanner, q362Oracle,
+        Hooks(nonEmpty, range("hit_rate_bp", 0, 10000))),
+      Query("q364_seq_patterns", q364SeqPatterns, q364Oracle,
+        Hooks(nonEmpty, range("share_bp", 0, 10000))),
+      Query("q365_ccf", q365Ccf, q365Oracle, Hooks(nonEmpty, range("ccf_bp", -10000, 10000))),
+      Query("q264_cohort_ltv", q264CohortLtv, q264Oracle, NoBound(Structural)),
+      Query("q265_tier_migration", q265TierMigration, q265Oracle, NoBound(Structural)),
+      Query("q263_state_occupancy", q263StateOccupancy, q263Oracle,
+        Hooks(nonEmpty, range("share_bp", 0, 10000),
+          // occupancy shares partition total time (≤100-state slack)
+          groupSum(Seq(), "share_bp", 9900, 10000))),
+      Query("q259_rolling_retention", q259RollingRetention, q259Oracle,
+        Hooks(nonEmpty, range("return_bp", 0, 10000))),
+      Query("q254_new_vs_returning", q254NewVsReturning, q254Oracle,
+        Hooks(nonEmpty, range("new_share_bp", 0, 10000))),
+      Query("q247_exclusive_reach", q247ExclusiveReach, q247Oracle,
+        Hooks(nonEmpty, range("exclusive_bp", 0, 10000))),
+      Query("q233_cumulative_distinct", q233CumulativeDistinct, q233Oracle, NoBound(Structural)),
+      Query("q235_revenue_streaks", q235RevenueStreaks, q235Oracle, NoBound(Structural)),
+      Query("q230_position_attribution", q230PositionAttribution, q230Oracle, NoBound(Structural)),
+      Query("q228_bot_vote", q228BotVote, q228Oracle, NoBound(Structural)),
+      Query("q226_rfm_segments", q226RfmSegments, q226Oracle, NoBound(Structural)),
+      Query("q224_session_paths", q224SessionPaths, q224Oracle,
+        Hooks(nonEmpty, range("share_bp", 0, 10000))),
+      Query("q219_burstiness", q219Burstiness, q219Oracle,
+        Hooks(nonEmpty, range("burst_bp", -10000, 10000))),
+      Query("q210_kaplan_meier", q210KaplanMeier, q210Oracle,
+        Hooks(nonEmpty, range("surv_micro", 0, 1000000))),
+      Query("q296_logrank", q296Logrank, q296Oracle, NoBound("O-E / variance / chi unbounded")),
+      Query("q201_entry_exit", q201EntryExit, q201Oracle,
+        Hooks(nonEmpty, range("bounce_bp", 0, 10000))),
+      Query("q196_assoc_rules", q196AssocRules, q196Oracle,
+        Hooks(nonEmpty, range("conf_ppm", 0, 1000000))),
+      Query("q189_funnel_latency", q189FunnelLatency, q189Oracle, NoBound(Structural)),
+      Query("q190_trending", q190Trending, q190Oracle,
+        Hooks(nonEmpty, atLeast("growth_bp", -10000))),
+      Query("q182_apriori_triples", q182AprioriTriples, q182Oracle, NoBound(Structural)),
+      Query("q128_psi_drift", q128PsiDrift, q128Oracle, NoBound("PSI divergence unbounded above")),
+      Query("q113_attribution", q113Attribution, q113Oracle, NoBound(Structural)),
+      Query("q114_transitions", q114Transitions, q114Oracle,
+        Hooks(nonEmpty, range("p_ppm", 0, 1000000),
+          // per-source transition mass partitions (≤1000-symbol slack)
+          groupSum(Seq("src"), "p_ppm", 999000, 1000000))),
+      Query("q125_next_event_baseline", q125NextEventBaseline, q125Oracle,
+        Hooks(nonEmpty, range("acc_ppm", 0, 1000000))),
+    )
+  }
 }

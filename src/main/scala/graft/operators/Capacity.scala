@@ -630,25 +630,26 @@ object Capacity extends graft.QueryModule {
        FROM (SELECT unnest([7, 30, 90]) AS ttl) g, flat
        ORDER BY ttl_days"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q462_retention_forecast" -> q462RetentionForecast,
-    "q439_lru_curve" -> q439LruCurve,
-    "q440_straggler_planner" -> q440StragglerPlanner,
-    "q441_erlang_staffing" -> q441ErlangStaffing,
-    "q444_lfu_curve" -> q444LfuCurve,
-    "q445_hedged_payoff" -> q445HedgedPayoff,
-    "q446_retry_budget" -> q446RetryBudget,
-    "q451_watermark_planner" -> q451WatermarkPlanner,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q462_retention_forecast" -> q462Oracle,
-    "q439_lru_curve" -> q439Oracle,
-    "q440_straggler_planner" -> q440Oracle,
-    "q441_erlang_staffing" -> q441Oracle,
-    "q444_lfu_curve" -> q444Oracle,
-    "q445_hedged_payoff" -> q445Oracle,
-    "q446_retry_budget" -> q446Oracle,
-    "q451_watermark_planner" -> q451Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q462_retention_forecast", q462RetentionForecast, q462Oracle,
+        Hooks(nonEmpty, range("alive_bp", 0, 10000), range("savings_bp", 0, 10000))),
+      Query("q439_lru_curve", q439LruCurve, q439Oracle,
+        Hooks(nonEmpty, range("hit_bp", 0, 10000), range("cold_bp", 0, 10000))),
+      Query("q440_straggler_planner", q440StragglerPlanner, q440Oracle,
+        Hooks(nonEmpty,
+          atLeast("straggler_ratio_milli", 1000))),
+      Query("q441_erlang_staffing", q441ErlangStaffing, q441Oracle,
+        Hooks(nonEmpty, range("wait_prob_micro", 0, 1000000))),
+      Query("q444_lfu_curve", q444LfuCurve, q444Oracle,
+        Hooks(nonEmpty, range("lfu_hit_bp", 0, 10000))),
+      Query("q445_hedged_payoff", q445HedgedPayoff, q445Oracle,
+        Hooks(nonEmpty, range("saving_bp", 0, 10000))),
+      Query("q446_retry_budget", q446RetryBudget, q446Oracle,
+        Hooks(nonEmpty, range("p_bp", 0, 10000), range("succ_micro", 0, 1000000))),
+      Query("q451_watermark_planner", q451WatermarkPlanner, q451Oracle,
+        Hooks(nonEmpty, range("dropped_bp", 0, 10000))),
+    )
+  }
 }

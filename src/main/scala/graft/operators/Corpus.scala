@@ -601,18 +601,17 @@ object Corpus extends graft.QueryModule {
     "fr" -> 1288490188L, "zh" -> 1288490188L)
 
   /** Deterministic stratified sampling: keep doc iff
-    * ((doc_id mod 2³¹) · 2654435761) mod 2³² < threshold(lang) —
+    * `knuthHash(doc_id)` mod 2³² < threshold(lang) —
     * Knuth's multiplicative hash against a per-stratum threshold from
     * a broadcast dim (the scalable form of `DataFrameStatFunctions
     * .sampleBy`, but reproducible across engines and runs). Output is
     * the per-stratum accounting; the kept-rows path is the same filter
     * without the aggregation.
     *
-    * Overflow discipline: the key is reduced mod 2³¹ BEFORE the
-    * multiply, so the product is ≤ (2³¹)·2654435761 < 2⁶³ for any
-    * 64-bit doc_id — no ANSI overflow at any corpus size (the unreduced
-    * form throws past doc_id ≈ 3.5e9 on both engines). Ids differing by
-    * exactly 2³¹ share a hash — irrelevant for sampling.
+    * Overflow discipline: see [[graft.functions.Fns.knuthHash]] — no
+    * ANSI overflow at any corpus size (the unreduced form throws past
+    * doc_id ≈ 3.5e9 on both engines). Ids differing by exactly 2³¹
+    * share a hash — irrelevant for sampling.
     * Unknown strata fall back to the default 30% threshold via LEFT
     * join + coalesce (matching the oracle's CASE ELSE) instead of being
     * silently dropped by an inner join. */
@@ -622,7 +621,7 @@ object Corpus extends graft.QueryModule {
     Tables.documents(s, d)
       .join(broadcast(fr), Seq("lang"), "left")
       .withColumn("kept",
-        ($"doc_id" % lit(2147483648L)) * lit(2654435761L) % lit(4294967296L) <
+        knuthHash($"doc_id") % lit(4294967296L) <
           coalesce($"thresh", lit(1288490188L)))
       .groupBy($"lang")
       .agg(count(lit(1)).as("n_total"),
@@ -1782,7 +1781,7 @@ object Corpus extends graft.QueryModule {
   def q391ShardMixingAudit(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val cell = Tables.documents(s, d)
-      .select(expr("((doc_id % 2147483648) * 2654435761) % 16").as("shard"),
+      .select((knuthHash($"doc_id") % lit(16)).as("shard"),
         $"source")
       .groupBy($"shard", $"source").agg(count(lit(1)).as("c"))
     val per = cell.groupBy($"shard").agg(sum($"c").as("n"))
@@ -1954,71 +1953,59 @@ object Corpus extends graft.QueryModule {
          CAST((positional_cnt - realizable) * 10000 // positional_cnt AS BIGINT) AS overlap_inflation_bp
        FROM roi CROSS JOIN tot ORDER BY rank"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q392_novelty_ivm" -> q392NoveltyIvm,
-    "q400_merge_roi" -> q400MergeRoi,
-    "q329_novelty_curve" -> q329NoveltyCurve,
-    "q391_shard_mixing_audit" -> q391ShardMixingAudit,
-    "q389_kneser_ney" -> q389KneserNey,
-    "q388_spec_decode_accept" -> q388SpecDecodeAccept,
-    "q377_source_value_lm" -> q377SourceValueLm,
-    "q272_perplexity_buckets" -> q272PerplexityBuckets,
-    "q175_concentration" -> q175Concentration,
-    "q174_path_rollup" -> q174PathRollup,
-    "q173_greedy_cover" -> q173GreedyCover,
-    "q160_sliding_distinct" -> q160SlidingDistinct,
-    "q159_phrase_search" -> q159PhraseSearch,
-    "q144_dataset_card" -> q144DatasetCard,
-    "q141_bigram_lm" -> q141BigramLm,
-    "q134_zipf_slope" -> q134ZipfSlope,
-    "q135_heaps_law" -> q135HeapsLaw,
-    "q130_bpe_pairs" -> q130BpePairs,
-    "q115_source_entropy" -> q115SourceEntropy,
-    "q120_pmi_pairs" -> q120PmiPairs,
-    "q49_bloom_decontam" -> q49BloomDecontam,
-    "q72_funnel" -> q72Funnel,
-    "q106_retention_cohorts" -> q106RetentionCohorts,
-    "q109_dense_calendar" -> q109DenseCalendar,
-    "q107_session_sequences" -> q107SessionSequences,
-    "q77_surprisal" -> q77Surprisal,
-    "q78_decontam" -> q78Decontam,
-    "q73_tfidf" -> q73Tfidf,
-    "q74_bigrams" -> q74Bigrams,
-    "q75_stratified_sample" -> q75StratifiedSample,
-    "q76_vocab" -> q76Vocab,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q392_novelty_ivm" -> q392Oracle,
-    "q400_merge_roi" -> q400Oracle,
-    "q329_novelty_curve" -> q329Oracle,
-    "q391_shard_mixing_audit" -> q391Oracle,
-    "q389_kneser_ney" -> q389Oracle,
-    "q388_spec_decode_accept" -> q388Oracle,
-    "q377_source_value_lm" -> q377Oracle,
-    "q272_perplexity_buckets" -> q272Oracle,
-    "q175_concentration" -> q175Oracle,
-    "q174_path_rollup" -> q174Oracle,
-    "q173_greedy_cover" -> q173Oracle,
-    "q160_sliding_distinct" -> q160Oracle,
-    "q159_phrase_search" -> q159Oracle,
-    "q144_dataset_card" -> q144Oracle,
-    "q141_bigram_lm" -> q141Oracle,
-    "q134_zipf_slope" -> q134Oracle,
-    "q135_heaps_law" -> q135Oracle,
-    "q130_bpe_pairs" -> q130Oracle,
-    "q115_source_entropy" -> q115Oracle,
-    "q120_pmi_pairs" -> q120Oracle,
-    "q49_bloom_decontam" -> q49Oracle,
-    "q72_funnel" -> q72Oracle,
-    "q106_retention_cohorts" -> q106Oracle,
-    "q109_dense_calendar" -> q109Oracle,
-    "q107_session_sequences" -> q107Oracle,
-    "q77_surprisal" -> q77Oracle,
-    "q78_decontam" -> q78Oracle,
-    "q73_tfidf" -> q73Oracle,
-    "q74_bigrams" -> q74Oracle,
-    "q75_stratified_sample" -> q75Oracle,
-    "q76_vocab" -> q76Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q392_novelty_ivm", q392NoveltyIvm, q392Oracle,
+        Hooks(nonEmpty, range("novelty_bp", 0, 10000))),
+      Query("q400_merge_roi", q400MergeRoi, q400Oracle,
+        Hooks(nonEmpty, range("saved_bp", 0, 10000))),
+      Query("q329_novelty_curve", q329NoveltyCurve, q329Oracle,
+        Hooks(nonEmpty, range("novelty_bp", 0, 10000))),
+      Query("q391_shard_mixing_audit", q391ShardMixingAudit, q391Oracle,
+        Hooks(nonEmpty, range("mix_bp", 0, 10000))),
+      Query("q389_kneser_ney", q389KneserNey, q389Oracle,
+        Hooks(nonEmpty, range("d1_micro", 0, 1000000))),
+      Query("q388_spec_decode_accept", q388SpecDecodeAccept, q388Oracle,
+        Hooks(nonEmpty, range("accept_ppm", 0, 1000000))),
+      Query("q377_source_value_lm", q377SourceValueLm, q377Oracle,
+        NoBound("entropy deltas unbounded")),
+      Query("q272_perplexity_buckets", q272PerplexityBuckets, q272Oracle,
+        NoBound("surprisal unbounded (grows with vocab)")),
+      Query("q175_concentration", q175Concentration, q175Oracle,
+        Hooks(nonEmpty, range("top_share_bp", 0, 10000))),
+      Query("q174_path_rollup", q174PathRollup, q174Oracle, NoBound(Structural)),
+      Query("q173_greedy_cover", q173GreedyCover, q173Oracle,
+        Hooks(nonEmpty, range("cum_coverage_bp", 0, 10000))),
+      Query("q160_sliding_distinct", q160SlidingDistinct, q160Oracle, NoBound(Structural)),
+      Query("q159_phrase_search", q159PhraseSearch, q159Oracle, NoBound(Structural)),
+      Query("q144_dataset_card", q144DatasetCard, q144Oracle,
+        Hooks(nonEmpty, range("dup_permille", 0, 1000))),
+      Query("q141_bigram_lm", q141BigramLm, q141Oracle,
+        NoBound("surprisal unbounded (grows with vocab)")),
+      Query("q134_zipf_slope", q134ZipfSlope, q134Oracle,
+        NoBound("fitted log-log slope - data-dependent")),
+      Query("q135_heaps_law", q135HeapsLaw, q135Oracle,
+        NoBound("fitted Heaps slope - secant<=1 not provable for OLS")),
+      Query("q130_bpe_pairs", q130BpePairs, q130Oracle, NoBound(Structural)),
+      Query("q115_source_entropy", q115SourceEntropy, q115Oracle,
+        NoBound("entropy grows with vocab; KL data-dependent")),
+      Query("q120_pmi_pairs", q120PmiPairs, q120Oracle, NoBound("PMI unbounded both sides")),
+      Query("q49_bloom_decontam", q49BloomDecontam, q49Oracle,
+        Hooks(nonEmpty, range("contam_permille", 0, 1000))),
+      Query("q72_funnel", q72Funnel, q72Oracle, NoBound(Structural)),
+      Query("q106_retention_cohorts", q106RetentionCohorts, q106Oracle, NoBound(Structural)),
+      Query("q109_dense_calendar", q109DenseCalendar, q109Oracle,
+        NoBound("trailing mean of daily counts - scales with SF")),
+      Query("q107_session_sequences", q107SessionSequences, q107Oracle, NoBound(Structural)),
+      Query("q77_surprisal", q77Surprisal, q77Oracle, NoBound("surprisal unbounded")),
+      Query("q78_decontam", q78Decontam, q78Oracle,
+        Hooks(nonEmpty, range("contam_permille", 0, 1000))),
+      Query("q73_tfidf", q73Tfidf, q73Oracle, NoBound("tf-idf unbounded above")),
+      Query("q74_bigrams", q74Bigrams, q74Oracle, NoBound(Structural)),
+      Query("q75_stratified_sample", q75StratifiedSample, q75Oracle,
+        Hooks(nonEmpty, range("sample_permille", 0, 1000))),
+      Query("q76_vocab", q76Vocab, q76Oracle, Hooks(nonEmpty, range("hapax_permille", 0, 1000))),
+    )
+  }
 }

@@ -234,7 +234,7 @@ object Curation extends graft.QueryModule {
     * growth (existing docs never migrate when new ones arrive). */
   def q38TrainSplit(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val h = ($"doc_id" % lit(2147483648L)) * lit(2654435761L) % lit(4294967296L)
+    val h = knuthHash($"doc_id") % lit(4294967296L)
     Tables.documents(s, d)
       .withColumn("split",
         when(h < testBound, "test").when(h < valBound, "val").otherwise("train"))
@@ -268,7 +268,7 @@ object Curation extends graft.QueryModule {
     import s.implicits._
     Tables.documents(s, d)
       .withColumn("hk",
-        ($"doc_id" % lit(2147483648L)) * lit(2654435761L) % lit(4294967296L))
+        knuthHash($"doc_id") % lit(4294967296L))
       .withColumn("rn", row_number().over(
         org.apache.spark.sql.expressions.Window
           .partitionBy($"source").orderBy($"hk", $"doc_id")))
@@ -312,7 +312,7 @@ object Curation extends graft.QueryModule {
       .withColumn("rate_ppm", expr("w * 1000000 div tot"))
     docs.join(broadcast(rated), "source")
       .withColumn("kept",
-        ($"doc_id" % lit(2147483648L)) * lit(2654435761L) % lit(4294967296L) <
+        knuthHash($"doc_id") % lit(4294967296L) <
           expr("rate_ppm * 4294967296 div 1000000")) // integer div, not `/`
       .groupBy($"source", $"n_total", $"rate_ppm")
       .agg(sum(when($"kept", 1L).otherwise(0L)).as("n_kept"))
@@ -401,7 +401,7 @@ object Curation extends graft.QueryModule {
     import s.implicits._
     val norm = lower(regexp_replace(trim($"text"), "\\s+", " "))
     val tkRaw = tokens($"text")
-    val h = ($"doc_id" % lit(2147483648L)) * lit(2654435761L) % lit(4294967296L)
+    val h = knuthHash($"doc_id") % lit(4294967296L)
     Tables.documents(s, d)
       .select($"doc_id", $"source", $"n_chars",
         md5(concat_ws(" ",
@@ -2556,91 +2556,88 @@ object Curation extends graft.QueryModule {
        ORDER BY r.round"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q457_greedy_max_cover" -> q457GreedyMaxCover,
-    "q428_attention_waste" -> q428AttentionWaste,
-    "q427_cache_sizing" -> q427CacheSizing,
-    "q422_kv_fragmentation" -> q422KvFragmentation,
-    "q414_rebalance_delta" -> q414RebalanceDelta,
-    "q411_mixture_rebalance" -> q411MixtureRebalance,
-    "q407_prefix_cache" -> q407PrefixCachePlan,
-    "q406_batching_planner" -> q406BatchingPlanner,
-    "q402_shapley_coverage" -> q402ShapleyCoverage,
-    "q53_chinchilla_plan" -> q53ChinchillaPlan,
-    "q337_curriculum_pacing" -> q337CurriculumPacing,
-    "q357_anneal_schedule" -> q357AnnealSchedule,
-    "q330_kv_cache_plan" -> q330KvCachePlan,
-    "q327_compaction_plan" -> q327CompactionPlan,
-    "q369_epoch_waterfill" -> q369EpochWaterfill,
-    "q370_length_buckets" -> q370LengthBuckets,
-    "q372_resharding_audit" -> q372ReshardingAudit,
-    "q356_length_bias" -> q356LengthBias,
-    "q316_dpo_pairs" -> q316DpoPairs,
-    "q276_dsir_model_ivm" -> q276DsirModelIvm,
-    "q275_truncation_audit" -> q275TruncationAudit,
-    "q267_dsir_select" -> q267DsirSelect,
-    "q268_boilerplate_scrub" -> q268BoilerplateScrub,
-    "q261_netnew_content" -> q261NetNewContent,
-    "q208_hash_ring" -> q208HashRing,
-    "q204_length_buckets" -> q204LengthBuckets,
-    "q205_apportionment" -> q205Apportionment,
-    "q193_nucleus_budget" -> q193NucleusBudget,
-    "q143_weighted_sample" -> q143WeightedSample,
-    "q140_rendezvous_shards" -> q140RendezvousShards,
-    "q129_domain_stats" -> q129DomainStats,
-    "q123_skyline" -> q123Skyline,
-    "q90_curation_pipeline" -> q90CurationPipeline,
-    "q85_temperature_mix" -> q85TemperatureMix,
-    "q101_mixture_epochs" -> q101MixtureEpochs,
-    "q81_source_quota" -> q81SourceQuota,
-    "q34_passage_dedup" -> q34PassageDedup,
-    "q35_repetition_profile" -> q35RepetitionProfile,
-    "q36_sequence_packing" -> q36SequencePacking,
-    "q37_scrub_props" -> q37ScrubProps,
-    "q38_train_split" -> q38TrainSplit,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q457_greedy_max_cover" -> q457Oracle,
-    "q428_attention_waste" -> q428Oracle,
-    "q427_cache_sizing" -> q427Oracle,
-    "q422_kv_fragmentation" -> q422Oracle,
-    "q414_rebalance_delta" -> q414Oracle,
-    "q411_mixture_rebalance" -> q411Oracle,
-    "q407_prefix_cache" -> q407Oracle,
-    "q406_batching_planner" -> q406Oracle,
-    "q402_shapley_coverage" -> q402Oracle,
-    "q53_chinchilla_plan" -> q53Oracle,
-    "q337_curriculum_pacing" -> q337Oracle,
-    "q357_anneal_schedule" -> q357Oracle,
-    "q330_kv_cache_plan" -> q330Oracle,
-    "q327_compaction_plan" -> q327Oracle,
-    "q369_epoch_waterfill" -> q369Oracle,
-    "q370_length_buckets" -> q370Oracle,
-    "q372_resharding_audit" -> q372Oracle,
-    "q356_length_bias" -> q356Oracle,
-    "q316_dpo_pairs" -> q316Oracle,
-    "q276_dsir_model_ivm" -> q276Oracle,
-    "q275_truncation_audit" -> q275Oracle,
-    "q267_dsir_select" -> q267Oracle,
-    "q268_boilerplate_scrub" -> q268Oracle,
-    "q261_netnew_content" -> q261Oracle,
-    "q208_hash_ring" -> q208Oracle,
-    "q204_length_buckets" -> q204Oracle,
-    "q205_apportionment" -> q205Oracle,
-    "q193_nucleus_budget" -> q193Oracle,
-    "q143_weighted_sample" -> q143Oracle,
-    "q140_rendezvous_shards" -> q140Oracle,
-    "q129_domain_stats" -> q129Oracle,
-    "q123_skyline" -> q123Oracle,
-    "q90_curation_pipeline" -> q90Oracle,
-    "q85_temperature_mix" -> q85Oracle,
-    "q101_mixture_epochs" -> q101Oracle,
-    "q81_source_quota" -> q81Oracle,
-    "q34_passage_dedup" -> q34Oracle,
-    "q35_repetition_profile" -> q35Oracle,
-    "q36_sequence_packing" -> q36Oracle,
-    "q37_scrub_props" -> q37Oracle,
-    "q38_train_split" -> q38Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q457_greedy_max_cover", q457GreedyMaxCover, q457Oracle,
+        Hooks(nonEmpty, range("cum_bp", 0, 10000))),
+      Query("q428_attention_waste", q428AttentionWaste, q428Oracle,
+        Hooks(nonEmpty, range("util_bp", 0, 10000))),
+      Query("q427_cache_sizing", q427CacheSizing, q427Oracle,
+        Hooks(nonEmpty, range("hit_bp", 0, 10000), range("base_bp", 0, 10000))),
+      Query("q422_kv_fragmentation", q422KvFragmentation, q422Oracle,
+        Hooks(nonEmpty, range("frag_paged_bp", 0, 10000), range("frag_contig_bp", 0, 10000))),
+      Query("q414_rebalance_delta", q414RebalanceDelta, q414Oracle,
+        Hooks(nonEmpty, range("moved_bp", 0, 10000), range("ideal_bp", 0, 10000))),
+      Query("q411_mixture_rebalance", q411MixtureRebalance, q411Oracle,
+        Hooks(nonEmpty, range("w_ppm", 0, 1000000),
+          // normalized weights partition ppm mass (floor slack)
+          groupSum(Seq(), "w_ppm", 999000, 1000000))),
+      Query("q407_prefix_cache", q407PrefixCachePlan, q407Oracle,
+        Hooks(nonEmpty, range("hit_bp", 0, 10000))),
+      Query("q406_batching_planner", q406BatchingPlanner, q406Oracle,
+        NoBound("speedup ratio unbounded above")),
+      Query("q402_shapley_coverage", q402ShapleyCoverage, q402Oracle,
+        Hooks(nonEmpty, range("share_bp", 0, 10000))),
+      Query("q53_chinchilla_plan", q53ChinchillaPlan, q53Oracle,
+        NoBound("epochs-needed scales with token deficit")),
+      Query("q337_curriculum_pacing", q337CurriculumPacing, q337Oracle,
+        Hooks(nonEmpty, range("c_milli", 0, 1000))),
+      Query("q357_anneal_schedule", q357AnnealSchedule, q357Oracle,
+        NoBound("upweight ratio unbounded above")),
+      Query("q330_kv_cache_plan", q330KvCachePlan, q330Oracle,
+        Hooks(nonEmpty, range("fit_bp", 0, 10000))),
+      Query("q327_compaction_plan", q327CompactionPlan, q327Oracle, NoBound(Structural)),
+      Query("q369_epoch_waterfill", q369EpochWaterfill, q369Oracle,
+        NoBound("water-fill levels scale with token mass")),
+      Query("q370_length_buckets", q370LengthBuckets, q370Oracle, NoBound(Structural)),
+      Query("q372_resharding_audit", q372ReshardingAudit, q372Oracle,
+        Hooks(nonEmpty, range("moved_bp", 0, 10000))),
+      Query("q356_length_bias", q356LengthBias, q356Oracle, NoBound("chi-square unbounded above")),
+      Query("q316_dpo_pairs", q316DpoPairs, q316Oracle, NoBound(Structural)),
+      Query("q276_dsir_model_ivm", q276DsirModelIvm, q276Oracle,
+        NoBound("DSIR log-ratio weight unbounded")),
+      Query("q275_truncation_audit", q275TruncationAudit, q275Oracle,
+        Hooks(nonEmpty, range("loss_bp", 0, 10000))),
+      Query("q267_dsir_select", q267DsirSelect, q267Oracle,
+        NoBound("DSIR log-ratio score unbounded")),
+      Query("q268_boilerplate_scrub", q268BoilerplateScrub, q268Oracle,
+        Hooks(nonEmpty, range("n_bp", 0, 10000))),
+      Query("q261_netnew_content", q261NetNewContent, q261Oracle,
+        Hooks(nonEmpty, range("net_new_bp", 0, 10000))),
+      Query("q208_hash_ring", q208HashRing, q208Oracle,
+        Hooks(nonEmpty, range("share_bp", 0, 10000),
+          // 8 shards partition the docs: 8 floors lose ≤ 7 bp
+          groupSum(Seq(), "share_bp", 9992, 10000))),
+      Query("q204_length_buckets", q204LengthBuckets, q204Oracle,
+        Hooks(nonEmpty, range("eff_bp", 0, 10000))),
+      Query("q205_apportionment", q205Apportionment, q205Oracle, NoBound(Structural)),
+      Query("q193_nucleus_budget", q193NucleusBudget, q193Oracle,
+        Hooks(nonEmpty, range("kept_bp", 0, 10000))),
+      Query("q143_weighted_sample", q143WeightedSample, q143Oracle,
+        NoBound("Gumbel-trick log key - unbounded below")),
+      Query("q140_rendezvous_shards", q140RendezvousShards, q140Oracle,
+        Hooks(nonEmpty,
+          range("load_permille", 0, 1000),
+          // 8 shards partition the docs: 8 floors lose <= 7 permille
+          groupSum(Seq(), "load_permille", 993, 1000))),
+      Query("q129_domain_stats", q129DomainStats, q129Oracle, NoBound(Structural)),
+      Query("q123_skyline", q123Skyline, q123Oracle, NoBound(Structural)),
+      Query("q90_curation_pipeline", q90CurationPipeline, q90Oracle, NoBound(Structural)),
+      Query("q85_temperature_mix", q85TemperatureMix, q85Oracle,
+        Hooks(nonEmpty, range("rate_ppm", 0, 1000000))),
+      Query("q101_mixture_epochs", q101MixtureEpochs, q101Oracle,
+        Hooks(nonEmpty, range("share_ppm", 0, 1000000),
+          // source shares partition the token mass (≤1000-source slack)
+          groupSum(Seq(), "share_ppm", 999000, 1000000))),
+      Query("q81_source_quota", q81SourceQuota, q81Oracle, NoBound(Structural)),
+      Query("q34_passage_dedup", q34PassageDedup, q34Oracle, NoBound(Structural)),
+      Query("q35_repetition_profile", q35RepetitionProfile, q35Oracle,
+        Hooks(nonEmpty,
+          range("top_tok_permille", 0, 1000), range("dup_bigram_permille", 0, 1000))),
+      Query("q36_sequence_packing", q36SequencePacking, q36Oracle, NoBound(Structural)),
+      Query("q37_scrub_props", q37ScrubProps, q37Oracle, NoBound(Structural)),
+      Query("q38_train_split", q38TrainSplit, q38Oracle, NoBound(Structural)),
+    )
+  }
 }

@@ -894,7 +894,7 @@ object Dedup extends graft.QueryModule {
     val keyed = Tables.documents(s, d).select($"doc_id")
       .join(clusters, Seq("doc_id"), "left")
       .withColumn("skey", coalesce($"cluster_id", $"doc_id"))
-    val h = ($"skey" % lit(2147483648L)) * lit(2654435761L) % lit(4294967296L)
+    val h = knuthHash($"skey") % lit(4294967296L)
     keyed
       .withColumn("split",
         when(h < testBound, "test").when(h < valBound, "val").otherwise("train"))
@@ -2387,14 +2387,13 @@ object Dedup extends graft.QueryModule {
     * relation, never a join. */
   def q390SampledDedupBias(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    def samp(c: String) =
-      s"(($c % 2147483648) * 2654435761) % 4294967296 < 2147483648"
+    def samp(c: String) = knuthHash(col(c)) % lit(4294967296L) < lit(2147483648L)
     val prs = jaccardPairs(s, d).select($"doc1", $"doc2").localCheckpoint()
-    val sp = prs.filter(expr(samp("doc1")) && expr(samp("doc2")))
+    val sp = prs.filter(samp("doc1") && samp("doc2"))
       .localCheckpoint()
     val nd = Tables.documents(s, d).agg(
       count(lit(1)).as("n_docs"),
-      count(when(expr(samp("doc_id")), lit(1))).as("n_samp"))
+      count(when(samp("doc_id"), lit(1))).as("n_samp"))
     val fullP = prs.agg(count(lit(1)).as("pairs_full"))
     val sampP = sp.agg(count(lit(1)).as("pairs_samp"))
     val dupF = prs.select(explode(array($"doc1", $"doc2")).as("d"))
@@ -2653,77 +2652,60 @@ object Dedup extends graft.QueryModule {
                    ELSE -1 END AS expected_split_bp
        FROM agg ORDER BY scheme, s_shards"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q436_shard_local_dedup" -> q436ShardLocalDedup,
-    "q39_minhash_k_ablation" -> q39MinhashKAblation,
-    "q399_dup_family_sizes" -> q399DupFamilySizes,
-    "q390_sampled_dedup_bias" -> q390SampledDedupBias,
-    "q393_dedup_threshold_curve" -> q393DedupThresholdCurve,
-    "q251_dedup_transitivity" -> q251DedupTransitivity,
-    "q351_bloom_planner" -> q351BloomPlanner,
-    "q274_dedup_tiers" -> q274DedupTiers,
-    "q258_threshold_persistence" -> q258ThresholdPersistence,
-    "q256_lsh_cost_planner" -> q256LshCostPlanner,
-    "q248_lsh_sweep" -> q248LshSweep,
-    "q236_record_linkage" -> q236RecordLinkage,
-    "q227_sim_histogram" -> q227SimHistogram,
-    "q222_dup_provenance" -> q222DupProvenance,
-    "q215_containment" -> q215Containment,
-    "q188_weighted_jaccard" -> q188WeightedJaccard,
-    "q164_golden_record" -> q164GoldenRecord,
-    "q136_sorted_neighborhood" -> q136SortedNeighborhood,
-    "q40_dedup_exact" -> q40DedupExact,
-    "q70_edit_distance" -> q70EditDistance,
-    "q41_minhash_lsh" -> q41MinhashLsh,
-    "q289_minhash_error_audit" -> q289MinhashErrorAudit,
-    "q295_lsh_pair_eval" -> q295LshPairEval,
-    "q297_capture_recapture" -> q297CaptureRecapture,
-    "q52_incremental_dedup" -> q52IncrementalDedup,
-    "q42_ngram_jaccard" -> q42NgramJaccard,
-    "q43_simhash" -> q43Simhash,
-    "q44_simhash_pairs" -> q44SimhashPairs,
-    "q71_dedup_clusters" -> q71DedupClusters,
-    "q380_incremental_cc" -> q380IncrementalCc,
-    "q95_neardup_ensemble" -> q95NeardupEnsemble,
-    "q96_leakage_split" -> q96LeakageSplit,
-    "q102_quality_canonical" -> q102QualityCanonical,
-    "q126_prefix_simjoin" -> q126PrefixSimjoin,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q436_shard_local_dedup" -> q436Oracle,
-    "q39_minhash_k_ablation" -> q39Oracle,
-    "q399_dup_family_sizes" -> q399Oracle,
-    "q390_sampled_dedup_bias" -> q390Oracle,
-    "q393_dedup_threshold_curve" -> q393Oracle,
-    "q251_dedup_transitivity" -> q251Oracle,
-    "q351_bloom_planner" -> q351Oracle,
-    "q274_dedup_tiers" -> q274Oracle,
-    "q258_threshold_persistence" -> q258Oracle,
-    "q256_lsh_cost_planner" -> q256Oracle,
-    "q248_lsh_sweep" -> q248Oracle,
-    "q236_record_linkage" -> q236Oracle,
-    "q227_sim_histogram" -> q227Oracle,
-    "q222_dup_provenance" -> q222Oracle,
-    "q215_containment" -> q215Oracle,
-    "q188_weighted_jaccard" -> q188Oracle,
-    "q164_golden_record" -> q164Oracle,
-    "q136_sorted_neighborhood" -> q136Oracle,
-    "q40_dedup_exact" -> q40Oracle,
-    "q70_edit_distance" -> q70Oracle,
-    "q41_minhash_lsh" -> q41Oracle,
-    "q289_minhash_error_audit" -> q289Oracle,
-    "q295_lsh_pair_eval" -> q295Oracle,
-    "q297_capture_recapture" -> q297Oracle,
-    "q52_incremental_dedup" -> q52Oracle,
-    "q42_ngram_jaccard" -> q42Oracle,
-    "q43_simhash" -> q43Oracle,
-    "q44_simhash_pairs" -> q44Oracle,
-    "q71_dedup_clusters" -> q71Oracle,
-    "q380_incremental_cc" -> q380Oracle,
-    "q95_neardup_ensemble" -> q95Oracle,
-    "q96_leakage_split" -> q96Oracle,
-    "q102_quality_canonical" -> q102Oracle,
-    "q126_prefix_simjoin" -> q126Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q436_shard_local_dedup", q436ShardLocalDedup, q436Oracle,
+        Hooks(nonEmpty, range("split_bp", 0, 10000))),
+      Query("q39_minhash_k_ablation", q39MinhashKAblation, q39Oracle,
+        Hooks(nonEmpty, range("mae_bp", 0, 10000), range("max_err_bp", 0, 10000))),
+      Query("q399_dup_family_sizes", q399DupFamilySizes, q399Oracle, NoBound(Structural)),
+      Query("q390_sampled_dedup_bias", q390SampledDedupBias, q390Oracle,
+        Hooks(nonEmpty, range("pair_survival_bp", 0, 10000), range("expected_survival_bp", 0, 10000))),
+      Query("q393_dedup_threshold_curve", q393DedupThresholdCurve, q393Oracle,
+        Hooks(nonEmpty, range("removable_bp", 0, 10000))),
+      Query("q251_dedup_transitivity", q251DedupTransitivity, q251Oracle,
+        Hooks(nonEmpty, range("closure_bp", 0, 10000))),
+      Query("q351_bloom_planner", q351BloomPlanner, q351Oracle, NoBound(Structural)),
+      Query("q274_dedup_tiers", q274DedupTiers, q274Oracle,
+        Hooks(nonEmpty, range("dup_permille", 0, 1000))),
+      Query("q258_threshold_persistence", q258ThresholdPersistence, q258Oracle,
+        NoBound("threshold grid is literal - structural")),
+      Query("q256_lsh_cost_planner", q256LshCostPlanner, q256Oracle, NoBound(Structural)),
+      Query("q248_lsh_sweep", q248LshSweep, q248Oracle,
+        Hooks(nonEmpty, range("precision_bp", 0, 10000))),
+      Query("q236_record_linkage", q236RecordLinkage, q236Oracle,
+        NoBound("rule-weight score - bounded by literal weights, not scale-free")),
+      Query("q227_sim_histogram", q227SimHistogram, q227Oracle,
+        Hooks(nonEmpty, range("lo_bp", -10000, 10000))),
+      Query("q222_dup_provenance", q222DupProvenance, q222Oracle, NoBound(Structural)),
+      Query("q215_containment", q215Containment, q215Oracle,
+        Hooks(nonEmpty, range("cont1_bp", 0, 10000), range("cont2_bp", 0, 10000))),
+      Query("q188_weighted_jaccard", q188WeightedJaccard, q188Oracle,
+        Hooks(nonEmpty, range("wj_bp", 0, 10000))),
+      Query("q164_golden_record", q164GoldenRecord, q164Oracle, NoBound(Structural)),
+      Query("q136_sorted_neighborhood", q136SortedNeighborhood, q136Oracle, NoBound(Structural)),
+      Query("q40_dedup_exact", q40DedupExact, q40Oracle, NoBound(Structural)),
+      Query("q70_edit_distance", q70EditDistance, q70Oracle, NoBound(Structural)),
+      Query("q41_minhash_lsh", q41MinhashLsh, q41Oracle, NoBound(Structural)),
+      Query("q289_minhash_error_audit", q289MinhashErrorAudit, q289Oracle,
+        Hooks(nonEmpty, range("jaccard_bp", 0, 10000), range("est_bp", 0, 10000), range("err_bp", -10000, 10000), range("mae_bp", 0, 10000))),
+      Query("q295_lsh_pair_eval", q295LshPairEval, q295Oracle,
+        Hooks(nonEmpty, range("precision_bp", 0, 10000), range("recall_bp", 0, 10000), range("f1_bp", 0, 10000))),
+      Query("q297_capture_recapture", q297CaptureRecapture, q297Oracle,
+        Hooks(nonEmpty, range("cov1_bp", 0, 10000), range("cov2_bp", 0, 10000))),
+      Query("q52_incremental_dedup", q52IncrementalDedup, q52Oracle, NoBound(Structural)),
+      Query("q42_ngram_jaccard", q42NgramJaccard, q42Oracle,
+        Hooks(nonEmpty, range("jaccard_bp", 0, 10000))),
+      Query("q43_simhash", q43Simhash, q43Oracle, NoBound(Structural)),
+      Query("q44_simhash_pairs", q44SimhashPairs, q44Oracle, NoBound(Structural)),
+      Query("q71_dedup_clusters", q71DedupClusters, q71Oracle, NoBound(Structural)),
+      Query("q380_incremental_cc", q380IncrementalCc, q380Oracle, NoBound(Structural)),
+      Query("q95_neardup_ensemble", q95NeardupEnsemble, q95Oracle, NoBound(Structural)),
+      Query("q96_leakage_split", q96LeakageSplit, q96Oracle, NoBound(Structural)),
+      Query("q102_quality_canonical", q102QualityCanonical, q102Oracle, NoBound(Structural)),
+      Query("q126_prefix_simjoin", q126PrefixSimjoin, q126Oracle,
+        Hooks(nonEmpty, range("jaccard_bp", 0, 10000))),
+    )
+  }
 }

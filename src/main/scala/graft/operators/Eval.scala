@@ -1205,65 +1205,53 @@ object Eval extends graft.QueryModule {
        ORDER BY elo_milli DESC, nationkey"""
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q465_bradley_terry" -> q465BradleyTerry,
-    "q466_pass_at_k" -> q466PassAtK,
-    "q467_bootstrap_ci" -> q467BootstrapCi,
-    "q468_permutation_test" -> q468PermutationTest,
-    "q469_mcnemar" -> q469McNemar,
-    "q470_borda_count" -> q470BordaCount,
-    "q471_roc_auc" -> q471RocAuc,
-    "q472_mde_planner" -> q472MdePlanner,
-    "q473_wilson_leaderboard" -> q473WilsonLeaderboard,
-    "q474_grpo_advantage" -> q474GrpoAdvantage,
-    "q475_best_of_n" -> q475BestOfN,
-    "q476_position_bias" -> q476PositionBias,
-    "q477_online_elo" -> q477OnlineElo,
-  )
-
-  /** Value-sanity hooks (VERDICT r11 ask #7) — see
-    * [[Annotation.sanities]]. q489's 1000× acc_micro slip is exactly
+  /** The module's queries. Value-sanity hooks (VERDICT r11 ask #7) —
+    * see [[Annotation.queries]]. q489's 1000× acc_micro slip is exactly
     * the class these catch; only provable invariants are asserted. */
-  override val sanities: Map[String, Seq[graft.Sanity.Hook]] = {
-    import graft.Sanity._
-    Map(
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
       // strengths are positive; a supplier cannot win more than it plays
-      "q465_bradley_terry" -> Seq(nonEmpty, range("wins", 0, Long.MaxValue / 2),
-        range("games - wins", 0, Long.MaxValue / 2),
-        range("p1_micro", 1, 1000000000000L),
-        range("p2_micro", 1, 1000000000000L)),
+      Query("q465_bradley_terry", q465BradleyTerry, q465Oracle,
+        Hooks(nonEmpty, range("wins", 0, Long.MaxValue / 2),
+          range("games - wins", 0, Long.MaxValue / 2),
+          range("p1_micro", 1, 1000000000000L),
+          range("p2_micro", 1, 1000000000000L))),
       // pass@k is a probability and monotone in k
-      "q466_pass_at_k" -> Seq(nonEmpty, range("pass1_milli", 0, 1000),
-        range("pass10_milli", 0, 1000),
-        range("pass5_milli - pass1_milli", 0, 1000),
-        range("pass10_milli - pass5_milli", 0, 1000)),
-      "q471_roc_auc" -> Seq(nonEmpty, range("auc_micro", 0, 1000000),
-        range("gini_micro", -1000000, 1000000)),
+      Query("q466_pass_at_k", q466PassAtK, q466Oracle,
+        Hooks(nonEmpty, range("pass1_milli", 0, 1000),
+          range("pass10_milli", 0, 1000),
+          range("pass5_milli - pass1_milli", 0, 1000),
+          range("pass10_milli - pass5_milli", 0, 1000))),
+      // percentile CI: hi >= lo by construction (point can fall
+      // outside a percentile interval in theory — not asserted)
+      Query("q467_bootstrap_ci", q467BootstrapCi, q467Oracle,
+        Hooks(nonEmpty, atLeast("hi_milli - lo_milli", 0))),
+      Query("q468_permutation_test", q468PermutationTest, q468Oracle,
+        Hooks(nonEmpty, range("p_milli", 0, 1000))),
+      Query("q469_mcnemar", q469McNemar, q469Oracle, NoBound("McNemar chi-square unbounded above")),
+      Query("q470_borda_count", q470BordaCount, q470Oracle,
+        NoBound("structural: ballots/points scale with row count - oracle hash is the check")),
+      Query("q471_roc_auc", q471RocAuc, q471Oracle,
+        Hooks(nonEmpty, range("auc_micro", 0, 1000000),
+          range("gini_micro", -1000000, 1000000))),
+      Query("q472_mde_planner", q472MdePlanner, q472Oracle,
+        NoBound("planner grid of literals + sigma/MDE in cents-e4 - money scale")),
       // a Wilson lower bound never exceeds the point estimate
-      "q473_wilson_leaderboard" -> Seq(nonEmpty,
-        range("winrate_milli", 0, 1000), range("wilson_lo_micro", 0, 1000000),
-        range("winrate_milli * 1000 - wilson_lo_micro", 0, 1000000)),
-      "q476_position_bias" -> Seq(nonEmpty,
-        range("pos1_win_milli", 0, 1000),
-        range("swap_consistent_milli", 0, 1000)),
-      "q489_panel_router" -> Seq(nonEmpty, range("acc_micro", 0, 1000000),
-        range("n_judges", 1, 7), range("cost", 0, Long.MaxValue / 2)),
+      Query("q473_wilson_leaderboard", q473WilsonLeaderboard, q473Oracle,
+        Hooks(nonEmpty,
+          range("winrate_milli", 0, 1000), range("wilson_lo_micro", 0, 1000000),
+          range("winrate_milli * 1000 - wilson_lo_micro", 0, 1000000))),
+      Query("q474_grpo_advantage", q474GrpoAdvantage, q474Oracle,
+        NoBound("structural: advantage-bucket counts - z-domain buckets are literals")),
+      Query("q475_best_of_n", q475BestOfN, q475Oracle,
+        NoBound("expected max reward in cents - money scale")),
+      Query("q476_position_bias", q476PositionBias, q476Oracle,
+        Hooks(nonEmpty,
+          range("pos1_win_milli", 0, 1000),
+          range("swap_consistent_milli", 0, 1000))),
+      Query("q477_online_elo", q477OnlineElo, q477Oracle,
+        NoBound("Elo ratings unbounded both sides")),
     )
   }
-
-  val oracles: Map[String, String] = Map(
-    "q465_bradley_terry" -> q465Oracle,
-    "q466_pass_at_k" -> q466Oracle,
-    "q467_bootstrap_ci" -> q467Oracle,
-    "q468_permutation_test" -> q468Oracle,
-    "q469_mcnemar" -> q469Oracle,
-    "q470_borda_count" -> q470Oracle,
-    "q471_roc_auc" -> q471Oracle,
-    "q472_mde_planner" -> q472Oracle,
-    "q473_wilson_leaderboard" -> q473Oracle,
-    "q474_grpo_advantage" -> q474Oracle,
-    "q475_best_of_n" -> q475Oracle,
-    "q476_position_bias" -> q476Oracle,
-    "q477_online_elo" -> q477Oracle,
-  )
 }

@@ -1119,37 +1119,31 @@ object Graph extends graft.QueryModule {
        LEFT JOIN ks ON g.dmin = ks.dmin
        ORDER BY g.dmin"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q385_powerlaw_fit" -> q385PowerlawFit,
-    "q375_exposure_map" -> q375ExposureMap,
-    "q355_rec_eval" -> q355RecEval,
-    "q341_modularity" -> q341Modularity,
-    "q319_adamic_adar" -> q319AdamicAdar,
-    "q320_label_prop" -> q320LabelProp,
-    "q278_kcore_peel" -> q278KcorePeel,
-    "q237_pagerank_loop" -> q237PagerankLoop,
-    "q239_hits_step" -> q239HitsStep,
-    "q179_assortativity" -> q179Assortativity,
-    "q157_copurchase" -> q157CoPurchase,
-    "q150_bfs_hops" -> q150BfsHops,
-    "q82_pagerank_step" -> q82PagerankStep,
-    "q116_triangles" -> q116Triangles,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q375_exposure_map" -> q375Oracle,
-    "q385_powerlaw_fit" -> q385Oracle,
-    "q355_rec_eval" -> q355Oracle,
-    "q341_modularity" -> q341Oracle,
-    "q319_adamic_adar" -> q319Oracle,
-    "q320_label_prop" -> q320Oracle,
-    "q278_kcore_peel" -> q278Oracle,
-    "q237_pagerank_loop" -> q237Oracle,
-    "q239_hits_step" -> q239Oracle,
-    "q179_assortativity" -> q179Oracle,
-    "q157_copurchase" -> q157Oracle,
-    "q150_bfs_hops" -> q150Oracle,
-    "q82_pagerank_step" -> q82Oracle,
-    "q116_triangles" -> q116Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      // -1 is the too-few-points sentinel; KS statistic itself <= 1
+      Query("q385_powerlaw_fit", q385PowerlawFit, q385Oracle,
+        Hooks(nonEmpty,
+          range("CASE WHEN ks_milli >= 0 THEN ks_milli END", 0, 1000))),
+      Query("q375_exposure_map", q375ExposureMap, q375Oracle, NoBound(Structural)),
+      Query("q355_rec_eval", q355RecEval, q355Oracle,
+        Hooks(nonEmpty, range("model_p_bp", 0, 10000), range("base_p_bp", 0, 10000))),
+      Query("q341_modularity", q341Modularity, q341Oracle,
+        Hooks(nonEmpty, range("q_micro", -1000000, 1000000), range("modularity_micro", -1000000, 1000000))),
+      Query("q319_adamic_adar", q319AdamicAdar, q319Oracle, NoBound("AA index unbounded above")),
+      Query("q320_label_prop", q320LabelProp, q320Oracle, NoBound(Structural)),
+      Query("q278_kcore_peel", q278KcorePeel, q278Oracle, NoBound(Structural)),
+      Query("q237_pagerank_loop", q237PagerankLoop, q237Oracle, NoBound(Structural)),
+      Query("q239_hits_step", q239HitsStep, q239Oracle, NoBound(Structural)),
+      Query("q179_assortativity", q179Assortativity, q179Oracle,
+        Hooks(nonEmpty, range("r_bp", -10000, 10000))),
+      Query("q157_copurchase", q157CoPurchase, q157Oracle, NoBound(Structural)),
+      Query("q150_bfs_hops", q150BfsHops, q150Oracle, NoBound(Structural)),
+      Query("q82_pagerank_step", q82PagerankStep, q82Oracle,
+        NoBound("rank mass sums to n*1e6 (dynamic row count)")),
+      Query("q116_triangles", q116Triangles, q116Oracle,
+        Hooks(nonEmpty, range("gcc_ppm", 0, 1000000))),
+    )
+  }
 }

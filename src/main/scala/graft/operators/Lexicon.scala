@@ -1108,35 +1108,34 @@ object Lexicon extends graft.QueryModule {
          CAST(sum(CAST(floor(ln(den * 1.0 / num) * 1000000.0) AS BIGINT)) // count(*) AS BIGINT) AS avg_micro
        FROM terms GROUP BY l4 ORDER BY lambda_milli"""
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q324_vocab_coverage" -> q324VocabCoverage,
-    "q396_lm_interpolation" -> q396LmInterpolation,
-    "q334_negative_sampling" -> q334NegativeSampling,
-    "q350_stopword_discovery" -> q350StopwordDiscovery,
-    "q317_unigram_viterbi" -> q317UnigramViterbi,
-    "q280_bpe_merge_loop" -> q280BpeMergeLoop,
-    "q281_neyman_allocation" -> q281NeymanAllocation,
-    "q282_rouge_pairs" -> q282RougePairs,
-    "q283_jsd_slices" -> q283JsdSlices,
-    "q284_bpe_fertility" -> q284BpeFertility,
-    "q285_good_turing" -> q285GoodTuring,
-    "q286_dup_span_coverage" -> q286DupSpanCoverage,
-    "q287_pmi_collocations" -> q287PmiCollocations,
-  )
-
-  def oracles: Map[String, String] = Map(
-    "q324_vocab_coverage" -> q324Oracle,
-    "q396_lm_interpolation" -> q396Oracle,
-    "q334_negative_sampling" -> q334Oracle,
-    "q350_stopword_discovery" -> q350Oracle,
-    "q317_unigram_viterbi" -> q317Oracle,
-    "q280_bpe_merge_loop" -> q280Oracle,
-    "q281_neyman_allocation" -> q281Oracle,
-    "q282_rouge_pairs" -> q282Oracle,
-    "q283_jsd_slices" -> q283Oracle,
-    "q284_bpe_fertility" -> q284Oracle,
-    "q285_good_turing" -> q285Oracle,
-    "q286_dup_span_coverage" -> q286Oracle,
-    "q287_pmi_collocations" -> q287Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q324_vocab_coverage", q324VocabCoverage, q324Oracle,
+        Hooks(nonEmpty, range("cov_bp", 0, 10000))),
+      Query("q396_lm_interpolation", q396LmInterpolation, q396Oracle,
+        Hooks(nonEmpty, range("lambda_milli", 0, 1000))),
+      Query("q334_negative_sampling", q334NegativeSampling, q334Oracle,
+        Hooks(nonEmpty, range("share_ppm", 0, 1000000), range("unigram_ppm", 0, 1000000))),
+      Query("q350_stopword_discovery", q350StopwordDiscovery, q350Oracle,
+        Hooks(nonEmpty, range("df_bp", 0, 10000))),
+      Query("q317_unigram_viterbi", q317UnigramViterbi, q317Oracle,
+        NoBound("Viterbi path cost unbounded (grows with length)")),
+      Query("q280_bpe_merge_loop", q280BpeMergeLoop, q280Oracle, NoBound(Structural)),
+      Query("q281_neyman_allocation", q281NeymanAllocation, q281Oracle, NoBound(Structural)),
+      Query("q282_rouge_pairs", q282RougePairs, q282Oracle,
+        Hooks(nonEmpty, range("p_bp", 0, 10000), range("r_bp", 0, 10000), range("f1_bp", 0, 10000))),
+      Query("q283_jsd_slices", q283JsdSlices, q283Oracle,
+        Hooks(nonEmpty, range("jsd_micro", 0, 1000000))),
+      // BPE leaves every word >= 1 subtoken
+      Query("q284_bpe_fertility", q284BpeFertility, q284Oracle,
+        Hooks(nonEmpty, atLeast("fertility_bp", 10000))),
+      Query("q285_good_turing", q285GoodTuring, q285Oracle,
+        Hooks(nonEmpty, range("p0_bp", 0, 10000))),
+      Query("q286_dup_span_coverage", q286DupSpanCoverage, q286Oracle,
+        Hooks(nonEmpty, range("dup_bp", 0, 10000))),
+      Query("q287_pmi_collocations", q287PmiCollocations, q287Oracle,
+        NoBound("PMI unbounded both sides")),
+    )
+  }
 }

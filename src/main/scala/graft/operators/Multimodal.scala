@@ -339,16 +339,13 @@ object Multimodal extends graft.QueryModule {
        FROM cum GROUP BY source, (cum - total_seq) // 8192
        ORDER BY source, bin_id"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q50_multimodal_meta" -> q50MultimodalMeta,
-    "q51_frame_sample" -> q51FrameSample,
-    "q97_mm_budget" -> q97MmBudget,
-    "q104_mm_packing" -> q104MmPacking,
-  )
-  val oracles: Map[String, String] = Map(
-    "q50_multimodal_meta" -> q50Oracle,
-    "q51_frame_sample" -> q51Oracle,
-    "q97_mm_budget" -> q97Oracle,
-    "q104_mm_packing" -> q104Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q50_multimodal_meta", q50MultimodalMeta, q50Oracle, NoBound(Structural)),
+      Query("q51_frame_sample", q51FrameSample, q51Oracle, NoBound(Structural)),
+      Query("q97_mm_budget", q97MmBudget, q97Oracle, NoBound(Structural)),
+      Query("q104_mm_packing", q104MmPacking, q104Oracle, NoBound(Structural)),
+    )
+  }
 }

@@ -298,17 +298,15 @@ object Parity extends graft.QueryModule {
     coalesce(d.referee_matchhistdetails, '{}') AS referee_matchhistdetails
   FROM withhist w LEFT JOIN det d USING (matchlink)"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q186_dsv2_schedule" -> q186Dsv2Schedule,
-    "q60_team_pipeline" -> q60TeamPipeline,
-    "q61_ref_pipeline" -> q61RefPipeline,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q186_dsv2_schedule", q186Dsv2Schedule, q186Oracle, NoBound(Structural)),
+      Query("q60_team_pipeline", q60TeamPipeline, q60Oracle, NoBound(Structural)),
+      Query("q61_ref_pipeline", q61RefPipeline, q61Oracle, NoBound(Structural)),
+    )
+  }
 
   /** q186's connector rows are SQL-regenerable; q60/q61 recompute the
     * fixture pipelines from inline VALUES (see object scaladoc). */
-  val oracles: Map[String, String] = Map(
-    "q186_dsv2_schedule" -> q186Oracle,
-    "q60_team_pipeline" -> q60Oracle,
-    "q61_ref_pipeline" -> q61Oracle,
-  )
 }

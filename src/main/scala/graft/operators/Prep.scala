@@ -2436,67 +2436,60 @@ object Prep extends graft.QueryModule {
        FROM msel
        ORDER BY layout, span_days"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q463_mor_cow_planner" -> q463MorCowPlanner,
-    "q464_partition_pruning" -> q464PartitionPruning,
-    "q461_replica_placement" -> q461ReplicaPlacement,
-    "q453_join_order_advisor" -> q453JoinOrderAdvisor,
-    "q454_histogram_shootout" -> q454HistogramShootout,
-    "q455_sampling_audit" -> q455SamplingAudit,
-    "q456_ivm_advisor" -> q456IvmAdvisor,
-    "q442_bucketing_advisor" -> q442BucketingAdvisor,
-    "q443_skew_split_sim" -> q443SkewSplitSim,
-    "q449_consistent_hashing" -> q449ConsistentHashing,
-    "q450_selectivity_audit" -> q450SelectivityAudit,
-    "q437_range_sample_audit" -> q437RangeSampleAudit,
-    "q426_runtime_filter_roi" -> q426RuntimeFilterRoi,
-    "q425_predicate_order" -> q425PredicateOrder,
-    "q415_lsm_planner" -> q415LsmPlanner,
-    "q416_view_advisor" -> q416ViewAdvisor,
-    "q417_join_card_audit" -> q417JoinCardAudit,
-    "q401_encoding_advisor" -> q401EncodingAdvisor,
-    "q381_pit_training_set" -> q381PitTrainingSet,
-    "q360_pit_leakage_delta" -> q360PitLeakageDelta,
-    "q169_quantile_norm" -> q169QuantileNorm,
-    "q169b_quantile_norm_digest" -> q169bQuantileNormDigest,
-    "q161_power_iter" -> q161PowerIter,
-    "q131_cdc_chunks" -> q131CdcChunks,
-    "q91_doc_chunks" -> q91DocChunks,
-    "q92_pii_scrub" -> q92PiiScrub,
-    "q93_quality_bins" -> q93QualityBins,
-    "q299_chimerge" -> q299ChiMerge,
-    "q94_dim_standardize" -> q94DimStandardize,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q463_mor_cow_planner" -> q463Oracle,
-    "q464_partition_pruning" -> q464Oracle,
-    "q461_replica_placement" -> q461Oracle,
-    "q453_join_order_advisor" -> q453Oracle,
-    "q454_histogram_shootout" -> q454Oracle,
-    "q455_sampling_audit" -> q455Oracle,
-    "q456_ivm_advisor" -> q456Oracle,
-    "q442_bucketing_advisor" -> q442Oracle,
-    "q443_skew_split_sim" -> q443Oracle,
-    "q449_consistent_hashing" -> q449Oracle,
-    "q450_selectivity_audit" -> q450Oracle,
-    "q437_range_sample_audit" -> q437Oracle,
-    "q426_runtime_filter_roi" -> q426Oracle,
-    "q425_predicate_order" -> q425Oracle,
-    "q415_lsm_planner" -> q415Oracle,
-    "q416_view_advisor" -> q416Oracle,
-    "q417_join_card_audit" -> q417Oracle,
-    "q401_encoding_advisor" -> q401Oracle,
-    "q381_pit_training_set" -> q381Oracle,
-    "q360_pit_leakage_delta" -> q360Oracle,
-    "q169_quantile_norm" -> q169Oracle,
-    "q169b_quantile_norm_digest" -> q169bOracle,
-    "q161_power_iter" -> q161Oracle,
-    "q131_cdc_chunks" -> q131Oracle,
-    "q91_doc_chunks" -> q91Oracle,
-    "q92_pii_scrub" -> q92Oracle,
-    "q93_quality_bins" -> q93Oracle,
-    "q299_chimerge" -> q299Oracle,
-    "q94_dim_standardize" -> q94Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q463_mor_cow_planner", q463MorCowPlanner, q463Oracle,
+        Hooks(nonEmpty, atLeast("read_amp_milli", 1000),
+          atLeast("write_amp_milli", 1000))),
+      Query("q464_partition_pruning", q464PartitionPruning, q464Oracle,
+        Hooks(nonEmpty, range("scan_bp", 0, 10000))),
+      Query("q461_replica_placement", q461ReplicaPlacement, q461Oracle,
+        Hooks(nonEmpty, range("rack_diverse3_bp", 0, 10000), range("rack_diverse2_bp", 0, 10000), range("worst_rack_unavail_bp", 0, 10000))),
+      Query("q453_join_order_advisor", q453JoinOrderAdvisor, q453Oracle, NoBound(Structural)),
+      Query("q454_histogram_shootout", q454HistogramShootout, q454Oracle,
+        Hooks(nonEmpty,
+          atLeast("qerr_ew_milli", 1000), atLeast("qerr_ed_milli", 1000))),
+      Query("q455_sampling_audit", q455SamplingAudit, q455Oracle,
+        NoBound("estimator error unbounded above")),
+      Query("q456_ivm_advisor", q456IvmAdvisor, q456Oracle,
+        NoBound("maintenance gain ratio unbounded")),
+      Query("q442_bucketing_advisor", q442BucketingAdvisor, q442Oracle, NoBound(Structural)),
+      Query("q443_skew_split_sim", q443SkewSplitSim, q443Oracle,
+        Hooks(nonEmpty, atLeast("skew_milli", 1000),
+          atLeast("speedup_milli", 1000))),
+      Query("q449_consistent_hashing", q449ConsistentHashing, q449Oracle,
+        Hooks(nonEmpty, range("moved_bp", 0, 10000), range("expected_move_bp", 0, 10000), range("max4_bp", 0, 10000), range("min4_bp", 0, 10000), range("max5_bp", 0, 10000), range("min5_bp", 0, 10000))),
+      Query("q450_selectivity_audit", q450SelectivityAudit, q450Oracle,
+        Hooks(nonEmpty, atLeast("q_error_milli", 1000))),
+      Query("q437_range_sample_audit", q437RangeSampleAudit, q437Oracle,
+        Hooks(nonEmpty, atLeast("skew_bp", 10000))),
+      Query("q426_runtime_filter_roi", q426RuntimeFilterRoi, q426Oracle,
+        Hooks(nonEmpty, range("fpp_ppm", 0, 1000000), range("reduction_bp", 0, 10000))),
+      Query("q425_predicate_order", q425PredicateOrder, q425Oracle,
+        Hooks(nonEmpty, atLeast("regret_bp", 0))),
+      Query("q415_lsm_planner", q415LsmPlanner, q415Oracle,
+        NoBound("space ratios unbounded above")),
+      Query("q416_view_advisor", q416ViewAdvisor, q416Oracle,
+        NoBound("density ratio unbounded above")),
+      Query("q417_join_card_audit", q417JoinCardAudit, q417Oracle,
+        NoBound("q-error floor 0 by its log form - unbounded above")),
+      Query("q401_encoding_advisor", q401EncodingAdvisor, q401Oracle, NoBound(Structural)),
+      Query("q381_pit_training_set", q381PitTrainingSet, q381Oracle, NoBound(Structural)),
+      Query("q360_pit_leakage_delta", q360PitLeakageDelta, q360Oracle,
+        Hooks(nonEmpty, range("r_pit_bp", -10000, 10000), range("r_leaky_bp", -10000, 10000))),
+      Query("q169_quantile_norm", q169QuantileNorm, q169Oracle, NoBound(Structural)),
+      Query("q169b_quantile_norm_digest", q169bQuantileNormDigest, q169bOracle,
+        Hooks(nonEmpty, range("phi_bp", 0, 10000))),
+      Query("q161_power_iter", q161PowerIter, q161Oracle, NoBound(Structural)),
+      Query("q131_cdc_chunks", q131CdcChunks, q131Oracle,
+        Hooks(nonEmpty, range("dup_permille", 0, 1000))),
+      Query("q91_doc_chunks", q91DocChunks, q91Oracle, NoBound(Structural)),
+      Query("q92_pii_scrub", q92PiiScrub, q92Oracle, NoBound(Structural)),
+      Query("q93_quality_bins", q93QualityBins, q93Oracle, NoBound(Structural)),
+      Query("q299_chimerge", q299ChiMerge, q299Oracle,
+        Hooks(nonEmpty, range("rate_micro", 0, 1000000))),
+      Query("q94_dim_standardize", q94DimStandardize, q94Oracle, NoBound(Structural)),
+    )
+  }
 }

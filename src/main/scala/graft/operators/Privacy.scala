@@ -340,17 +340,17 @@ object Privacy extends graft.QueryModule {
        FROM clip, (SELECT unnest([1, 2, 8]) AS eps) g
        ORDER BY metric, eps"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q459_dp_sensitivity" -> q459DpSensitivity,
-    "q447_k_anonymity" -> q447KAnonymity,
-    "q448_generalization_ladder" -> q448GeneralizationLadder,
-    "q452_deletion_cost" -> q452DeletionCost,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q459_dp_sensitivity" -> q459Oracle,
-    "q447_k_anonymity" -> q447Oracle,
-    "q448_generalization_ladder" -> q448Oracle,
-    "q452_deletion_cost" -> q452Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q459_dp_sensitivity", q459DpSensitivity, q459Oracle,
+        Hooks(nonEmpty, range("clipped_mass_bp", 0, 10000))),
+      Query("q447_k_anonymity", q447KAnonymity, q447Oracle,
+        Hooks(nonEmpty, range("risk_bp", 0, 10000))),
+      Query("q448_generalization_ladder", q448GeneralizationLadder, q448Oracle,
+        Hooks(nonEmpty, range("below_k5_bp", 0, 10000))),
+      Query("q452_deletion_cost", q452DeletionCost, q452Oracle,
+        NoBound("mean cost cents - money scale")),
+    )
+  }
 }

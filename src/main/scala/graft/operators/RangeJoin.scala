@@ -354,17 +354,13 @@ object RangeJoin extends graft.QueryModule {
        FROM bucketed JOIN part ON p = p_partkey
        GROUP BY 1, 2 ORDER BY 1, 2"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q246_inventory_aging" -> q246InventoryAging,
-    "q241_fifo_allocation" -> q241FifoAllocation,
-    "q172_interval_overlap" -> q172IntervalOverlap,
-    "q64_range_join" -> q64RangeJoin,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q246_inventory_aging" -> q246Oracle,
-    "q241_fifo_allocation" -> q241Oracle,
-    "q172_interval_overlap" -> q172Oracle,
-    "q64_range_join" -> q64Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q246_inventory_aging", q246InventoryAging, q246Oracle, NoBound(Structural)),
+      Query("q241_fifo_allocation", q241FifoAllocation, q241Oracle, NoBound(Structural)),
+      Query("q172_interval_overlap", q172IntervalOverlap, q172Oracle, NoBound(Structural)),
+      Query("q64_range_join", q64RangeJoin, q64Oracle, NoBound(Structural)),
+    )
+  }
 }

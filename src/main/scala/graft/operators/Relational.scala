@@ -1340,67 +1340,42 @@ object Relational extends graft.QueryModule {
          FROM orders GROUP BY 1)
        ORDER BY t DESC, o_custkey LIMIT 10"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q405_topk_ivm" -> q405TopkIvm,
-    "q266_abc_classification" -> q266AbcClassification,
-    "q257_join_ivm" -> q257JoinIvm,
-    "q203_price_index" -> q203PriceIndex,
-    "q191_null_aware_anti" -> q191NullAwareAnti,
-    "q187_bag_set_ops" -> q187BagSetOps,
-    "q168_division_profile" -> q168DivisionProfile,
-    "q163_table_fingerprint" -> q163TableFingerprint,
-    "q158_star_revenue" -> q158StarRevenue,
-    "q154_null_semantics" -> q154NullSemantics,
-    "q178_lateral" -> q178Lateral,
-    "q151_subqueries" -> q151Subqueries,
-    "q110_sql_surface" -> q110SqlSurface,
-    "q108_snapshot_diff" -> q108SnapshotDiff,
-    "q103_incremental_agg" -> q103IncrementalAgg,
-    "q298_retraction_ivm" -> q298RetractionIvm,
-    "q304_deletion_debt" -> q304DeletionDebt,
-    "q305_merkle_diff" -> q305MerkleDiff,
-    "q87_salted_join" -> q87SaltedJoin,
-    "q09_global_topk" -> q09GlobalTopK,
-    "q09b_set_ops" -> q09bSetOps,
-    "q01_pricing_summary" -> q01PricingSummary,
-    "q02_date_window" -> q02DateWindow,
-    "q03_segment_revenue" -> q03SegmentRevenue,
-    "q04_region_stats" -> q04RegionStats,
-    "q05_left_join_coalesce" -> q05LeftJoinCoalesce,
-    "q06_semi_join" -> q06SemiJoin,
-    "q07_anti_join" -> q07AntiJoin,
-    "q08_union_salvage" -> q08UnionSalvage,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q405_topk_ivm" -> q405Oracle,
-    "q266_abc_classification" -> q266Oracle,
-    "q257_join_ivm" -> q257Oracle,
-    "q203_price_index" -> q203Oracle,
-    "q191_null_aware_anti" -> q191Oracle,
-    "q187_bag_set_ops" -> q187Oracle,
-    "q168_division_profile" -> q168Oracle,
-    "q163_table_fingerprint" -> q163Oracle,
-    "q158_star_revenue" -> q158Oracle,
-    "q154_null_semantics" -> q154Oracle,
-    "q178_lateral" -> q178Oracle,
-    "q151_subqueries" -> q151Oracle,
-    "q110_sql_surface" -> q110Oracle,
-    "q108_snapshot_diff" -> q108Oracle,
-    "q103_incremental_agg" -> q103Oracle,
-    "q298_retraction_ivm" -> q298Oracle,
-    "q304_deletion_debt" -> q304Oracle,
-    "q305_merkle_diff" -> q305Oracle,
-    "q87_salted_join" -> q87Oracle,
-    "q09_global_topk" -> q09Oracle,
-    "q09b_set_ops" -> q09bOracle,
-    "q01_pricing_summary" -> q01Oracle,
-    "q02_date_window" -> q02Oracle,
-    "q03_segment_revenue" -> q03Oracle,
-    "q04_region_stats" -> q04Oracle,
-    "q05_left_join_coalesce" -> q05Oracle,
-    "q06_semi_join" -> q06Oracle,
-    "q07_anti_join" -> q07Oracle,
-    "q08_union_salvage" -> q08Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q405_topk_ivm", q405TopkIvm, q405Oracle, NoBound(Structural)),
+      Query("q266_abc_classification", q266AbcClassification, q266Oracle,
+        Hooks(nonEmpty, range("rev_share_bp", 0, 10000),
+          // A/B/C partition the revenue: 3 floors lose ≤ 2 bp
+          groupSum(Seq(), "rev_share_bp", 9997, 10000))),
+      Query("q257_join_ivm", q257JoinIvm, q257Oracle, NoBound(Structural)),
+      Query("q203_price_index", q203PriceIndex, q203Oracle,
+        NoBound("price-index ratios unbounded above")),
+      Query("q191_null_aware_anti", q191NullAwareAnti, q191Oracle, NoBound(Structural)),
+      Query("q187_bag_set_ops", q187BagSetOps, q187Oracle, NoBound(Structural)),
+      Query("q168_division_profile", q168DivisionProfile, q168Oracle, NoBound(Structural)),
+      Query("q163_table_fingerprint", q163TableFingerprint, q163Oracle, NoBound(Structural)),
+      Query("q158_star_revenue", q158StarRevenue, q158Oracle, NoBound(Structural)),
+      Query("q154_null_semantics", q154NullSemantics, q154Oracle, NoBound(Structural)),
+      Query("q178_lateral", q178Lateral, q178Oracle, NoBound(Structural)),
+      Query("q151_subqueries", q151Subqueries, q151Oracle, NoBound(Structural)),
+      Query("q110_sql_surface", q110SqlSurface, q110Oracle, NoBound(Structural)),
+      Query("q108_snapshot_diff", q108SnapshotDiff, q108Oracle, NoBound(Structural)),
+      Query("q103_incremental_agg", q103IncrementalAgg, q103Oracle, NoBound(Structural)),
+      Query("q298_retraction_ivm", q298RetractionIvm, q298Oracle, NoBound(Structural)),
+      Query("q304_deletion_debt", q304DeletionDebt, q304Oracle, NoBound(Structural)),
+      Query("q305_merkle_diff", q305MerkleDiff, q305Oracle, NoBound(Structural)),
+      Query("q87_salted_join", q87SaltedJoin, q87Oracle, NoBound(Structural)),
+      Query("q09_global_topk", q09GlobalTopK, q09Oracle, NoBound(Structural)),
+      Query("q09b_set_ops", q09bSetOps, q09bOracle, NoBound(Structural)),
+      Query("q01_pricing_summary", q01PricingSummary, q01Oracle, NoBound(Structural)),
+      Query("q02_date_window", q02DateWindow, q02Oracle, NoBound(Structural)),
+      Query("q03_segment_revenue", q03SegmentRevenue, q03Oracle, NoBound(Structural)),
+      Query("q04_region_stats", q04RegionStats, q04Oracle, NoBound(Structural)),
+      Query("q05_left_join_coalesce", q05LeftJoinCoalesce, q05Oracle, NoBound(Structural)),
+      Query("q06_semi_join", q06SemiJoin, q06Oracle, NoBound(Structural)),
+      Query("q07_anti_join", q07AntiJoin, q07Oracle, NoBound(Structural)),
+      Query("q08_union_salvage", q08UnionSalvage, q08Oracle, NoBound(Structural)),
+    )
+  }
 }

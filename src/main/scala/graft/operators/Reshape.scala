@@ -257,23 +257,17 @@ object Reshape extends graft.QueryModule {
        FROM c JOIN t ON c.source = t.source
        WHERE n >= 3 ORDER BY c.source, c.lang"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q153_map_algebra" -> q153MapAlgebra,
-    "q124_scd2_build" -> q124Scd2Build,
-    "q62_scd_merge" -> q62ScdMerge,
-    "q65_full_outer" -> q65FullOuter,
-    "q66_pivot" -> q66Pivot,
-    "q67_unpivot" -> q67Unpivot,
-    "q68_topk_agg" -> q68TopKAgg,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q153_map_algebra" -> q153Oracle,
-    "q124_scd2_build" -> q124Oracle,
-    "q62_scd_merge" -> q62Oracle,
-    "q65_full_outer" -> q65Oracle,
-    "q66_pivot" -> q66Oracle,
-    "q67_unpivot" -> q67Oracle,
-    "q68_topk_agg" -> q68Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q153_map_algebra", q153MapAlgebra, q153Oracle,
+        Hooks(nonEmpty, range("permille", 0, 1000))),
+      Query("q124_scd2_build", q124Scd2Build, q124Oracle, NoBound(Structural)),
+      Query("q62_scd_merge", q62ScdMerge, q62Oracle, NoBound(Structural)),
+      Query("q65_full_outer", q65FullOuter, q65Oracle, NoBound(Structural)),
+      Query("q66_pivot", q66Pivot, q66Oracle, NoBound(Structural)),
+      Query("q67_unpivot", q67Unpivot, q67Oracle, NoBound(Structural)),
+      Query("q68_topk_agg", q68TopKAgg, q68Oracle, NoBound(Structural)),
+    )
+  }
 }

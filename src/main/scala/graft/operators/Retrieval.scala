@@ -589,21 +589,21 @@ object Retrieval extends graft.QueryModule {
        SELECT d, w, overlap, a_d_bp, term_e10, rbo_e10
        FROM per2 CROSS JOIN tot ORDER BY d"""
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q421_rbo" -> q421RankBiasedOverlap,
-    "q395_bm25_param_sweep" -> q395Bm25ParamSweep,
-    "q344_query_likelihood" -> q344QueryLikelihood,
-    "q98_bm25" -> q98Bm25,
-    "q99_span_dedup" -> q99SpanDedup,
-    "q142_dup_runs" -> q142DupRuns,
-    "q119_rrf_fusion" -> q119RrfFusion)
-
-  def oracles: Map[String, String] = Map(
-    "q421_rbo" -> q421Oracle,
-    "q395_bm25_param_sweep" -> q395Oracle,
-    "q344_query_likelihood" -> q344Oracle,
-    "q98_bm25" -> q98Oracle,
-    "q99_span_dedup" -> q99Oracle,
-    "q142_dup_runs" -> q142Oracle,
-    "q119_rrf_fusion" -> q119Oracle)
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q421_rbo", q421RankBiasedOverlap, q421Oracle,
+        Hooks(nonEmpty, range("a_d_bp", 0, 10000))),
+      Query("q395_bm25_param_sweep", q395Bm25ParamSweep, q395Oracle,
+        Hooks(nonEmpty, range("overlap_bp", 0, 10000))),
+      Query("q344_query_likelihood", q344QueryLikelihood, q344Oracle,
+        NoBound("log-likelihood unbounded below")),
+      Query("q98_bm25", q98Bm25, q98Oracle, NoBound("BM25 score unbounded above")),
+      Query("q99_span_dedup", q99SpanDedup, q99Oracle, Hooks(nonEmpty, range("dup_bp", 0, 10000))),
+      Query("q142_dup_runs", q142DupRuns, q142Oracle, NoBound(Structural)),
+      // RRF with k=60 over two rankers: each term <= 1e6/61
+      Query("q119_rrf_fusion", q119RrfFusion, q119Oracle,
+        Hooks(nonEmpty, range("rrf_micro", 0, 32786))),
+    )
+  }
 }

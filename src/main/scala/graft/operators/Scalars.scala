@@ -336,33 +336,22 @@ object Scalars extends graft.QueryModule {
          CAST(coalesce(sum(code), 0) AS BIGINT) AS code_sum
        FROM x GROUP BY event_type ORDER BY event_type"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q279_variant_extract" -> q279VariantExtract,
-    "q88_array_ops" -> q88ArrayOps,
-    "q10_token_blacklist" -> q10TokenBlacklist,
-    "q11_arity_filter" -> q11ArityFilter,
-    "q12_url_synthesis" -> q12UrlSynthesis,
-    "q13_token_heads" -> q13TokenHeads,
-    "q14_overtime_sum" -> q14OvertimeSum,
-    "q15_keyword_classify" -> q15KeywordClassify,
-    "q16_date_roundtrip" -> q16DateRoundtrip,
-    "q17_token_explode" -> q17TokenExplode,
-    "q18_json_extract" -> q18JsonExtract,
-    "q19_group_collect" -> q19GroupCollect,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q279_variant_extract" -> q279Oracle,
-    "q88_array_ops" -> q88Oracle,
-    "q10_token_blacklist" -> q10Oracle,
-    "q11_arity_filter" -> q11Oracle,
-    "q12_url_synthesis" -> q12Oracle,
-    "q13_token_heads" -> q13Oracle,
-    "q14_overtime_sum" -> q14Oracle,
-    "q15_keyword_classify" -> q15Oracle,
-    "q16_date_roundtrip" -> q16Oracle,
-    "q17_token_explode" -> q17Oracle,
-    "q18_json_extract" -> q18Oracle,
-    "q19_group_collect" -> q19Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q279_variant_extract", q279VariantExtract, q279Oracle, NoBound(Structural)),
+      Query("q88_array_ops", q88ArrayOps, q88Oracle,
+        Hooks(nonEmpty, range("jaccard_bp", 0, 10000))),
+      Query("q10_token_blacklist", q10TokenBlacklist, q10Oracle, NoBound(Structural)),
+      Query("q11_arity_filter", q11ArityFilter, q11Oracle, NoBound(Structural)),
+      Query("q12_url_synthesis", q12UrlSynthesis, q12Oracle, NoBound(Structural)),
+      Query("q13_token_heads", q13TokenHeads, q13Oracle, NoBound(Structural)),
+      Query("q14_overtime_sum", q14OvertimeSum, q14Oracle, NoBound(Structural)),
+      Query("q15_keyword_classify", q15KeywordClassify, q15Oracle, NoBound(Structural)),
+      Query("q16_date_roundtrip", q16DateRoundtrip, q16Oracle, NoBound(Structural)),
+      Query("q17_token_explode", q17TokenExplode, q17Oracle, NoBound(Structural)),
+      Query("q18_json_extract", q18JsonExtract, q18Oracle, NoBound(Structural)),
+      Query("q19_group_collect", q19GroupCollect, q19Oracle, NoBound(Structural)),
+    )
+  }
 }

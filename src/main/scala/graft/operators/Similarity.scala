@@ -2547,7 +2547,7 @@ object Similarity extends graft.QueryModule {
         max(when($"arn" === 2, $"key")).as("key2"))
       .filter($"key2".isNotNull)
     val acq = piv.select($"vec_id", ($"key1" - $"key2").as("margin"), $"key1",
-        expr("((vec_id % 2147483648) * 2654435761) % 4294967296").as("h"))
+        (knuthHash($"vec_id") % lit(4294967296L)).as("h"))
       .localCheckpoint() // three top-50 cuts share one materialization
     val tm = acq.orderBy($"margin", $"vec_id").limit(50).select($"vec_id")
     val tc = acq.orderBy($"key1", $"vec_id").limit(50).select($"vec_id")
@@ -2866,79 +2866,61 @@ object Similarity extends graft.QueryModule {
                 * 10000 // n AS clipped_bp
        FROM err GROUP BY scheme, n, slo, shi ORDER BY scheme"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q458_quant_calibration" -> q458QuantCalibration,
-    "q184_class_weights" -> q184ClassWeights,
-    "q397_late_interaction" -> q397LateInteraction,
-    "q398_ood_calibration" -> q398OodCalibration,
-    "q333_dead_dims" -> q333DeadDims,
-    "q326_acquisition_overlap" -> q326AcquisitionOverlap,
-    "q383_hubness_audit" -> q383HubnessAudit,
-    "q379_context_pack" -> q379ContextPack,
-    "q376_alpha_ndcg" -> q376AlphaNdcg,
-    "q368_mmr_rerank" -> q368MmrRerank,
-    "q273_ambiguity_margin" -> q273AmbiguityMargin,
-    "q269_farthest_first" -> q269FarthestFirst,
-    "q270_jl_audit" -> q270JlAudit,
-    "q271_knn_label_audit" -> q271KnnLabelAudit,
-    "q232_grid_dbscan" -> q232GridDbscan,
-    "q218_quantization_audit" -> q218QuantizationAudit,
-    "q180_ndcg_eval" -> q180NdcgEval,
-    "q165_pq_adc" -> q165PqAdc,
-    "q137_bitext_margin" -> q137BitextMargin,
-    "q132_label_silhouette" -> q132LabelSilhouette,
-    "q133_hard_negatives" -> q133HardNegatives,
-    "q122_pseudo_labels" -> q122PseudoLabels,
-    "q336_bcubed_eval" -> q336BcubedEval,
-    "q340_dim_corr" -> q340DimCorr,
-    "q347_embedding_drift" -> q347EmbeddingDrift,
-    "q105_index_quality" -> q105IndexQuality,
-    "q86_ann_multiprobe" -> q86AnnMultiprobe,
-    "q83_semantic_dedup" -> q83SemanticDedup,
-    "q45_embedding_neardup" -> q45EmbeddingNearDup,
-    "q46_ann_topk" -> q46AnnTopK,
-    "q47_ann_lsh" -> q47AnnLsh,
-    "q48_ann_ivf" -> q48AnnIvf,
-    "q79_kmeans_step" -> q79KmeansStep,
-    "q288_ivf_recall_audit" -> q288IvfRecallAudit,
-    "q292_quant_rank_eval" -> q292QuantRankEval,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q458_quant_calibration" -> q458Oracle,
-    "q184_class_weights" -> q184Oracle,
-    "q397_late_interaction" -> q397Oracle,
-    "q398_ood_calibration" -> q398Oracle,
-    "q333_dead_dims" -> q333Oracle,
-    "q326_acquisition_overlap" -> q326Oracle,
-    "q368_mmr_rerank" -> q368Oracle,
-    "q376_alpha_ndcg" -> q376Oracle,
-    "q379_context_pack" -> q379Oracle,
-    "q383_hubness_audit" -> q383Oracle,
-    "q273_ambiguity_margin" -> q273Oracle,
-    "q269_farthest_first" -> q269Oracle,
-    "q270_jl_audit" -> q270Oracle,
-    "q271_knn_label_audit" -> q271Oracle,
-    "q232_grid_dbscan" -> q232Oracle,
-    "q218_quantization_audit" -> q218Oracle,
-    "q180_ndcg_eval" -> q180Oracle,
-    "q165_pq_adc" -> q165Oracle,
-    "q137_bitext_margin" -> q137Oracle,
-    "q132_label_silhouette" -> q132Oracle,
-    "q133_hard_negatives" -> q133Oracle,
-    "q122_pseudo_labels" -> q122Oracle,
-    "q336_bcubed_eval" -> q336Oracle,
-    "q340_dim_corr" -> q340Oracle,
-    "q347_embedding_drift" -> q347Oracle,
-    "q105_index_quality" -> q105Oracle,
-    "q86_ann_multiprobe" -> q86Oracle,
-    "q83_semantic_dedup" -> q83Oracle,
-    "q45_embedding_neardup" -> q45Oracle,
-    "q46_ann_topk" -> q46Oracle,
-    "q47_ann_lsh" -> q47Oracle,
-    "q48_ann_ivf" -> q48Oracle,
-    "q79_kmeans_step" -> q79Oracle,
-    "q288_ivf_recall_audit" -> q288Oracle,
-    "q292_quant_rank_eval" -> q292Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q458_quant_calibration", q458QuantCalibration, q458Oracle,
+        Hooks(nonEmpty, range("clipped_bp", 0, 10000))),
+      Query("q184_class_weights", q184ClassWeights, q184Oracle,
+        NoBound("inverse frequencies unbounded above")),
+      Query("q397_late_interaction", q397LateInteraction, q397Oracle, NoBound(Structural)),
+      Query("q398_ood_calibration", q398OodCalibration, q398Oracle,
+        Hooks(nonEmpty, range("ood_bp", 0, 10000))),
+      Query("q333_dead_dims", q333DeadDims, q333Oracle, NoBound(Structural)),
+      Query("q326_acquisition_overlap", q326AcquisitionOverlap, q326Oracle,
+        Hooks(nonEmpty, range("overlap_bp", 0, 10000))),
+      Query("q383_hubness_audit", q383HubnessAudit, q383Oracle,
+        NoBound("skewness statistic unbounded")),
+      Query("q379_context_pack", q379ContextPack, q379Oracle,
+        NoBound("relevance mass data-dependent")),
+      Query("q376_alpha_ndcg", q376AlphaNdcg, q376Oracle,
+        Hooks(nonEmpty, range("andcg_rel_bp", 0, 10000), range("andcg_div_bp", 0, 10000), range("ndcg_rel_bp", 0, 10000), range("ndcg_div_bp", 0, 10000))),
+      Query("q368_mmr_rerank", q368MmrRerank, q368Oracle,
+        Hooks(nonEmpty, range("rel_bp", -10000, 10000))),
+      Query("q273_ambiguity_margin", q273AmbiguityMargin, q273Oracle, NoBound(Structural)),
+      Query("q269_farthest_first", q269FarthestFirst, q269Oracle, NoBound(Structural)),
+      Query("q270_jl_audit", q270JlAudit, q270Oracle, NoBound("JL distortion unbounded above")),
+      Query("q271_knn_label_audit", q271KnnLabelAudit, q271Oracle, NoBound(Structural)),
+      Query("q232_grid_dbscan", q232GridDbscan, q232Oracle, NoBound(Structural)),
+      Query("q218_quantization_audit", q218QuantizationAudit, q218Oracle,
+        Hooks(nonEmpty, range("min_cos_bp", -10000, 10000))),
+      Query("q180_ndcg_eval", q180NdcgEval, q180Oracle,
+        Hooks(nonEmpty, range("recall_bp", 0, 10000), range("ndcg_ppm", 0, 1000000))),
+      Query("q165_pq_adc", q165PqAdc, q165Oracle, NoBound(Structural)),
+      Query("q137_bitext_margin", q137BitextMargin, q137Oracle,
+        NoBound("margin ratio unbounded above")),
+      Query("q132_label_silhouette", q132LabelSilhouette, q132Oracle, NoBound(Structural)),
+      Query("q133_hard_negatives", q133HardNegatives, q133Oracle, NoBound(Structural)),
+      Query("q122_pseudo_labels", q122PseudoLabels, q122Oracle,
+        Hooks(nonEmpty, range("purity_bp", 0, 10000))),
+      Query("q336_bcubed_eval", q336BcubedEval, q336Oracle,
+        Hooks(nonEmpty, range("bcubed_p_micro", 0, 1000000), range("bcubed_r_micro", 0, 1000000), range("bcubed_f1_micro", 0, 1000000))),
+      Query("q340_dim_corr", q340DimCorr, q340Oracle,
+        Hooks(nonEmpty, range("rho_bp", -10000, 10000))),
+      Query("q347_embedding_drift", q347EmbeddingDrift, q347Oracle,
+        Hooks(nonEmpty, range("ma_micro", -1000000, 1000000), range("mb_micro", -1000000, 1000000), range("centroid_cos_micro", -1000000, 1000000))),
+      Query("q105_index_quality", q105IndexQuality, q105Oracle, NoBound(Structural)),
+      Query("q86_ann_multiprobe", q86AnnMultiprobe, q86Oracle, NoBound(Structural)),
+      Query("q83_semantic_dedup", q83SemanticDedup, q83Oracle, NoBound(Structural)),
+      Query("q45_embedding_neardup", q45EmbeddingNearDup, q45Oracle, NoBound(Structural)),
+      Query("q46_ann_topk", q46AnnTopK, q46Oracle, NoBound(Structural)),
+      Query("q47_ann_lsh", q47AnnLsh, q47Oracle, NoBound(Structural)),
+      Query("q48_ann_ivf", q48AnnIvf, q48Oracle, NoBound(Structural)),
+      Query("q79_kmeans_step", q79KmeansStep, q79Oracle, NoBound(Structural)),
+      Query("q288_ivf_recall_audit", q288IvfRecallAudit, q288Oracle,
+        Hooks(nonEmpty, range("recall_bp", 0, 10000))),
+      Query("q292_quant_rank_eval", q292QuantRankEval, q292Oracle,
+        Hooks(nonEmpty, range("ap_micro", 0, 1000000))),
+    )
+  }
 }

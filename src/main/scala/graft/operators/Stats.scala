@@ -756,8 +756,7 @@ object Stats extends graft.QueryModule {
     val reps = base
       .select($"pri", $"o_orderkey", $"cents",
         explode(sequence(lit(0), lit(B - 1))).as("b"))
-      .withColumn("u", expr(
-        "((o_orderkey * 37 + b) % 2147483648) * 2654435761 % 4294967296"))
+      .withColumn("u", knuthHash(expr("o_orderkey * 37 + b")) % lit(4294967296L))
       .withColumn("w", expr(weightSql))
       .groupBy($"pri", $"b")
       .agg(sum($"w" * $"cents").as("sc"), sum($"w").as("nw"))
@@ -4722,6 +4721,10 @@ object Stats extends graft.QueryModule {
          CAST(ceil((38416.0 * p_bp * (10000 - p_bp)) / (10000.0 * w_bp * w_bp)) AS BIGINT) AS n_required
        FROM ps CROSS JOIN ws ORDER BY kind, p_bp, w_bp"""
 
+  /** q403's row bound: every prefix moment, Σc·i² with i ≤ 255 the
+    * largest, fits a Long while the row count is at most this. */
+  private val VoptMaxRows: Long = Long.MaxValue / (255L * 255L)
+
   /** V-optimal histogram ROI curve (q403): for k = 1..8 buckets, the
     * minimum total within-bucket SSE achievable when partitioning the
     * order-price distribution (quantized to a 256-bin equi-width
@@ -4735,8 +4738,10 @@ object Stats extends graft.QueryModule {
     * Σc·x² − (Σc·x)² div Σc over exact prefix sums, so the DP
     * compares identical integers on both engines (the square term
     * rides BigInt driver-side, so the int64-headroom bound N·255 <
-    * 3·10⁹ never bites). Scale (r15): one partial-agg pass bins the
-    * fact table to a CONSTANT ≤256-cell histogram, which is fetched to
+    * 3·10⁹ never bites; the Long prefix moments themselves hold up to
+    * [[VoptMaxRows]] orders, a named `require`). Scale (r15): one
+    * partial-agg pass bins the fact table to a CONSTANT ≤256-cell
+    * histogram, which is fetched to
     * the driver (the q437/q454 grid-sized-collect pattern — bounded by
     * construction, independent of fact size) and the prefix moments,
     * 256×257/2 segment costs and all 8 DP levels run as driver
@@ -4756,6 +4761,8 @@ object Stats extends graft.QueryModule {
       .groupBy($"i").agg(count(lit(1)).as("c"))
     val c = new Array[Long](256)
     bins.collect().foreach(r => c(r.getLong(0).toInt) = r.getLong(1))
+    require(c.sum <= VoptMaxRows, s"q403: ${c.sum} orders exceed VoptMaxRows = " +
+      s"$VoptMaxRows, past which the Long prefix moment Σc·i² (i ≤ 255) overflows")
     // prefix moments pn/px/pq over the filled 256-bin histogram
     val pn = new Array[Long](257); val px = new Array[Long](257)
     val pq = new Array[Long](257)
@@ -4980,155 +4987,120 @@ object Stats extends graft.QueryModule {
        FROM est JOIN truth USING (j)
        ORDER BY scheme, j"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q420_histogram_fidelity" -> q420HistogramFidelity,
-    "q410_ams_f2" -> q410AmsF2,
-    "q403_voptimal_hist" -> q403VoptimalHist,
-    "q331_wilson_sample_plan" -> q331WilsonSamplePlan,
-    "q262_anova" -> q262Anova,
-    "q255_funnel_ztest" -> q255FunnelZtest,
-    "q253_elasticity" -> q253Elasticity,
-    "q250_latency_trend" -> q250LatencyTrend,
-    "q244_mix_decomposition" -> q244MixDecomposition,
-    "q245_cuped" -> q245Cuped,
-    "q238_iterative_median" -> q238IterativeMedian,
-    "q231_welch_ttest" -> q231WelchTtest,
-    "q234_mutual_info" -> q234MutualInfo,
-    "q221_ks_test" -> q221KsTest,
-    "q220_hill_tail" -> q220HillTail,
-    "q213_wilson_ci" -> q213WilsonCi,
-    "q209_loo_encoding" -> q209LooEncoding,
-    "q211_gini" -> q211Gini,
-    "q207_woe_iv" -> q207WoeIv,
-    "q206_join_size_est" -> q206JoinSizeEst,
-    "q198_hll_sketch" -> q198HllSketch,
-    "q199_bitmap_overlap" -> q199BitmapOverlap,
-    "q200_trimmed_mean" -> q200TrimmedMean,
-    "q290_power_analysis" -> q290PowerAnalysis,
-    "q367_mde_planner" -> q367MdePlanner,
-    "q374_pass_at_k" -> q374PassAtK,
-    "q378_best_of_n" -> q378BestOfN,
-    "q386_ratio_delta" -> q386RatioDelta,
-    "q387_multiple_testing" -> q387MultipleTesting,
-    "q291_msprt" -> q291Msprt,
-    "q301_meta_analysis" -> q301MetaAnalysis,
-    "q302_srm_sentinel" -> q302SrmSentinel,
-    "q303_cluster_design" -> q303ClusterDesign,
-    "q308_spearman" -> q308Spearman,
-    "q309_qte" -> q309Qte,
-    "q310_mann_kendall" -> q310MannKendall,
-    "q311_fdr_bh" -> q311FdrBh,
-    "q312_did" -> q312Did,
-    "q318_changepoint" -> q318Changepoint,
-    "q322_ols_regression" -> q322OlsRegression,
-    "q323_propensity_strata" -> q323PropensityStrata,
-    "q338_james_stein" -> q338JamesStein,
-    "q339_qini" -> q339Qini,
-    "q342_ucb1" -> q342Ucb1,
-    "q345_theil" -> q345Theil,
-    "q346_jackknife" -> q346Jackknife,
-    "q348_dispersion" -> q348Dispersion,
-    "q349_smd_balance" -> q349SmdBalance,
-    "q352_kendall_tau" -> q352KendallTau,
-    "q353_auc_se" -> q353AucSe,
-    "q359_dkw_planner" -> q359DkwPlanner,
-    "q197_weighted_median" -> q197WeightedMedian,
-    "q194_rank_sum" -> q194RankSum,
-    "q177_acf" -> q177Acf,
-    "q171_benford" -> q171Benford,
-    "q167_poisson_bootstrap" -> q167PoissonBootstrap,
-    "q162_median_of_medians" -> q162MedianOfMedians,
-    "q155_kmv_jaccard" -> q155KmvJaccard,
-    "q149_qdigest_quantiles" -> q149QdigestQuantiles,
-    "q148_kmv_union" -> q148KmvUnion,
-    "q147_kmv_distinct" -> q147KmvDistinct,
-    "q146_grouping_sets" -> q146GroupingSets,
-    "q138_mad_outliers" -> q138MadOutliers,
-    "q127_count_min" -> q127CountMin,
-    "q100_heavy_hitters" -> q100HeavyHitters,
-    "q89_histogram" -> q89Histogram,
-    "q80_stats_family" -> q80StatsFamily,
-    "q54_approx_percentile" -> q54ApproxPercentile,
-    "q55_cube" -> q55Cube,
-    "q56_distinct_stats" -> q56DistinctStats,
-    "q57_percentiles" -> q57Percentiles,
-    "q58_approx_distinct" -> q58ApproxDistinct,
-    "q59_salted_agg" -> q59SaltedAgg,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q403_voptimal_hist" -> q403Oracle,
-    "q331_wilson_sample_plan" -> q331Oracle,
-    "q262_anova" -> q262Oracle,
-    "q255_funnel_ztest" -> q255Oracle,
-    "q253_elasticity" -> q253Oracle,
-    "q250_latency_trend" -> q250Oracle,
-    "q244_mix_decomposition" -> q244Oracle,
-    "q245_cuped" -> q245Oracle,
-    "q238_iterative_median" -> q238Oracle,
-    "q231_welch_ttest" -> q231Oracle,
-    "q234_mutual_info" -> q234Oracle,
-    "q221_ks_test" -> q221Oracle,
-    "q220_hill_tail" -> q220Oracle,
-    "q213_wilson_ci" -> q213Oracle,
-    "q209_loo_encoding" -> q209Oracle,
-    "q211_gini" -> q211Oracle,
-    "q207_woe_iv" -> q207Oracle,
-    "q206_join_size_est" -> q206Oracle,
-    "q198_hll_sketch" -> q198Oracle,
-    "q199_bitmap_overlap" -> q199Oracle,
-    "q200_trimmed_mean" -> q200Oracle,
-    "q290_power_analysis" -> q290Oracle,
-    "q367_mde_planner" -> q367Oracle,
-    "q374_pass_at_k" -> q374Oracle,
-    "q378_best_of_n" -> q378Oracle,
-    "q410_ams_f2" -> q410Oracle,
-    "q420_histogram_fidelity" -> q420Oracle,
-    "q386_ratio_delta" -> q386Oracle,
-    "q387_multiple_testing" -> q387Oracle,
-    "q291_msprt" -> q291Oracle,
-    "q301_meta_analysis" -> q301Oracle,
-    "q302_srm_sentinel" -> q302Oracle,
-    "q303_cluster_design" -> q303Oracle,
-    "q308_spearman" -> q308Oracle,
-    "q309_qte" -> q309Oracle,
-    "q310_mann_kendall" -> q310Oracle,
-    "q311_fdr_bh" -> q311Oracle,
-    "q312_did" -> q312Oracle,
-    "q318_changepoint" -> q318Oracle,
-    "q322_ols_regression" -> q322Oracle,
-    "q323_propensity_strata" -> q323Oracle,
-    "q338_james_stein" -> q338Oracle,
-    "q339_qini" -> q339Oracle,
-    "q342_ucb1" -> q342Oracle,
-    "q345_theil" -> q345Oracle,
-    "q346_jackknife" -> q346Oracle,
-    "q348_dispersion" -> q348Oracle,
-    "q349_smd_balance" -> q349Oracle,
-    "q352_kendall_tau" -> q352Oracle,
-    "q353_auc_se" -> q353Oracle,
-    "q359_dkw_planner" -> q359Oracle,
-    "q197_weighted_median" -> q197Oracle,
-    "q194_rank_sum" -> q194Oracle,
-    "q177_acf" -> q177Oracle,
-    "q171_benford" -> q171Oracle,
-    "q167_poisson_bootstrap" -> q167Oracle,
-    "q162_median_of_medians" -> q162Oracle,
-    "q155_kmv_jaccard" -> q155Oracle,
-    "q149_qdigest_quantiles" -> q149Oracle,
-    "q148_kmv_union" -> q148Oracle,
-    "q147_kmv_distinct" -> q147Oracle,
-    "q146_grouping_sets" -> q146Oracle,
-    "q138_mad_outliers" -> q138Oracle,
-    "q127_count_min" -> q127Oracle,
-    "q100_heavy_hitters" -> q100Oracle,
-    "q89_histogram" -> q89Oracle,
-    "q80_stats_family" -> q80Oracle,
-    "q54_approx_percentile" -> q54Oracle,
-    "q55_cube" -> q55Oracle,
-    "q56_distinct_stats" -> q56Oracle,
-    "q57_percentiles" -> q57Oracle,
-    "q58_approx_distinct" -> q58Oracle,
-    "q59_salted_agg" -> q59Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q420_histogram_fidelity", q420HistogramFidelity, q420Oracle,
+        NoBound("estimation error unbounded above")),
+      Query("q410_ams_f2", q410AmsF2, q410Oracle, NoBound("sketch error unbounded above")),
+      Query("q403_voptimal_hist", q403VoptimalHist, q403Oracle, NoBound(Structural)),
+      Query("q331_wilson_sample_plan", q331WilsonSamplePlan, q331Oracle,
+        Hooks(nonEmpty, range("p_bp", 0, 10000), range("w_bp", 0, 10000))),
+      Query("q262_anova", q262Anova, q262Oracle, Hooks(nonEmpty, range("eta2_bp", 0, 10000))),
+      Query("q255_funnel_ztest", q255FunnelZtest, q255Oracle,
+        Hooks(nonEmpty, range("rate1_bp", 0, 10000), range("rate2_bp", 0, 10000))),
+      Query("q253_elasticity", q253Elasticity, q253Oracle,
+        Hooks(nonEmpty, range("r_bp", -10000, 10000))),
+      Query("q250_latency_trend", q250LatencyTrend, q250Oracle, NoBound(Structural)),
+      Query("q244_mix_decomposition", q244MixDecomposition, q244Oracle, NoBound(Structural)),
+      Query("q245_cuped", q245Cuped, q245Oracle, Hooks(nonEmpty, range("rho2_bp", 0, 10000))),
+      Query("q238_iterative_median", q238IterativeMedian, q238Oracle, NoBound(Structural)),
+      Query("q231_welch_ttest", q231WelchTtest, q231Oracle, NoBound("t statistic unbounded")),
+      Query("q234_mutual_info", q234MutualInfo, q234Oracle,
+        Hooks(nonEmpty, range("nmi_milli", 0, 1000))),
+      Query("q221_ks_test", q221KsTest, q221Oracle, Hooks(nonEmpty, range("d_bp", 0, 10000))),
+      Query("q220_hill_tail", q220HillTail, q220Oracle,
+        NoBound("fitted tail exponent - data-dependent")),
+      Query("q213_wilson_ci", q213WilsonCi, q213Oracle,
+        Hooks(nonEmpty, range("p_ppm", 0, 1000000), range("lo_ppm", 0, 1000000), range("hi_ppm", 0, 1000000), range("hi_ppm - p_ppm", 0, 1000000), range("p_ppm - lo_ppm", 0, 1000000))),
+      Query("q209_loo_encoding", q209LooEncoding, q209Oracle,
+        NoBound("leave-one-out means in cents - money scale")),
+      Query("q211_gini", q211Gini, q211Oracle, Hooks(nonEmpty, range("gini_bp", 0, 10000))),
+      // per-bin IV contribution (g-b)ln(g/b) has both factors same-sign
+      Query("q207_woe_iv", q207WoeIv, q207Oracle, Hooks(nonEmpty, atLeast("iv_micro", 0))),
+      Query("q206_join_size_est", q206JoinSizeEst, q206Oracle,
+        NoBound("estimation error unbounded above")),
+      Query("q198_hll_sketch", q198HllSketch, q198Oracle, NoBound(Structural)),
+      Query("q199_bitmap_overlap", q199BitmapOverlap, q199Oracle,
+        Hooks(nonEmpty, range("jaccard_bp", 0, 10000))),
+      Query("q200_trimmed_mean", q200TrimmedMean, q200Oracle, NoBound(Structural)),
+      Query("q290_power_analysis", q290PowerAnalysis, q290Oracle,
+        Hooks(nonEmpty, range("p1_ppm", 0, 1000000))),
+      Query("q367_mde_planner", q367MdePlanner, q367Oracle, NoBound(Structural)),
+      Query("q374_pass_at_k", q374PassAtK, q374Oracle,
+        Hooks(nonEmpty, range("mean_pass_micro", 0, 1000000))),
+      Query("q378_best_of_n", q378BestOfN, q378Oracle, NoBound(Structural)),
+      Query("q386_ratio_delta", q386RatioDelta, q386Oracle,
+        NoBound("delta-method ratios/SEs - money scale")),
+      Query("q387_multiple_testing", q387MultipleTesting, q387Oracle,
+        Hooks(nonEmpty, range("p_micro", 0, 1000000))),
+      Query("q291_msprt", q291Msprt, q291Oracle, Hooks(nonEmpty, range("pval_bp", 0, 10000))),
+      Query("q301_meta_analysis", q301MetaAnalysis, q301Oracle,
+        Hooks(nonEmpty, range("i2_bp", 0, 10000))),
+      Query("q302_srm_sentinel", q302SrmSentinel, q302Oracle,
+        NoBound("chi-square unbounded above")),
+      Query("q303_cluster_design", q303ClusterDesign, q303Oracle,
+        Hooks(nonEmpty, range("icc_bp", -10000, 10000))),
+      Query("q308_spearman", q308Spearman, q308Oracle,
+        Hooks(nonEmpty, range("rho_bp", -10000, 10000))),
+      Query("q309_qte", q309Qte, q309Oracle, Hooks(nonEmpty, range("phi_bp", 0, 10000))),
+      Query("q310_mann_kendall", q310MannKendall, q310Oracle, NoBound("z and Sen slope unbounded")),
+      Query("q311_fdr_bh", q311FdrBh, q311Oracle, Hooks(nonEmpty, range("p_micro", 0, 1000000))),
+      Query("q312_did", q312Did, q312Oracle, NoBound("z statistic unbounded")),
+      Query("q318_changepoint", q318Changepoint, q318Oracle,
+        NoBound("between-segment SS in cents^2 - money scale")),
+      Query("q322_ols_regression", q322OlsRegression, q322Oracle,
+        Hooks(nonEmpty, range("r2_bp", 0, 10000))),
+      Query("q323_propensity_strata", q323PropensityStrata, q323Oracle, NoBound(Structural)),
+      // positive-part James–Stein shrinkage: b = max(0, 1 - x), x >= 0
+      Query("q338_james_stein", q338JamesStein, q338Oracle,
+        Hooks(nonEmpty, range("b_milli", 0, 1000))),
+      Query("q339_qini", q339Qini, q339Oracle,
+        Hooks(nonEmpty, range("rate_t_micro", 0, 1000000), range("rate_c_micro", 0, 1000000), range("uplift_micro", -1000000, 1000000))),
+      Query("q342_ucb1", q342Ucb1, q342Oracle, Hooks(nonEmpty, range("mean_micro", 0, 1000000))),
+      Query("q345_theil", q345Theil, q345Oracle, NoBound(Structural)),
+      Query("q346_jackknife", q346Jackknife, q346Oracle,
+        NoBound("variance in cents^2 - money scale")),
+      Query("q348_dispersion", q348Dispersion, q348Oracle, NoBound("VMR/chi unbounded above")),
+      Query("q349_smd_balance", q349SmdBalance, q349Oracle,
+        NoBound("standardized mean diff unbounded")),
+      Query("q352_kendall_tau", q352KendallTau, q352Oracle,
+        Hooks(nonEmpty, range("tau_b_bp", -10000, 10000))),
+      Query("q353_auc_se", q353AucSe, q353Oracle,
+        Hooks(nonEmpty, range("auc_bp", 0, 10000), range("se_bp", 0, 10000))),
+      Query("q359_dkw_planner", q359DkwPlanner, q359Oracle,
+        NoBound("DKW eps<=1 only when n>=4 - data-dependent edge")),
+      Query("q197_weighted_median", q197WeightedMedian, q197Oracle, NoBound(Structural)),
+      Query("q194_rank_sum", q194RankSum, q194Oracle, NoBound(Structural)),
+      Query("q177_acf", q177Acf, q177Oracle, Hooks(nonEmpty, range("acf_bp", -10000, 10000))),
+      Query("q171_benford", q171Benford, q171Oracle,
+        Hooks(nonEmpty, range("observed_ppm", 0, 1000000),
+          range("benford_ppm", 0, 1000000), range("abs_dev_ppm", 0, 1000000),
+          // the 9 theoretical floors are literal constants: Σ = 999995 exactly
+          groupSum(Seq(), "benford_ppm", 999995, 999995),
+          // observed first-digit mass partitions: 9 floors lose ≤ 9 ppm
+          groupSum(Seq(), "observed_ppm", 999991, 1000000))),
+      Query("q167_poisson_bootstrap", q167PoissonBootstrap, q167Oracle,
+        NoBound("bootstrap mean/CI of cents - money scale")),
+      Query("q162_median_of_medians", q162MedianOfMedians, q162Oracle, NoBound(Structural)),
+      Query("q155_kmv_jaccard", q155KmvJaccard, q155Oracle,
+        Hooks(nonEmpty, range("est_jacc_bp", 0, 10000), range("exact_jacc_bp", 0, 10000))),
+      Query("q149_qdigest_quantiles", q149QdigestQuantiles, q149Oracle,
+        Hooks(nonEmpty, range("phi_bp", 0, 10000))),
+      Query("q148_kmv_union", q148KmvUnion, q148Oracle, NoBound(Structural)),
+      Query("q147_kmv_distinct", q147KmvDistinct, q147Oracle, NoBound(Structural)),
+      Query("q146_grouping_sets", q146GroupingSets, q146Oracle, NoBound(Structural)),
+      Query("q138_mad_outliers", q138MadOutliers, q138Oracle, NoBound(Structural)),
+      Query("q127_count_min", q127CountMin, q127Oracle, NoBound(Structural)),
+      Query("q100_heavy_hitters", q100HeavyHitters, q100Oracle, NoBound(Structural)),
+      Query("q89_histogram", q89Histogram, q89Oracle, NoBound(Structural)),
+      Query("q80_stats_family", q80StatsFamily, q80Oracle, NoBound(Structural)),
+      Query("q54_approx_percentile", q54ApproxPercentile, q54Oracle, NoBound(Structural)),
+      Query("q55_cube", q55Cube, q55Oracle, NoBound(Structural)),
+      Query("q56_distinct_stats", q56DistinctStats, q56Oracle, NoBound(Structural)),
+      Query("q57_percentiles", q57Percentiles, q57Oracle, NoBound(Structural)),
+      Query("q58_approx_distinct", q58ApproxDistinct, q58Oracle, NoBound(Structural)),
+      Query("q59_salted_agg", q59SaltedAgg, q59Oracle, NoBound(Structural)),
+    )
+  }
 }

@@ -959,37 +959,39 @@ object TextAnalysis extends graft.QueryModule {
                    THEN 1 ELSE 0 END AS nearest
        FROM pairs ORDER BY src_a, src_b"""
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q424_burrows_delta" -> q424BurrowsDelta,
-    "q413_wasserstein_drift" -> q413WassersteinDrift,
-    "q29_repetition_position" -> q29RepetitionPosition,
-    "q394_positional_drift" -> q394PositionalDrift,
-    "q366_repetition_rules" -> q366RepetitionRules,
-    "q325_span_corruption" -> q325SpanCorruption,
-    "q277_code_switch" -> q277CodeSwitch,
-    "q216_char_entropy" -> q216CharEntropy,
-    "q214_classification_eval" -> q214ClassificationEval,
-    "q152_subtoken_profile" -> q152SubtokenProfile,
-    "q30_token_stats" -> q30TokenStats,
-    "q31_quality_score" -> q31QualityScore,
-    "q32_langid" -> q32LangId,
-    "q33_fingerprint" -> q33Fingerprint,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q424_burrows_delta" -> q424Oracle,
-    "q413_wasserstein_drift" -> q413Oracle,
-    "q29_repetition_position" -> q29Oracle,
-    "q394_positional_drift" -> q394Oracle,
-    "q366_repetition_rules" -> q366Oracle,
-    "q325_span_corruption" -> q325Oracle,
-    "q277_code_switch" -> q277Oracle,
-    "q216_char_entropy" -> q216Oracle,
-    "q214_classification_eval" -> q214Oracle,
-    "q152_subtoken_profile" -> q152Oracle,
-    "q30_token_stats" -> q30Oracle,
-    "q31_quality_score" -> q31Oracle,
-    "q32_langid" -> q32Oracle,
-    "q33_fingerprint" -> q33Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q424_burrows_delta", q424BurrowsDelta, q424Oracle,
+        NoBound("Burrows delta unbounded above")),
+      Query("q413_wasserstein_drift", q413WassersteinDrift, q413Oracle,
+        NoBound("W1 scales with value domain")),
+      Query("q29_repetition_position", q29RepetitionPosition, q29Oracle,
+        Hooks(nonEmpty, range("dup_bp", 0, 10000))),
+      Query("q394_positional_drift", q394PositionalDrift, q394Oracle,
+        Hooks(nonEmpty, range("tvd_bp", 0, 10000))),
+      Query("q366_repetition_rules", q366RepetitionRules, q366Oracle,
+        Hooks(nonEmpty, range("avg_dup2_bp", 0, 10000), range("avg_dup3_bp", 0, 10000), range("avg_top2_bp", 0, 10000))),
+      Query("q325_span_corruption", q325SpanCorruption, q325Oracle,
+        Hooks(nonEmpty,
+          range("corruption_permille", 0, 1000))),
+      Query("q277_code_switch", q277CodeSwitch, q277Oracle, NoBound(Structural)),
+      // [a-z] alphabet: entropy <= ln(26) = 3.258097 micro-nats
+      Query("q216_char_entropy", q216CharEntropy, q216Oracle,
+        Hooks(nonEmpty,
+          range("avg_ent_micro", 0, 3258097), range("min_ent_micro", 0, 3258097),
+          range("max_ent_micro", 0, 3258097),
+          atLeast("avg_ent_micro - min_ent_micro", 0),
+          atLeast("max_ent_micro - avg_ent_micro", 0))),
+      Query("q214_classification_eval", q214ClassificationEval, q214Oracle,
+        Hooks(nonEmpty, range("prec_ppm", 0, 1000000), range("rec_ppm", 0, 1000000), range("f1_ppm", 0, 1000000))),
+      Query("q152_subtoken_profile", q152SubtokenProfile, q152Oracle, NoBound(Structural)),
+      Query("q30_token_stats", q30TokenStats, q30Oracle, NoBound(Structural)),
+      Query("q31_quality_score", q31QualityScore, q31Oracle,
+        Hooks(nonEmpty, range("stop_permille", 0, 1000),
+          range("uniq_permille", 0, 1000))),
+      Query("q32_langid", q32LangId, q32Oracle, NoBound(Structural)),
+      Query("q33_fingerprint", q33Fingerprint, q33Oracle, NoBound(Structural)),
+    )
+  }
 }

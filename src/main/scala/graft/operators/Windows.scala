@@ -19,6 +19,14 @@ import graft.ops.RefOps
   */
 object Windows extends graft.QueryModule {
 
+  /** The ntile closed form as SQL over the columns `rank`, `q` = N div T
+    * and `r` = N mod T: the first r tiles hold q+1 rows, so a rank's
+    * tile is pure integer arithmetic. */
+  private def tileOfRank(rank: String, q: String, r: String): String =
+    s"""CASE WHEN $r > 0 AND $rank <= $r * ($q + 1)
+          THEN ($rank - 1) div ($q + 1) + 1
+          ELSE $r + ($rank - $r * ($q + 1) - 1) div $q + 1 END"""
+
   /** EXACT ntile(nTiles) aggregation WITHOUT a global row sort — the
     * shared engine behind q223's gains deciles and q207's WoE bins.
     * Semantically identical to
@@ -48,12 +56,6 @@ object Windows extends graft.QueryModule {
     val wCum = Window.orderBy(ord)
       .rowsBetween(Window.unboundedPreceding, -1)
     val nTot = hist.agg(sum($"cnt").as("n_all"))
-    // ntile closed form: with q = N div T, r = N mod T, the first r
-    // tiles hold q+1 rows — tile(rank) is pure integer arithmetic
-    def tileSql(rank: String) =
-      s"""CASE WHEN r > 0 AND $rank <= r * (q + 1)
-            THEN ($rank - 1) div (q + 1) + 1
-            ELSE r + ($rank - r * (q + 1) - 1) div q + 1 END"""
     // checkpoint the annotated histogram: it is bounded (≤ |distinct
     // score| rows) and BOTH branches below consume it — without the
     // cut, the inside branch and the straddle broadcast would each
@@ -65,8 +67,8 @@ object Windows extends graft.QueryModule {
       .withColumn("r", expr(s"n_all % $nTiles"))
       .withColumn("lo", $"cumb" + 1)
       .withColumn("hi", $"cumb" + $"cnt")
-      .withColumn("tile_lo", expr(tileSql("lo")))
-      .withColumn("tile_hi", expr(tileSql("hi")))
+      .withColumn("tile_lo", expr(tileOfRank("lo", "q", "r")))
+      .withColumn("tile_hi", expr(tileOfRank("hi", "q", "r")))
       .localCheckpoint()
     val inside = h.filter($"tile_lo" === $"tile_hi")
       .select($"tile_lo".as("tile"), $"cnt".as("n_t"), $"sum_y".as("y_t"))
@@ -80,7 +82,7 @@ object Windows extends graft.QueryModule {
         .select(col(score), $"cumb", $"q", $"r").limit(nTiles)), score)
       .withColumn("rank", $"cumb" + row_number().over(
         Window.partitionBy(col(score)).orderBy(col(tie))))
-      .withColumn("tile", expr(tileSql("rank")))
+      .withColumn("tile", expr(tileOfRank("rank", "q", "r")))
       .groupBy($"tile")
       .agg(count(lit(1)).as("n_t"), sum(col(y)).as("y_t"))
     inside.unionByName(straddle)
@@ -416,14 +418,10 @@ object Windows extends graft.QueryModule {
     // N rides along as the scan's own __total by-product — no second
     // pass over the relation just to count it
     val ranked = rangeScan(rows, order, lit(1L), "__rank", freeze)._1
-    val tileSql =
-      s"""CASE WHEN __r > 0 AND __rank <= __r * (__q + 1)
-            THEN (__rank - 1) div (__q + 1) + 1
-            ELSE __r + (__rank - __r * (__q + 1) - 1) div __q + 1 END"""
     ranked
       .withColumn("__q", expr(s"__total div $nTiles"))
       .withColumn("__r", expr(s"__total % $nTiles"))
-      .withColumn(outCol, expr(tileSql).cast("long"))
+      .withColumn(outCol, expr(tileOfRank("__rank", "__q", "__r")).cast("long"))
       .drop("__rank", "__pt", "__total", "__q", "__r")
   }
 
@@ -1971,73 +1969,49 @@ object Windows extends graft.QueryModule {
       .orderBy($"hour_start")
   }
 
-  val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q335_hourly_quantiles" -> q335HourlyQuantiles,
-    "q321_holt_des" -> q321HoltDes,
-    "q249_forecast_backtest" -> q249ForecastBacktest,
-    "q242_rolling_corr" -> q242RollingCorr,
-    "q240_pit_join" -> q240PitJoin,
-    "q229_anomaly_days" -> q229AnomalyDays,
-    "q225_rate_limit" -> q225RateLimit,
-    "q217_interval_union" -> q217IntervalUnion,
-    "q212_seasonal_decomp" -> q212SeasonalDecomp,
-    "q202_clamped_balance" -> q202ClampedBalance,
-    "q192_centered_ma" -> q192CenteredMa,
-    "q195_cusum" -> q195Cusum,
-    "q183_weekday_seasonality" -> q183WeekdaySeasonality,
-    "q185_yoy_growth" -> q185YoyGrowth,
-    "q170_twap" -> q170Twap,
-    "q166_lateness_audit" -> q166LatenessAudit,
-    "q156_ewma" -> q156Ewma,
-    "q121_anomalies" -> q121Anomalies,
-    "q84_range_frame" -> q84RangeFrame,
-    "q63_asof_join" -> q63AsofJoin,
-    "q20_ffill" -> q20Ffill,
-    "q21_topn_per_group" -> q21TopNPerGroup,
-    "q22_running_segment" -> q22RunningSegment,
-    "q23_sessionize" -> q23Sessionize,
-    "q111_concurrency_sweep" -> q111ConcurrencySweep,
-    "q382_burn_rate" -> q382BurnRate,
-    "q24_hourly_window" -> q24HourlyWindow,
-    "q25_sliding_window" -> q25SlidingWindow,
-    "q26_session_window" -> q26SessionWindow,
-    "q27_rollup" -> q27Rollup,
-    "q28_lag_lead" -> q28LagLead,
-    "q69_window_family" -> q69WindowFamily,
-  )
-
-  val oracles: Map[String, String] = Map(
-    "q249_forecast_backtest" -> q249Oracle,
-    "q242_rolling_corr" -> q242Oracle,
-    "q240_pit_join" -> q240Oracle,
-    "q229_anomaly_days" -> q229Oracle,
-    "q225_rate_limit" -> q225Oracle,
-    "q217_interval_union" -> q217Oracle,
-    "q212_seasonal_decomp" -> q212Oracle,
-    "q202_clamped_balance" -> q202Oracle,
-    "q192_centered_ma" -> q192Oracle,
-    "q195_cusum" -> q195Oracle,
-    "q183_weekday_seasonality" -> q183Oracle,
-    "q185_yoy_growth" -> q185Oracle,
-    "q170_twap" -> q170Oracle,
-    "q166_lateness_audit" -> q166Oracle,
-    "q156_ewma" -> q156Oracle,
-    "q321_holt_des" -> q321Oracle,
-    "q335_hourly_quantiles" -> graft.streaming.EventStreams.q335Oracle,
-    "q121_anomalies" -> q121Oracle,
-    "q84_range_frame" -> q84Oracle,
-    "q63_asof_join" -> q63Oracle,
-    "q20_ffill" -> q20Oracle,
-    "q21_topn_per_group" -> q21Oracle,
-    "q22_running_segment" -> q22Oracle,
-    "q23_sessionize" -> q23Oracle,
-    "q111_concurrency_sweep" -> q111Oracle,
-    "q382_burn_rate" -> q382Oracle,
-    "q24_hourly_window" -> q24Oracle,
-    "q25_sliding_window" -> q25Oracle,
-    "q26_session_window" -> q26Oracle,
-    "q27_rollup" -> q27Oracle,
-    "q28_lag_lead" -> q28Oracle,
-    "q69_window_family" -> q69Oracle,
-  )
+  val queries: Seq[graft.Query] = {
+    import graft.Query, graft.Sanity._
+    Seq(
+      Query("q335_hourly_quantiles", q335HourlyQuantiles, graft.streaming.EventStreams.q335Oracle,
+        NoBound(Structural)),
+      Query("q321_holt_des", q321HoltDes, q321Oracle,
+        NoBound("level/trend/forecasts in cents - money scale")),
+      Query("q249_forecast_backtest", q249ForecastBacktest, q249Oracle,
+        NoBound("MAPE unbounded above")),
+      Query("q242_rolling_corr", q242RollingCorr, q242Oracle,
+        Hooks(nonEmpty, range("r_bp", -10000, 10000))),
+      Query("q240_pit_join", q240PitJoin, q240Oracle, NoBound(Structural)),
+      Query("q229_anomaly_days", q229AnomalyDays, q229Oracle, NoBound(Structural)),
+      Query("q225_rate_limit", q225RateLimit, q225Oracle, NoBound(Structural)),
+      Query("q217_interval_union", q217IntervalUnion, q217Oracle, NoBound(Structural)),
+      Query("q212_seasonal_decomp", q212SeasonalDecomp, q212Oracle,
+        Hooks(nonEmpty, range("var_explained_bp", 0, 10000))),
+      Query("q202_clamped_balance", q202ClampedBalance, q202Oracle, NoBound(Structural)),
+      Query("q192_centered_ma", q192CenteredMa, q192Oracle, NoBound(Structural)),
+      Query("q195_cusum", q195Cusum, q195Oracle, NoBound(Structural)),
+      Query("q183_weekday_seasonality", q183WeekdaySeasonality, q183Oracle,
+        NoBound("seasonality index ~10000, unbounded above")),
+      Query("q185_yoy_growth", q185YoyGrowth, q185Oracle,
+        Hooks(nonEmpty, atLeast("yoy_bp", -10000))),
+      Query("q170_twap", q170Twap, q170Oracle, NoBound("TWAP cents - money scale")),
+      Query("q166_lateness_audit", q166LatenessAudit, q166Oracle, NoBound(Structural)),
+      Query("q156_ewma", q156Ewma, q156Oracle, NoBound("EWMA of cents - money scale")),
+      Query("q121_anomalies", q121Anomalies, q121Oracle, NoBound(Structural)),
+      Query("q84_range_frame", q84RangeFrame, q84Oracle, NoBound(Structural)),
+      Query("q63_asof_join", q63AsofJoin, q63Oracle, NoBound(Structural)),
+      Query("q20_ffill", q20Ffill, q20Oracle, NoBound(Structural)),
+      Query("q21_topn_per_group", q21TopNPerGroup, q21Oracle, NoBound(Structural)),
+      Query("q22_running_segment", q22RunningSegment, q22Oracle, NoBound(Structural)),
+      Query("q23_sessionize", q23Sessionize, q23Oracle, NoBound(Structural)),
+      Query("q111_concurrency_sweep", q111ConcurrencySweep, q111Oracle, NoBound(Structural)),
+      Query("q382_burn_rate", q382BurnRate, q382Oracle, NoBound("burn ratio unbounded above")),
+      Query("q24_hourly_window", q24HourlyWindow, q24Oracle, NoBound(Structural)),
+      Query("q25_sliding_window", q25SlidingWindow, q25Oracle, NoBound(Structural)),
+      Query("q26_session_window", q26SessionWindow, q26Oracle, NoBound(Structural)),
+      Query("q27_rollup", q27Rollup, q27Oracle, NoBound(Structural)),
+      Query("q28_lag_lead", q28LagLead, q28Oracle, NoBound(Structural)),
+      Query("q69_window_family", q69WindowFamily, q69Oracle,
+        Hooks(nonEmpty, range("pr_bp", 0, 10000), range("cd_bp", 0, 10000))),
+    )
+  }
 }

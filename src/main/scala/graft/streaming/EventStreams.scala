@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import org.apache.spark.sql.types._
+import graft.io.Tables
 
 /** Structured Streaming surface (SURVEY.md §2.10 north-star): the
   * events table as a stream — the same hourly windowed aggregation the
@@ -40,27 +41,13 @@ object EventStreams {
     * gets the same actionable error as the batch path. */
   def readEventsStream(s: SparkSession, eventsDir: String,
       oneFilePerTrigger: Boolean = true): DataFrame = {
-    val probed =
-      try s.read.parquet(eventsDir).schema
-      catch {
-        case e: Exception if String.valueOf(e.getMessage).contains("NANOS") =>
-          throw new IllegalStateException(
-            s"$eventsDir carries TIMESTAMP(NANOS); set " +
-              "spark.sql.legacy.parquet.nanosAsLong=true in the " +
-              "SparkSession builder (as graft.Bench.session does)", e)
-      }
+    val probed = Tables.nanosChecked(eventsDir)(s.read.parquet(eventsDir).schema)
     val tsType = probed("ts").dataType
     val schema = StructType(rawSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = tsType) else f))
     val rd0 = s.readStream.schema(schema)
     val rd = if (oneFilePerTrigger) rd0.option("maxFilesPerTrigger", "1") else rd0
-    val raw = rd.parquet(eventsDir)
-    tsType match {
-      // nanos generation: integer division (ns exceed 2^53), then
-      // micros → timestamp — same arithmetic as Tables.events
-      case LongType => raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case _        => raw.withColumn("ts", col("ts").cast(TimestampType))
-    }
+    Tables.eventsTs(rd.parquet(eventsDir))
   }
 
   /** Shared transform: nanos → timestamp, watermark, 1-hour tumbling

@@ -59,15 +59,19 @@ object JudgmentStreams {
     labels.values.groupBy(identity).view.mapValues(_.size).toSeq
       .minBy { case (l, c) => (-c, l) }._1
 
-  /** Default stateful consensus (r13, VERDICT r12 ask #6): the
-    * EVENT-TIME-TTL fold — see [[voteStatefulTtl]], which this
-    * delegates to. State is bounded by the live item set; unbounded
-    * state is the explicit opt-out ([[voteStatefulUnbounded]]). The
-    * timed-row signature is deliberate: choosing the default path
-    * means carrying event time. */
-  def voteStateful(jud: Dataset[TimedJudgmentRow],
-      ttl: java.time.Duration): Dataset[VoteUpdate] =
-    voteStatefulTtl(jud, ttl)
+  /** One microbatch of an item's (rater, label) judgments folded into
+    * its rater map in a deterministic (rater, label) order: each
+    * judgment advances the arrival counter, and a rater's collapsed
+    * label only ever decreases (the batch relation's min-label rule). */
+  private def foldJudgments(labels: Map[Long, String], seq: Long,
+      batch: Seq[(Long, String)]): (Map[Long, String], Long) =
+    batch.sorted.foldLeft((labels, seq)) { case ((ls, n), (rater, label)) =>
+      val collapsed = ls.get(rater) match {
+        case Some(old) if old <= label => old
+        case _ => label
+      }
+      (ls.updated(rater, collapsed), n + 1)
+    }
 
   /** EXPLICIT OPT-OUT of state expiry: each item's rater map is held
     * FOREVER (GroupStateTimeout.NoTimeout), so total state grows with
@@ -85,17 +89,8 @@ object JudgmentStreams {
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
         (item, it: Iterator[JudgmentRow], state: GroupState[VoteState]) =>
           val st = state.getOption.getOrElse(VoteState(Map.empty, 0L))
-          var labels = st.labels
-          var seq = st.seq
-          // deterministic fold order within the microbatch
-          it.toArray.sortBy(r => (r.rater, r.label)).foreach { r =>
-            seq += 1
-            val collapsed = labels.get(r.rater) match {
-              case Some(old) if old <= r.label => old
-              case _ => r.label
-            }
-            labels = labels.updated(r.rater, collapsed)
-          }
+          val (labels, seq) = foldJudgments(st.labels, st.seq,
+            it.map(r => (r.rater, r.label)).toSeq)
           state.update(VoteState(labels, seq))
           Iterator.single(
             VoteUpdate(item, majority(labels), labels.size, seq))
@@ -103,8 +98,9 @@ object JudgmentStreams {
   }
 
   /** The event-time-TTL consensus fold — the DEFAULT since r13
-    * ([[voteStateful]] delegates here; VERDICT r11 ask #5 added the
-    * knob, r12 ask #6 made it the default): items whose labeling window has
+    * (VERDICT r11 ask #5 added the knob, r12 ask #6 made it the
+    * default; unbounded state is the explicit opt-out,
+    * [[voteStatefulUnbounded]]): items whose labeling window has
     * CLOSED — no judgment for `ttl` of event time past the item's last
     * arrival — drop their state instead of holding a rater map forever,
     * so total state is bounded by the LIVE item set, not the item
@@ -140,18 +136,10 @@ object JudgmentStreams {
             Iterator.empty
           } else {
             val st = state.getOption.getOrElse(TimedVoteState(Map.empty, 0L, 0L))
-            var labels = st.labels
-            var seq = st.seq
-            var maxTs = st.maxTsMs
-            it.toArray.sortBy(r => (r.rater, r.label)).foreach { r =>
-              seq += 1
-              maxTs = math.max(maxTs, r.ts.getTime)
-              val collapsed = labels.get(r.rater) match {
-                case Some(old) if old <= r.label => old
-                case _ => r.label
-              }
-              labels = labels.updated(r.rater, collapsed)
-            }
+            val rows = it.toSeq
+            val (labels, seq) = foldJudgments(st.labels, st.seq,
+              rows.map(r => (r.rater, r.label)))
+            val maxTs = rows.foldLeft(st.maxTsMs)((m, r) => math.max(m, r.ts.getTime))
             state.update(TimedVoteState(labels, seq, maxTs))
             // Spark requires the timeout strictly above the watermark;
             // an item whose whole history is already behind it gets the

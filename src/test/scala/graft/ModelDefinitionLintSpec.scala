@@ -31,6 +31,7 @@ class ModelDefinitionLintSpec extends AnyFunSuite {
     Model("signature agreement", """\(x, y\) => x === y\)""", "operators/Dedup.scala"),
     Model("shingle pair join", """col\("a\.doc_id"\)\s*<\s*col\("b\.doc_id"\)""",
       "operators/Dedup.scala"),
+    Model("Knuth multiplicative hash", "2654435761", "functions/Fns.scala"),
   )
 
   /** (model, file) -> extra sites outside the home file. */

@@ -1,29 +1,27 @@
 package graft
 
-/** Contract guards: every oracle key has a query, and every query runs
-  * at sf0.001 and returns rows (a 0-row result would "pass" the oracle
-  * hash compare vacuously — caught once in review, guarded forever).
-  * The every-query test reads [[QuerySweep]], the suite's one sweep
-  * over `SparkEntry.queries`; the shape locks read the same sweep. */
+/** Contract guards: every query name is declared once, and every query
+  * runs at sf0.001 and returns rows (a 0-row result would "pass" the
+  * oracle hash compare vacuously — caught once in review, guarded
+  * forever). The every-query test reads [[QuerySweep]], the suite's one
+  * sweep over `SparkEntry.queries`; the shape locks read the same sweep. */
 class SmokeSpec extends SparkSpec {
 
-  test("every oracle key has a matching query") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracles without queries: $missing")
-  }
-
   test("the module registry names every query and oracle exactly once") {
-    val mods = SparkEntry.modules.map(_._2)
-    // a name reused across two modules would be dropped by the merge
-    assert(mods.map(_.queries.size).sum == SparkEntry.queries.size)
-    assert(mods.map(_.oracles.size).sum == SparkEntry.oracleSql.size)
-    assert(mods.map(_.sanities.size).sum + SanityHooks.hooks.size ==
-      SparkEntry.sanities.size)
-    val owners = SparkEntry.queryModules.toSeq
-      .flatMap { case (m, qs) => qs.map(_ -> m) }.groupBy(_._1)
-    assert(owners.keySet == SparkEntry.queries.keySet)
-    val shared = owners.filter(_._2.size != 1)
-    assert(shared.isEmpty, s"queries in more than one module: $shared")
+    // a record carries its query's oracle and sanity contract, so each
+    // query has exactly one of each by construction; what the types
+    // cannot rule out is a name declared twice (the derived maps'
+    // toMap would silently keep one), a no-bound contract without a
+    // reason, or a hooks contract without a hook
+    val records = SparkEntry.modules.flatMap(_._2.queries)
+    val dups = records.groupBy(_.name).filter(_._2.size > 1).keySet
+    assert(dups.isEmpty, s"query names declared more than once: $dups")
+    assert(SparkEntry.queries.size == records.size)
+    val blank = records.collect {
+      case Query(n, _, _, Sanity.NoBound(why)) if why.trim.isEmpty => n }
+    assert(blank.isEmpty, s"no-bound contracts without a reason: $blank")
+    val hookless = records.collect { case Query(n, _, _, Sanity.Hooks()) => n }
+    assert(hookless.isEmpty, s"hooks contracts without a hook: $hookless")
   }
 
   test("entry() returns rows on sf0.001") {

@@ -889,6 +889,50 @@ class StatsSpec extends SparkSpec {
     assert(got.drop(2).forall(r => r._2 == 0L && r._3 == 0L))
   }
 
+  /** q403 on a local `orders` fixture (ADVICE r15 #4), run by Spark
+    * and, through DuckDB, by its oracle twin; both as sorted
+    * (k, total_sse, marginal_gain) rows. */
+  private def q403BothEngines(prices: Seq[Option[Double]])
+      : (Seq[(Long, Long, Long)], Seq[(Long, Long, Long)]) = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("vopt-edge").toString
+    prices.zipWithIndex.map { case (p, i) => (i.toLong, p) }
+      .toDF("o_orderkey", "o_totalprice")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    val got = operators.Stats.q403VoptimalHist(spark, dir)
+      .as[(Long, Long, Long)].collect().toSeq.sortBy(_._1)
+    // Spark writes orders.parquet as a directory of part files
+    val duck =
+      """import duckdb, sys
+        |con = duckdb.connect()
+        |con.execute(f"CREATE VIEW orders AS SELECT * FROM '{sys.argv[1]}/orders.parquet/*.parquet'")
+        |for r in con.execute(sys.stdin.read()).fetchall(): print(*r)""".stripMargin
+    val sql = new java.io.ByteArrayInputStream(
+      operators.Stats.q403Oracle.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val (out, err) = (new StringBuilder, new StringBuilder)
+    val rc = (scala.sys.process.Process(Seq("python3", "-c", duck, dir)) #< sql)
+      .!(scala.sys.process.ProcessLogger(l => out.append(l).append('\n'),
+        l => err.append(l).append('\n')))
+    assert(rc == 0, s"DuckDB oracle run failed:\n$err")
+    val want = out.toString.linesIterator.filter(_.nonEmpty)
+      .map(_.split(" ").map(_.toLong))
+      .map { case Array(k, sse, gain) => (k, sse, gain) }.toSeq.sortBy(_._1)
+    (got, want)
+  }
+
+  test("q403: an empty orders table gives 8 zero rows in both engines (ADVICE r15 #4)") {
+    val (got, want) = q403BothEngines(Seq.empty)
+    assert(got == want, s"spark $got vs oracle $want")
+    assert(got == (1L to 8L).map(k => (k, 0L, 0L)))
+  }
+
+  test("q403: a null o_totalprice runs and matches the oracle (ADVICE r15 #4)") {
+    val (got, want) =
+      q403BothEngines(Seq.fill(6)(Some(10.00)) ++ Seq.fill(6)(Some(100.00)) :+ None)
+    assert(got.map(_._1) == (1L to 8L))
+    assert(got == want, s"spark $got vs oracle $want")
+  }
+
   test("q374: pass@k matches exact binomial ratios; degenerate rows pin to 0/1") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("passk").toString
