@@ -4727,7 +4727,7 @@ object Stats extends graft.QueryModule {
 
   /** V-optimal histogram ROI curve (q403): for k = 1..8 buckets, the
     * minimum total within-bucket SSE achievable when partitioning the
-    * order-price distribution (quantized to a 256-bin equi-width
+    * non-null order-price distribution (quantized to a 256-bin equi-width
     * pre-histogram, SSE measured on the bin-index domain) into k
     * contiguous buckets — the classic v-optimal construction
     * (Jagadish et al., VLDB'98) solved by exact DP, reported as a
@@ -4753,7 +4753,8 @@ object Stats extends graft.QueryModule {
   def q403VoptimalHist(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val K = 8
-    val cents = Tables.orders(s, d).select(
+    // a null price has no bin: least(255, NULL) would put it in 255
+    val cents = Tables.orders(s, d).filter($"o_totalprice".isNotNull).select(
       ($"o_totalprice".cast("decimal(18,2)") * 100).cast("long").as("v"))
     val mm = cents.agg(min($"v").as("mn"), max($"v").as("mx"))
     val bins = cents.crossJoin(broadcast(mm))
@@ -4818,7 +4819,8 @@ object Stats extends graft.QueryModule {
     val finals = (1 to K)
       .map(k => s"SELECT $k AS k, cost FROM c$k WHERE i = 255")
       .mkString("\nUNION ALL\n")
-    s"""WITH cents AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v FROM orders),
+    s"""WITH cents AS (SELECT CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT) AS v
+                     FROM orders WHERE o_totalprice IS NOT NULL),
        mm AS (SELECT min(v) AS mn, max(v) AS mx FROM cents),
        bins AS (
          SELECT LEAST(255, (v - mn) * 256 // (mx - mn + 1)) AS i, CAST(count(*) AS BIGINT) AS c

@@ -384,12 +384,19 @@ object DocStreams {
     * microbatch. */
   def corpusBandIndex(s: SparkSession, d: String): Map[String, Seq[Long]] = {
     import s.implicits._
-    graft.operators.Dedup.minhashBands(s, d)
+    val rows = graft.operators.Dedup.minhashBands(s, d)
       .filter($"doc_id" % 10 =!= 0)
       .select(concat($"b".cast("string"), lit("|"), $"band_key").as("k"), $"doc_id")
-      .as[(String, Long)].collect()
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
+      .as[(String, Long)].limit(BandIndexMaxRows + 1).collect()
+    require(rows.length <= BandIndexMaxRows,
+      s"corpusBandIndex: more than BandIndexMaxRows = $BandIndexMaxRows (band, doc) " +
+        "rows; an index this size belongs in an executor-side broadcast or bloom filter")
+    rows.groupBy(_._1).view.mapValues(_.map(_._2).toSeq.sorted).toMap
   }
+
+  /** Row bound of the driver-side band index: 8 bands per indexed doc,
+    * so about 131k indexed docs. */
+  val BandIndexMaxRows: Int = 1 << 20
 
   /** The per-row front half both probe shapes share: the "new batch"
     * filter, the 24-hash signature, and the 8 band keys — all computed

@@ -32,7 +32,9 @@ object EventStreams {
 
   /** Streaming events reader, generation-aware like the batch
     * [[graft.io.Tables.events]]: probes the directory's parquet footer
-    * for the `ts` physical type — a TIMESTAMP(NANOS) generation
+    * (through the session's schema cache in [[graft.io.Tables]], so a
+    * restarted stream over unchanged files infers nothing) for the `ts`
+    * physical type — a TIMESTAMP(NANOS) generation
     * surfaces as LongType under the builder-set legacy conf, a
     * TIMESTAMP(MICROS) generation as a timestamp — declares the
     * matching read schema, and normalizes to a session-zone
@@ -41,7 +43,7 @@ object EventStreams {
     * gets the same actionable error as the batch path. */
   def readEventsStream(s: SparkSession, eventsDir: String,
       oneFilePerTrigger: Boolean = true): DataFrame = {
-    val probed = Tables.nanosChecked(eventsDir)(s.read.parquet(eventsDir).schema)
+    val probed = Tables.nanosChecked(eventsDir)(Tables.readPath(s, eventsDir).schema)
     val tsType = probed("ts").dataType
     val schema = StructType(rawSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = tsType) else f))
@@ -501,9 +503,13 @@ object EventStreams {
       }
   }
 
+  /** Row bound of the collected transition model: |event_types|² for
+    * up to 256 event types. */
+  val MaxTransitions: Int = 1 << 16
+
   /** The q343 transition model from a BATCH read of the same events —
     * ⌊ln(c_a/c_ab)·10⁶⌋ per observed transition. Bounded by
-    * |event_types|². */
+    * |event_types|², held to [[MaxTransitions]] by a named `require`. */
   def surprisalModel(s: SparkSession, eventsDir: String): Map[(String, String), Long] = {
     val seq = s.read.schema(rawSchema).parquet(eventsDir)
       .withColumn("ts", col("ts").cast(TimestampType))
@@ -516,7 +522,10 @@ object EventStreams {
       .filter(col("nxt").isNotNull)
       .groupBy(col("event_type").as("a"), col("nxt").as("b"))
       .agg(count(lit(1)).as("c_ab"))
-    val gc = seq.collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val rows = seq.limit(MaxTransitions + 1).collect()
+    require(rows.length <= MaxTransitions,
+      s"surprisalModel: more than MaxTransitions = $MaxTransitions event-type transitions")
+    val gc = rows.map(r => (r.getString(0), r.getString(1), r.getLong(2)))
     val ca = gc.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
     gc.map { case (a, b, cab) =>
       (a, b) -> math.floor(math.log(ca(a).toDouble / cab) * 1000000.0).toLong

@@ -384,4 +384,45 @@ class AnnotationSpec extends SparkSpec {
       assert(r.getAs[Long]("n_cal") > 0L && r.getAs[Long]("n_test") > 0L)
     }
   }
+
+  /** A fresh dataset dir holding sf0.001's lineitem, so the session's
+    * judgment and soft-EM caches (keyed on the dir) start empty here. */
+  private def lineitemCopy(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("jud-once")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(s"$d/lineitem.parquet"),
+      dir.resolve("lineitem.parquet"))
+    dir.toString
+  }
+
+  /** Row counts of the RDDs this context holds persisted whose ids are
+    * above `after` (RDD ids only grow). */
+  private def persistedRowsAfter(after: Int): Seq[Long] =
+    spark.sparkContext.getPersistentRDDs.toSeq.collect {
+      case (id, rdd) if id > after => rdd.count()
+    }
+
+  private def nextRddId(): Int = spark.sparkContext.emptyRDD[Int].id
+
+  test("q494 holds one persisted copy of the shared judgments") {
+    val dir = lineitemCopy()
+    val nJud = operators.Annotation.judgments(spark, dir).count()
+    val mark = nextRddId()
+    assert(operators.Annotation.q494DawidSkeneSoftConfusion(spark, dir).collect().nonEmpty)
+    val copies = persistedRowsAfter(mark).count(_ == nJud)
+    assert(copies == 1, s"$copies persisted RDDs of the judgments' $nJud rows")
+  }
+
+  test("q480 on the shared judgments persists no second copy of them") {
+    val dir = lineitemCopy()
+    val nJud = operators.Annotation.judgments(spark, dir).count()
+    // the first run builds the session's shared judgment checkpoint
+    assert(operators.Annotation.q480DawidSkene(spark, dir).collect().length == 7)
+    val mark = nextRddId()
+    val again = operators.Annotation.q480DawidSkene(spark, dir)
+    assert(again.collect().length == 7)
+    val rows = persistedRowsAfter(mark)
+    assert(!rows.contains(nJud), s"q480 persisted a judgments-sized RDD: $rows")
+    // `again` (and any checkpoint its plan holds) stays reachable to here
+    assert(again.columns.nonEmpty)
+  }
 }

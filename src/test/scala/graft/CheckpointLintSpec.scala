@@ -32,8 +32,11 @@ class CheckpointLintSpec extends AnyFunSuite {
   private val frozen: Map[String, Int] = Map(
     // r13: three per-query judgment checkpoints collapsed into the one
     // session-scoped judgmentsShared cache site (cross-action reuse —
-    // the strongest keep class)
-    "operators/Annotation.scala" -> 14,
+    // the strongest keep class). dawidSkene's and dsSoftTheta2's
+    // re-checkpoints of their input became the one checkpointOnce site that
+    // skips an input already checkpointed (the shared judgments), so
+    // the session holds one copy of them: 14 -> 12
+    "operators/Annotation.scala" -> 12,
     "operators/Behavior.scala" -> 5,
     "operators/Capacity.scala" -> 2,
     "operators/Corpus.scala" -> 13,

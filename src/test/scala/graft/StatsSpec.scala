@@ -927,10 +927,15 @@ class StatsSpec extends SparkSpec {
   }
 
   test("q403: a null o_totalprice runs and matches the oracle (ADVICE r15 #4)") {
-    val (got, want) =
-      q403BothEngines(Seq.fill(6)(Some(10.00)) ++ Seq.fill(6)(Some(100.00)) :+ None)
+    // the null price is left out: it used to land in bin 255 through
+    // least(255, NULL), in both engines
+    val prices = Seq.fill(6)(Some(10.00)) ++ Seq.fill(6)(Some(100.00))
+    val (got, want) = q403BothEngines(prices :+ None)
+    val (gotNonNull, wantNonNull) = q403BothEngines(prices)
     assert(got.map(_._1) == (1L to 8L))
     assert(got == want, s"spark $got vs oracle $want")
+    assert(got == gotNonNull, s"spark: 13 rows $got vs the 12 non-null rows $gotNonNull")
+    assert(want == wantNonNull, s"oracle: 13 rows $want vs the 12 non-null rows $wantNonNull")
   }
 
   test("q374: pass@k matches exact binomial ratios; degenerate rows pin to 0/1") {
