@@ -358,11 +358,15 @@ object Dedup extends graft.QueryModule {
     // form (explode token hashes + 60 vote aggregates in a groupBy)
     // shuffled |tokens| rows per doc and was ~4× slower at sf0.1.
     // Token-less docs yield null (they drop out of the explode
-    // formulation too) — filtered to keep parity with the oracle.
+    // formulation too) and are left out to keep parity with the
+    // oracle — by a token-presence test on the text, which is null
+    // exactly when the kernel is. A filter on the kernel's result is
+    // pushed below the projection as isnotnull(simhash60(text)), so
+    // every stage reading it ran the kernel twice per document.
     Tables.documents(s, d)
+      .filter($"text".rlike("\\S"))
       .select($"doc_id",
         graft.functions.TextExprs.simhash60($"text").as("simhash"))
-      .filter($"simhash".isNotNull)
       .orderBy($"doc_id")
   }
 

@@ -6,6 +6,16 @@ package graft
   * hand-computed matrices. */
 class AnnotationSpec extends SparkSpec {
   import spark.implicits._
+  import scala.jdk.CollectionConverters._
+  import graft.plans.PlanAudit
+
+  /** Jobs of q494's first call on a fresh dataset dir: the new file's
+    * schema inference (1), the shared judgments checkpoint (2: its
+    * shuffle map stage and the checkpoint), the vote pass (3: two
+    * shuffle map stages and the collect) and the E-step pass (4: the
+    * same, plus broadcasting θ¹). The checkpointed fit it replaced ran
+    * 31. */
+  private val FitJobs = 10
   private val d = "/root/testdata/sf0.001"
 
   test("Fleiss' kappa: hand-computed 4-item panel, off-panel items excluded") {
@@ -127,6 +137,52 @@ class AnnotationSpec extends SparkSpec {
     rep.values.foreach { case (am, dm) =>
       assert(am >= 0L && am <= 1000000L && dm >= 0L && dm <= 1000L)
     }
+  }
+
+  /** Every message along `t`'s cause chain, joined. */
+  private def messages(t: Throwable): String =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .map(e => String.valueOf(e.getMessage)).mkString(" | ")
+
+  test("Dawid–Skene soft-EM: a 9-judgment item fails and names the panel bound") {
+    // prior + 9 centi θ factors can pass 2⁶³: the int64 E-step takes at
+    // most 8 judgments per item and must say so, not overflow
+    val jud = ((0L until 9L).map(r => (1L, r, "A")) ++
+      Seq((2L, 0L, "B"), (2L, 1L, "A"))).toDF("item", "rater", "label")
+    for (run <- Seq[() => Unit](
+        () => operators.Annotation.dawidSkeneSoftConfusion(jud).collect(),
+        () => operators.Annotation.dawidSkeneSoftLabels(jud).collect())) {
+      val msg = messages(intercept[Exception](run()))
+      assert(msg.contains("panels of <= 8 judgments/item, got 9"), msg)
+    }
+  }
+
+  test("Dawid–Skene soft-EM: an all-zero E2 panel gives post_micro NULL") {
+    // Raters 0 and 1 agree on 200 A-items and 200 B-items, so each
+    // holds ~200 judgments per class and its off-diagonal centi θ
+    // floors to 0: ((0 + 10⁶)·100) div (~200·10⁶ + 2·10⁶) = 0. Item 900
+    // splits them (r0 A, r1 B): every class score carries one zero
+    // factor, so Σ score = 0 and the posterior is the NULL sentinel,
+    // never a 0/0. The argmax over all-zero scores is the first label.
+    val rows = (1L to 200L).flatMap(i => Seq((i, 0L, "A"), (i, 1L, "A"))) ++
+      (201L to 400L).flatMap(i => Seq((i, 0L, "B"), (i, 1L, "B"))) ++
+      Seq((900L, 0L, "A"), (900L, 1L, "B"))
+    val lab = operators.Annotation.dawidSkeneSoftLabels(rows.toDF("item", "rater", "label"))
+      .collect().map(r => r.getAs[Long]("item") -> r).toMap
+    assert(lab.size == 401)
+    val x = lab(900L)
+    assert(x.isNullAt(x.fieldIndex("post_micro")), s"item 900: $x")
+    assert(x.getAs[String]("mv_label") == "A" && x.getAs[String]("ds_label") == "A")
+    // a unanimous item keeps a real posterior
+    assert(lab(1L).getAs[Long]("post_micro") > 900000L)
+    assert(lab(201L).getAs[String]("ds_label") == "B")
+  }
+
+  test("Dawid–Skene soft-EM: an empty judgment relation fits to empty reports") {
+    val jud = Seq.empty[(Long, Long, String)].toDF("item", "rater", "label")
+    assert(operators.Annotation.dawidSkeneSoftConfusion(jud).collect().isEmpty)
+    assert(operators.Annotation.dawidSkeneSoftLabels(jud).collect().isEmpty)
+    assert(operators.Annotation.dawidSkeneRaterReport(jud).collect().isEmpty)
   }
 
   test("Dawid–Skene hard-EM: accuracy weighting flips a tied item") {
@@ -408,8 +464,55 @@ class AnnotationSpec extends SparkSpec {
     val nJud = operators.Annotation.judgments(spark, dir).count()
     val mark = nextRddId()
     assert(operators.Annotation.q494DawidSkeneSoftConfusion(spark, dir).collect().nonEmpty)
-    val copies = persistedRowsAfter(mark).count(_ == nJud)
-    assert(copies == 1, s"$copies persisted RDDs of the judgments' $nJud rows")
+    // the shared judgments and nothing else: the memo is the model only
+    val rows = persistedRowsAfter(mark)
+    assert(rows == Seq(nJud), s"persisted RDDs after q494 (row counts): $rows; judgments: $nJud")
+  }
+
+  /** The plans `body` executes and the jobs it starts, both drained
+    * through the listener bus (`PlanAudit.flush`). */
+  private def executedDuring(body: => Unit)
+      : (Seq[org.apache.spark.sql.execution.SparkPlan], Int) = {
+    PlanAudit.flush(spark)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val ql = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = plans.add(qe.executedPlan)
+    }
+    val jl = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.listenerManager.register(ql)
+    spark.sparkContext.addSparkListener(jl)
+    try { body; PlanAudit.flush(spark) }
+    finally {
+      spark.listenerManager.unregister(ql)
+      spark.sparkContext.removeSparkListener(jl)
+    }
+    (plans.asScala.toSeq, jobs.get)
+  }
+
+  test("q494's first call: hash aggregates only, no lambda per row, a pinned job budget") {
+    val dir = lineitemCopy()
+    val (plans, jobs) = executedDuring(
+      assert(operators.Annotation.q494DawidSkeneSoftConfusion(spark, dir).collect().nonEmpty))
+    val nodes = plans.flatMap(allPlanNodes)
+    assert(nodes.nonEmpty, "no executed plan was seen")
+    val sortAggs = nodes.collect {
+      case a: org.apache.spark.sql.execution.aggregate.SortAggregateExec => a.simpleString(200)
+    }
+    assert(sortAggs.isEmpty, s"SortAggregate in the fit: $sortAggs")
+    // the judgments and both fit passes are data-sized; a higher-order
+    // function there runs an interpreted lambda per element
+    val hofs = nodes.flatMap(_.expressions.flatMap(_.collect {
+      case h: org.apache.spark.sql.catalyst.expressions.HigherOrderFunction => h.prettyName
+    }))
+    assert(hofs.isEmpty, s"higher-order functions in the fit: $hofs")
+    assert(jobs == FitJobs, s"q494's first call ran $jobs jobs")
   }
 
   test("q480 on the shared judgments persists no second copy of them") {

@@ -28,6 +28,7 @@ class CollectLintSpec extends AnyFunSuite {
       Bounded("range: one global min/max aggregate, 1 row"),
       Bounded("atLeast: one global min aggregate, 1 row"),
       Limit),
+    "operators/Annotation.scala" -> Seq(Require),
     "operators/Corpus.scala" -> Seq(Limit),
     "operators/Curation.scala" -> Seq(Limit),
     "operators/Lexicon.scala" -> Seq(Require),

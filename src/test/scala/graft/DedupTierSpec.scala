@@ -35,6 +35,19 @@ class DedupTierSpec extends SparkSpec {
     assert(rem.head <= rem(1) && rem.head <= rem(2)) // exact ⊆ each loose tier
   }
 
+  test("q43: the SimHash kernel runs once per document; token-less docs drop out") {
+    val d = docsDir(Seq((1L, "a b c"), (2L, "  \t "), (3L, ""), (4L, " x ")))
+    val q = Dedup.q43Simhash(spark, d)
+    // a filter on the kernel's own result is pushed below the
+    // projection as isnotnull(simhash60(text)) and runs it twice
+    val kernels = q.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(
+      _.collect { case k: graft.functions.SimHash60 => k }))
+    assert(kernels.length == 1, s"simhash60 occurs ${kernels.length}x in\n" +
+      q.queryExecution.optimizedPlan)
+    assert(q.select($"doc_id").as[Long].collect().toSeq == Seq(1L, 4L))
+    assert(q.filter($"simhash".isNull).count() == 0L)
+  }
+
   test("q274: bag and prefix tiers subsume exact dups") {
     val d = docsDir(Seq((1L, "same text here"), (2L, "same text here")))
     val got = Dedup.q274DedupTiers(spark, d)
