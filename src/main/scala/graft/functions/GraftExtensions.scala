@@ -24,6 +24,10 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // preparations chain when AQE is disabled (VERDICT r9 ADVICE #2)
     e.injectQueryStagePrepRule(s => graft.plans.ScaleGuardRule(s))
     e.injectColumnar(s => graft.plans.ScaleGuardColumnarRule(s))
+    // small result sorts run in one partition instead of sampling range
+    // bounds with a job of their own; same two hooks, same two modes
+    e.injectQueryStagePrepRule(s => graft.plans.ResultSortRule(s))
+    e.injectColumnar(s => graft.plans.ResultSortColumnarRule(s))
   }
 }
 

@@ -267,20 +267,20 @@ object Parity extends graft.QueryModule {
       cells[1:2] || cells[4:8] AS cells7
     FROM hr WHERE row_idx > 0),
   exploded AS (
-    SELECT w.matchlink, u.lpos, u.hist_link
+    SELECT w.league, w.row_idx, u.lpos, u.hist_link
     FROM withhist w
     LEFT JOIN LATERAL (SELECT unnest(w.links) AS hist_link,
                         generate_subscripts(w.links, 1) AS lpos) u ON TRUE),
   joined AS (
-    SELECT e.matchlink, e.lpos, d.row_idx, d.cells7
+    SELECT e.league, e.row_idx, e.lpos, d.row_idx AS hist_row, d.cells7
     FROM exploded e LEFT JOIN dr d USING (hist_link)),
   coll AS (
-    SELECT matchlink,
-      list(cells7 ORDER BY lpos, row_idx)
+    SELECT league, row_idx,
+      list(cells7 ORDER BY lpos, hist_row)
         FILTER (WHERE cells7 IS NOT NULL) AS rows7
-    FROM joined GROUP BY matchlink),
+    FROM joined GROUP BY league, row_idx),
   det AS (
-    SELECT matchlink,
+    SELECT league, row_idx,
       CASE WHEN rows7 IS NULL OR len(rows7) = 0 THEN '{}'
         ELSE to_json(struct_pack(
           "Date" := list_transform(rows7, r -> r[1]),
@@ -296,7 +296,7 @@ object Parity extends graft.QueryModule {
     w.time, w.hometeam, w.awayteam, w.result, w.matchlink, w.league,
     w.refereelink, w.referee_matchistlink,
     coalesce(d.referee_matchhistdetails, '{}') AS referee_matchhistdetails
-  FROM withhist w LEFT JOIN det d USING (matchlink)"""
+  FROM withhist w LEFT JOIN det d USING (league, row_idx)"""
 
   val queries: Seq[graft.Query] = {
     import graft.Query, graft.Sanity._

@@ -8,9 +8,10 @@ import graft.ops.RefOps
   * results-table fixture → P4 non-empty filter → column projection →
   * P5 link filter → P12 URL prefix → W1 forward-fill (the reference's
   * only window function) → T12 date parse → P6 date window → chained
-  * left-outer joins for referee link / history links / history details
-  * (S5/S6/S7) → T14 header-drop + column-pop → A2 column-major
-  * re-bucketing → the ref_historic_match sink schema.
+  * left-outer joins for referee link / history links (S5/S6) → per
+  * results row, its history details (S7) → T14 header-drop +
+  * column-pop → A2 column-major re-bucketing → the ref_historic_match
+  * sink schema.
   *
   * NB the reference's salvage-retry loads `today_df` instead of the
   * accumulated `final_dataset` (app/ref_utilities.py:240) — a bug we
@@ -61,40 +62,40 @@ object RefPipeline {
       .withColumn("referee_matchistlink",
         to_json(map_from_arrays(array(lit("1")), array($"links"))))
 
-    // S7 + T14 + A2: per history link, drop the header row, pop the 3rd
-    // cell, then re-bucket column-major into the 7 named lists in link
-    // order then row order (ref :188-195)
+    // S7 + T14 + A2, per results row: explode its history links, drop
+    // each linked page's header row, pop the 3rd cell, then re-bucket
+    // column-major into the 7 named lists in link order then row order
+    // (ref :188-195). Keyed on the results row (league, row_idx), so two
+    // rows sharing a matchlink each list their own history once; the
+    // ffill window's exchange (by league) already clusters that key, so
+    // the aggregate plans no exchange and withHist is computed once.
     val detailRows = refHistRows
       .filter($"row_idx" > 0) // T14 header drop (ref :188)
-      .select($"hist_link", $"row_idx",
+      .select($"hist_link", $"row_idx".as("hist_row"),
         concat(slice($"cells", 1, 2),
           slice($"cells", 4, 5)).as("cells7")) // pop index 2 (ref :189-190)
     val detailKeys = Seq("Date", "Home Team", "Away Team", "Score",
       "Yellow Cards", "Unkown Card", "Red Cards") // sic (ref :173)
-    val perMatchDetails = withHist
-      .select($"matchlink", posexplode_outer($"links").as(Seq("lpos", "hist_link")))
+    val outCols = Seq("date", "time", "hometeam", "awayteam", "result",
+      "matchlink", "league", "refereelink", "referee_matchistlink")
+    withHist
+      .select($"row_idx",
+        date_format($"date_parsed", "yyyy-MM-dd").as("date"),
+        $"time", $"hometeam", $"awayteam", $"result", $"matchlink",
+        $"league", $"refereelink", $"referee_matchistlink", // P9: score dropped
+        posexplode_outer($"links").as(Seq("lpos", "hist_link")))
       .join(detailRows, Seq("hist_link"), "left_outer")
-      .groupBy($"matchlink")
+      .groupBy(("row_idx" +: outCols).map(col): _*)
       // collect_list skips nulls but NOT structs with null fields, so
       // wrap: rows from empty link lists / detail-less links vanish.
       .agg(transform(
         array_sort(collect_list(when($"cells7".isNotNull,
-          struct($"lpos", $"row_idx", $"cells7")))),
+          struct($"lpos", $"hist_row", $"cells7")))),
         x => x.getField("cells7")).as("rows7"))
-      .select($"matchlink",
+      .select(outCols.map(col) :+
         when(size($"rows7") === 0, lit("{}"))
           .otherwise(to_json(struct(detailKeys.zipWithIndex.map { case (k, i) =>
             transform($"rows7", r => r.getItem(i)).as(k)
-          }: _*))).as("referee_matchhistdetails"))
-
-    withHist
-      .join(broadcast(perMatchDetails), Seq("matchlink"), "left_outer")
-      .select(
-        date_format($"date_parsed", "yyyy-MM-dd").as("date"),
-        $"time", $"hometeam", $"awayteam", $"result", $"matchlink",
-        $"league", $"refereelink",
-        $"referee_matchistlink",
-        coalesce($"referee_matchhistdetails", lit("{}"))
-          .as("referee_matchhistdetails")) // P9: score dropped
+          }: _*))).as("referee_matchhistdetails"): _*)
   }
 }

@@ -69,30 +69,28 @@ object TeamPipeline {
     val role = when($"home_name".contains($"team"),
         when($"css_side" === "home", "team").otherwise("opponent"))
       .otherwise(when($"css_side" === "away", "team").otherwise("opponent"))
+    // one exchange, by team page: every aggregation below groups on
+    // keys that start with team_url, so each is already clustered
     val classified = events
+      .repartition($"team_url")
       .withColumn("minute",
         RefOps.overtimeMinute(RefOps.minuteHead($"minute_raw"))) // T6+T7
       .withColumn("activity", RefOps.classifyEvent($"event_html")) // T8
       .withColumn("role", role)
+    // the match header (one value per match) rides along each
+    // aggregation instead of a separate groupBy joined back
+    val headers = Seq("tournament", "match_date", "home_name", "away_name",
+      "match_score").map(h => first(col(h)).as(h))
     val perActivity = classified
       .groupBy($"team_url", $"match_idx", $"role", $"activity")
       .agg(transform(array_sort(collect_list(struct($"row_idx", $"minute"))),
-        x => x.getField("minute")).as("minutes"))
+        x => x.getField("minute")).as("minutes"), headers: _*)
     val detailCols = activities.map(a =>
       coalesce(first(when($"activity" === a, $"minutes"), ignoreNulls = true),
         array().cast("array<string>")).as(a))
-    val headers = events
-      .groupBy($"team_url", $"match_idx")
-      .agg(
-        first($"tournament").as("tournament"),
-        first($"match_date").as("match_date"),
-        first($"home_name").as("home_name"),
-        first($"away_name").as("away_name"),
-        first($"match_score").as("match_score"))
     val perRole = perActivity
       .groupBy($"team_url", $"match_idx", $"role")
-      .agg(detailCols.head, detailCols.tail: _*)
-      .join(headers, Seq("team_url", "match_idx"))
+      .agg(detailCols.head, detailCols.tail ++ headers: _*)
     // details dict in the reference's insertion order (ref :284-286)
     val details = struct(
       array($"tournament").as("tournament") +:

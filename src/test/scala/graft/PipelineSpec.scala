@@ -93,6 +93,21 @@ class PipelineSpec extends SparkSpec {
     assert(refRows("Spurs").getAs[String]("referee_matchhistdetails") == "{}")
   }
 
+  test("ref pipeline: rows sharing a matchlink each list their history once") {
+    import spark.implicits._
+    // a second Arsenal–Chelsea results row: same cells, same matchlink
+    val dup = Seq(("Premier League", 6,
+      Seq("28/10/2023", "15:00", "Arsenal", "2:1", "Chelsea", "2:1"),
+      "/report/arsenal-chelsea/")).toDF("league", "row_idx", "cells", "matchlink")
+    val rows = RefPipeline.run(Fixtures.resultsRows(spark).unionByName(dup),
+        Fixtures.refereeLinks(spark), Fixtures.refereeHistLinks(spark),
+        Fixtures.refereeHistRows(spark), Fixtures.Today, Fixtures.Tomorrow)
+      .filter($"hometeam" === "Arsenal")
+      .select($"referee_matchhistdetails").as[String].collect().toSeq
+    assert(rows.size == 2)
+    rows.foreach(d => assert(d.startsWith("""{"Date":["01/10/2022","08/10/2022"],"""), d))
+  }
+
   test("ref pipeline: schema matches the ref_historic_match DDL (ref :26-37)") {
     val cols = RefPipeline.run(Fixtures.resultsRows(spark),
       Fixtures.refereeLinks(spark), Fixtures.refereeHistLinks(spark),
